@@ -221,32 +221,33 @@ def _estimate_plan_bytes(df: DataFrame) -> int | None:
     """Best-effort size estimate of a frame's OUTPUT, via public API
     only (r14's ``df._jdf.queryExecution()...stats().sizeInBytes()``
     was a Spark-version coupling point — VERDICT r14 #7): the
-    optimizer's own estimate parsed from ``df.explain(mode='cost')``,
-    the documented surface for logical-plan statistics. For a bare
-    file scan this equals the on-disk byte total; for derived plans
-    it carries the optimizer's expansion estimates (explode/join), so
-    a row-expanding ingest is not under-sized to its seed file (an
+    optimizer's own estimate parsed from ``EXPLAIN COST`` (the
+    documented surface for logical-plan statistics), read as a result
+    row over a uniquely named temp view — ``df.explain`` only prints,
+    and capturing it would mean swapping the process-global
+    ``sys.stdout`` under every other thread's prints. For a bare file
+    scan this equals the on-disk byte total; for derived plans it
+    carries the optimizer's expansion estimates (explode/join), so a
+    row-expanding ingest is not under-sized to its seed file (an
     inputFiles byte-sum variant had exactly that failure and was
     dropped in review). Same cost class as the r14 private call —
     both force one analysis+optimization pass. ``None`` when the
     parse fails — callers keep their pre-estimate behavior and should
     log the fallback."""
-    try:
-        import contextlib
-        import io
-        import re
+    import re
 
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain(mode="cost")
-        m = re.search(
-            r"sizeInBytes=([0-9.]+)\s*(B|KiB|MiB|GiB|TiB|PiB|EiB)",
-            buf.getvalue(),
-        )
+    spark = df.sparkSession
+    view = f"_lss_estimate_{uuid.uuid4().hex}"
+    try:
+        df.createTempView(view)
+        plan = spark.sql(f"EXPLAIN COST SELECT * FROM {view}").first()[0]
+        m = re.search(r"sizeInBytes=([0-9.]+)\s*(B|KiB|MiB|GiB|TiB|PiB|EiB)", plan)
         if m:
             return int(float(m.group(1)) * _EXPLAIN_SIZE_UNITS[m.group(2)])
     except Exception:
         pass
+    finally:
+        spark.catalog.dropTempView(view)
     return None
 
 
@@ -499,12 +500,20 @@ class LineageTable:
     # ------------------------------------------------------------------
     # id allocation
     # ------------------------------------------------------------------
+    def _reserve_batches(self, n: int) -> int:
+        """Reserve ``n`` consecutive commit batch ids (the high bits of
+        every rid/seq a write assigns) with ONE manifest CAS —
+        before any data file is written, so a stale writer aborts with
+        nothing published. Returns the first id."""
+        first = self.manifest.next_batch
+        self.manifest.next_batch += n
+        self._save_manifest()
+        return first
+
     def _ensure_batch(self) -> int:
         if self._open_batch is None:
-            self._open_batch = self.manifest.next_batch
-            self.manifest.next_batch += 1
+            self._open_batch = self._reserve_batches(1)
             self._batch_counter = 0
-            self._save_manifest()
         return self._open_batch
 
     def _next_local_id(self) -> int:
@@ -1069,9 +1078,7 @@ class LineageTable:
         the batch id comes from one manifest bump on the driver."""
         self.flush()  # keep rid ordering: buffered rows commit first
         self._validate_unique_inserts(df)
-        batch = self.manifest.next_batch
-        self.manifest.next_batch += 1
-        self._save_manifest()
+        batch = self._reserve_batches(1)
         # Parallelism floor: a source that arrives as a handful of
         # splits (e.g. one small single-row-group parquet file) would
         # otherwise become a single-file base table, serializing every
@@ -1136,69 +1143,15 @@ class LineageTable:
         """Bulk update by primary key: ``changes`` has the key column
         plus any subset of user columns holding new values (reference
         Q4 semantics, vectorized). One broadcast-able join against the
-        current view resolves key -> rid; the deltas append to tail.
+        live key map resolves key -> rid; the deltas append to tail.
         Columns not present in ``changes`` are recorded as NULL =
-        unchanged."""
-        self.flush()
-        batch = self.manifest.next_batch
-        self.manifest.next_batch += 1
-        self._save_manifest()
-        changed_cols = [c for c in changes.columns if c != self.key and c in self.user_cols]
-        part_changed = [c for c in changed_cols if c in self.partition_by]
-        if part_changed:
-            raise ValueError(
-                f"partition columns are immutable per rid (delete+reinsert "
-                f"to move a record): {part_changed}"
-            )
-        cur = self._live_key_rid_map()
-        joined = changes.join(cur, on=self.key, how="inner")
-        immutable = {self.key, *self.partition_by}
-
-        def _delta_col(c):
-            # tail deltas carry the immutable key/partition values
-            # (from the live map) so tail scans prune on them
-            if c in immutable:
-                return F.col(c).cast(self.schema[c].dataType).alias(c)
-            if c in changed_cols:
-                return F.col(c).cast(self.schema[c].dataType).alias(c)
-            return F.lit(None).cast(self.schema[c].dataType).alias(c)
-
-        out = joined.select(
-            F.col(RID),
-            (F.lit(batch << _BATCH_SHIFT) + F.monotonically_increasing_id()).alias(SEQ),
-            F.lit(OP_UPDATE).alias(OP),
-            F.current_timestamp().alias(TS),
-            *[_delta_col(c) for c in self.user_cols],
-        )
-        self._validate_folded_updates(out)
-        self._append_via_staging(out, self.tail_dir, rebalance=True)
-        self._maybe_auto_compact()
+        unchanged. A one-round :meth:`mutation_batch`."""
+        self._commit_mutation_batch([("U", changes)])
 
     def bulk_delete(self, keys: DataFrame) -> None:
-        """Bulk tombstone by primary key (reference Q5, query.py:27-49)."""
-        self.flush()
-        batch = self.manifest.next_batch
-        self.manifest.next_batch += 1
-        self._save_manifest()
-        cur = self._live_key_rid_map()
-        joined = keys.select(self.key).join(cur, on=self.key, how="inner")
-        immutable = {self.key, *self.partition_by}
-        out = joined.select(
-            F.col(RID),
-            (F.lit(batch << _BATCH_SHIFT) + F.monotonically_increasing_id()).alias(SEQ),
-            F.lit(OP_DELETE).alias(OP),
-            F.current_timestamp().alias(TS),
-            *[
-                (
-                    F.col(c).cast(self.schema[c].dataType)
-                    if c in immutable
-                    else F.lit(None).cast(self.schema[c].dataType)
-                ).alias(c)
-                for c in self.user_cols
-            ],
-        )
-        self._append_via_staging(out, self.tail_dir, rebalance=True)
-        self._maybe_auto_compact()
+        """Bulk tombstone by primary key (reference Q5, query.py:27-49).
+        A one-round :meth:`mutation_batch`."""
+        self._commit_mutation_batch([("D", keys)])
 
     def merge_into(
         self,
@@ -1237,8 +1190,11 @@ class LineageTable:
         cur = self._live_key_rid_map()
         src = source.persist()
         try:
-            n_rows = src.count()
-            n_keys = src.select(self.key).distinct().count()
+            # one job; the struct makes a NULL key count as a value,
+            # like DISTINCT does
+            n_rows, n_keys = src.agg(
+                F.count(F.lit(1)), F.count_distinct(F.struct(self.key))
+            ).first()
             if n_rows != n_keys:
                 raise ValueError(
                     f"merge_into source has duplicate keys ({n_rows} rows, "
@@ -1247,72 +1203,50 @@ class LineageTable:
                     "dependent"
                 )
             # live map's partition values are authoritative for the
-            # delta (aliased to dodge collisions with source columns)
+            # delta (aliased to dodge collisions with the source
+            # columns, which the branch predicates still see)
             cur_aliased = cur.select(
                 F.col(self.key),
                 F.col(RID),
                 *[F.col(c).alias(f"__live_{c}") for c in self.partition_by],
             )
             matched = src.join(cur_aliased, on=self.key, how="inner")
+
+            def matched_live(df):
+                # the delta's partition values: the live map's, not the source's
+                if not self.partition_by:
+                    return df
+                return df.drop(*self.partition_by).withColumnsRenamed(
+                    {f"__live_{c}": c for c in self.partition_by}
+                )
+
             unmatched = src.join(cur.select(self.key), on=self.key, how="left_anti")
             if not when_not_matched_insert:
                 unmatched = unmatched.limit(0)
-            batch = self.manifest.next_batch
-            self.manifest.next_batch += 1
-            self._save_manifest()
+            # deletes get their OWN seq batch: monotonic ids restart
+            # per frame, so sharing the update batch could collide.
+            # One rid never appears in both branches (disjoint WHERE),
+            # so cross-branch seq order is irrelevant.
+            batch = self._reserve_batches(1 if when_matched_delete is None else 2)
             present = [c for c in source.columns if c in self.user_cols]
-
-            def _delta_col(c):
-                if c == self.key:
-                    return F.col(c).cast(self.schema[c].dataType).alias(c)
-                if c in self.partition_by:
-                    return F.col(f"__live_{c}").cast(self.schema[c].dataType).alias(c)
-                if c in present:
-                    return F.col(c).cast(self.schema[c].dataType).alias(c)
-                return F.lit(None).cast(self.schema[c].dataType).alias(c)
-
             # NULL predicate = false, the SQL MERGE convention
             del_cond = (
                 F.coalesce(when_matched_delete, F.lit(False))
                 if when_matched_delete is not None
                 else F.lit(False)
             )
-            to_del = matched.where(del_cond)
             to_upd = matched.where(~del_cond)
             if when_matched_update is not None:
                 to_upd = to_upd.where(
                     F.coalesce(when_matched_update, F.lit(False))
                 )
-            immutable = {self.key, *self.partition_by}
-            upd = to_upd.select(
-                F.col(RID),
-                (F.lit(batch << _BATCH_SHIFT) + F.monotonically_increasing_id()).alias(SEQ),
-                F.lit(OP_UPDATE).alias(OP),
-                F.current_timestamp().alias(TS),
-                *[_delta_col(c) for c in self.user_cols],
-            )
-            # deletes get their OWN seq batch: monotonic ids restart
-            # per frame, so sharing the update batch could collide.
-            # One rid never appears in both branches (disjoint WHERE),
-            # so cross-branch seq order is irrelevant.
-            dbatch = self.manifest.next_batch
+            upd = self._tail_delta(matched_live(to_upd), OP_UPDATE, batch, present)
+            tail_out = upd
             if when_matched_delete is not None:
-                self.manifest.next_batch += 1
-                self._save_manifest()
-            dels = to_del.select(
-                F.col(RID),
-                (F.lit(dbatch << _BATCH_SHIFT) + F.monotonically_increasing_id()).alias(SEQ),
-                F.lit(OP_DELETE).alias(OP),
-                F.current_timestamp().alias(TS),
-                *[
-                    (
-                        _delta_col(c)
-                        if c in immutable
-                        else F.lit(None).cast(self.schema[c].dataType).alias(c)
-                    )
-                    for c in self.user_cols
-                ],
-            )
+                dels = self._tail_delta(
+                    matched_live(matched.where(del_cond)), OP_DELETE, batch + 1
+                )
+                tail_out = upd.unionByName(dels)
             ins_cols = [
                 (
                     F.col(c).cast(self.schema[c].dataType)
@@ -1322,16 +1256,16 @@ class LineageTable:
                 for c in self.user_cols
             ]
             ins_proj = unmatched.select(*ins_cols)
-            # BOTH branches validate before EITHER publishes — an
-            # aborted merge must leave the table untouched (the
-            # inherited CheckViolation contract). Validating only
+            # ALL branches validate before ANY publishes — an aborted
+            # merge must leave the table untouched (the inherited
+            # CheckViolation contract); the update deltas validate in
+            # _publish_tail, ahead of their append. Validating only
             # inside ingest_dataframe would publish the update deltas
             # first and then raise, leaving a half-applied merge.
             # Semantics note: inserts validate against the PRE-merge
             # snapshot, so an insert that is only legal because a
             # same-merge update vacates the value is (conservatively)
             # rejected — split it into two calls.
-            self._validate_folded_updates(upd)
             self._validate_unique_inserts(ins_proj)
             checks = self._check_aggs()
             if checks:
@@ -1360,12 +1294,9 @@ class LineageTable:
                         f"merge would duplicate value(s) in unique column {c!r} "
                         "between its update and insert branches"
                     )
-            tail_out = (
-                upd.unionByName(dels) if when_matched_delete is not None else upd
+            self._publish_tail(
+                tail_out, inserts=ins_proj if when_not_matched_insert else None
             )
-            self._append_via_staging(tail_out, self.tail_dir, rebalance=True)
-            if when_not_matched_insert:
-                self.ingest_dataframe(ins_proj)
         finally:
             src.unpersist()
 
@@ -1405,6 +1336,11 @@ class LineageTable:
         # scope only (results-neutral by construction: constraint
         # propagation only licenses optimizer rewrites). Measured
         # (sf0.1, warm, min-of-4): commit 1.34-1.62 s -> 1.20-1.26 s.
+        # Re-measured once every bulk commit ran through here
+        # (perfbench lineage_rw, 10 alternating traced pairs, 4 vCPU):
+        # driver time within noise, but one Spark job fewer per
+        # update/delete batch on every run (bulk_update 4 -> 3.5,
+        # mutation_batch 13 -> 12 jobs per call, medians).
         # Refcounted flip (see _scoped_conf): concurrent commits on
         # other tables of the same session nest instead of racing the
         # save/restore.
@@ -1415,35 +1351,24 @@ class LineageTable:
 
     def _commit_mutation_batch_rounds(self, rounds: list[tuple[str, Any]]) -> None:
         self.flush()
-        first_batch = self.manifest.next_batch
-        self.manifest.next_batch += len(rounds)
-        self._save_manifest()
-        m = self.manifest
-        if m.compact_version >= 0:
-            snap = self._read_or_empty(self.compacted_dir(), self.base_schema)
-            base = snap.unionByName(self.base_df().where(F.col(RID) > m.compact_rid_hi))
-            tail = self.tail_df().where(F.col(SEQ) > m.tps)
-        else:
-            base = self.base_df()
-            tail = self.tail_df()
-        immutable = {self.key, *self.partition_by}
+        first_batch = self._reserve_batches(len(rounds))
+        base, tail = self._live_frames()
         deltas: list[DataFrame] = []
         cur_tail = tail
-        tail_empty = not _has_parquet(self.tail_dir)  # flushed above
-        live_cols = [F.col(RID), F.col(self.key), *[F.col(c) for c in self.partition_by]]
         # liveness changes only via DELETE rounds; track their rids so
         # each round's resolver is base ∖ tombstones — never a full
-        # value fold (same cheap shape as _live_key_rid_map)
+        # value fold
         tomb = tail.where(F.col(OP) == OP_DELETE).select(F.col(RID))
         for i, (kind, payload) in enumerate(rounds):
-            batch = first_batch + i
-            seq = (F.lit(batch << _BATCH_SHIFT) + F.monotonically_increasing_id()).alias(SEQ)
-            resolver = base.select(*live_cols).join(tomb, on=RID, how="left_anti")
+            resolver = self._live_key_rid_map(base, tomb)
             if callable(payload):
                 # the round's transform sees the pending CURRENT VIEW
                 # (all earlier rounds' effects folded in, lazily)
                 pending = self._fold_tail(
-                    base, cur_tail, tail_known_empty=tail_empty and i == 0
+                    base,
+                    cur_tail,
+                    # flushed above, nothing published since
+                    tail_known_empty=i == 0 and not _has_parquet(self.tail_dir),
                 )
                 changes = payload(pending.select(*self.user_cols))
             else:
@@ -1452,38 +1377,15 @@ class LineageTable:
                 changed = [c for c in changes.columns if c != self.key and c in self.user_cols]
                 bad = [c for c in changed if c in self.partition_by]
                 if bad:
-                    raise ValueError(f"partition columns are immutable per rid: {bad}")
+                    raise ValueError(
+                        f"partition columns are immutable per rid (delete+reinsert "
+                        f"to move a record): {bad}"
+                    )
                 joined = changes.join(resolver, on=self.key, how="inner")
-                delta = joined.select(
-                    F.col(RID),
-                    seq,
-                    F.lit(OP_UPDATE).alias(OP),
-                    F.current_timestamp().alias(TS),
-                    *[
-                        (
-                            F.col(c).cast(self.schema[c].dataType)
-                            if c in immutable or c in changed
-                            else F.lit(None).cast(self.schema[c].dataType)
-                        ).alias(c)
-                        for c in self.user_cols
-                    ],
-                )
+                delta = self._tail_delta(joined, OP_UPDATE, first_batch + i, changed)
             else:
                 joined = changes.select(self.key).join(resolver, on=self.key, how="inner")
-                delta = joined.select(
-                    F.col(RID),
-                    seq,
-                    F.lit(OP_DELETE).alias(OP),
-                    F.current_timestamp().alias(TS),
-                    *[
-                        (
-                            F.col(c).cast(self.schema[c].dataType)
-                            if c in immutable
-                            else F.lit(None).cast(self.schema[c].dataType)
-                        ).alias(c)
-                        for c in self.user_cols
-                    ],
-                )
+                delta = self._tail_delta(joined, OP_DELETE, first_batch + i)
             later = rounds[i + 1 :]
             if any(callable(p) for _k, p in later) or (kind == "D" and later):
                 # This delta is re-read by later rounds — update deltas
@@ -1504,11 +1406,48 @@ class LineageTable:
         for d in deltas[1:]:
             out = out.unionByName(d)
         try:
-            self._validate_folded_updates(out)
-            self._append_via_staging(out, self.tail_dir, rebalance=True)
+            # delete-only batches carry no values to check
+            self._publish_tail(out, validate=any(k == "U" for k, _p in rounds))
         finally:
             for d in deltas[:-1]:
                 d.unpersist()
+
+    def _tail_delta(
+        self, joined: DataFrame, op: str, batch: int, changed: Iterable[str] = ()
+    ) -> DataFrame:
+        """The one tail-delta projection of every bulk commit — L-Store's
+        single write primitive. ``joined`` holds ``_rid`` plus the key
+        and partition columns (from the live map) and the ``changed``
+        columns' new values. The immutable key/partition values ride
+        along so tail scans prune on them; every other user column is
+        NULL = unchanged (always, for a tombstone)."""
+        keep = {self.key, *self.partition_by, *changed}
+        return joined.select(
+            F.col(RID),
+            (F.lit(batch << _BATCH_SHIFT) + F.monotonically_increasing_id()).alias(SEQ),
+            F.lit(op).alias(OP),
+            F.current_timestamp().alias(TS),
+            *[
+                (F.col(c) if c in keep else F.lit(None))
+                .cast(self.schema[c].dataType)
+                .alias(c)
+                for c in self.user_cols
+            ],
+        )
+
+    def _publish_tail(
+        self, out: DataFrame, validate: bool = True, inserts: DataFrame | None = None
+    ) -> None:
+        """The one publish step of every bulk tail commit: validate the
+        folded updates, append the deltas in one rebalanced staged
+        write, ingest ``inserts`` (merge_into's second commit, before
+        any compaction can swap the snapshot its plan reads), then
+        compact if the tail has grown past AUTO_COMPACT_TAIL_FILES."""
+        if validate:
+            self._validate_folded_updates(out)
+        self._append_via_staging(out, self.tail_dir, rebalance=True)
+        if inserts is not None:
+            self.ingest_dataframe(inserts)
         self._maybe_auto_compact()
 
     def delete_where(self, condition) -> None:
@@ -1520,9 +1459,22 @@ class LineageTable:
         keys = self.current_view().where(cond).select(self.key)
         self.bulk_delete(keys)
 
-    def _live_key_rid_map(self) -> DataFrame:
+    def _live_frames(self) -> tuple[DataFrame, DataFrame]:
+        """(base, tail) past the compacted snapshot: the snapshot ∪
+        fresh base rows, and the post-TPS tail — or the raw frames when
+        nothing is compacted."""
+        m = self.manifest
+        if m.compact_version < 0:
+            return self.base_df(), self.tail_df()
+        snap = self._read_or_empty(self.compacted_dir(), self.base_schema)
+        base = snap.unionByName(self.base_df().where(F.col(RID) > m.compact_rid_hi))
+        return base, self.tail_df().where(F.col(SEQ) > m.tps)
+
+    def _live_key_rid_map(
+        self, base: DataFrame | None = None, tomb: DataFrame | None = None
+    ) -> DataFrame:
         """(rid, key, <partition cols>) for every LIVE record — the
-        cheap resolver behind bulk_update/bulk_delete. The primary key is immutable (key
+        cheap resolver behind every bulk commit. The primary key is immutable (key
         changes are delete+reinsert, see Query.update) and a delete
         tombstone is terminal per rid (reinserts allocate a fresh rid),
         so the map is just base(rid, key) MINUS tombstoned rids: a
@@ -1535,22 +1487,14 @@ class LineageTable:
         fresh base) minus POST-TPS tombstones: the snapshot already
         excludes records deleted before the watermark, which keeps
         this correct after :meth:`vacuum_tail` removes those
-        tombstone rows (and shrinks the anti side besides)."""
-        m = self.manifest
+        tombstone rows (and shrinks the anti side besides). A mutation
+        batch passes its own ``base`` and ``tomb`` (the tombstone rids,
+        in-flight rounds included)."""
+        if base is None:
+            base, tail = self._live_frames()
+            tomb = tail.where(F.col(OP) == OP_DELETE).select(F.col(RID))
         live_cols = [F.col(RID), F.col(self.key), *[F.col(c) for c in self.partition_by]]
-        if m.compact_version >= 0:
-            snap = self._read_or_empty(self.compacted_dir(), self.base_schema)
-            fresh = self.base_df().where(F.col(RID) > m.compact_rid_hi)
-            base = snap.unionByName(fresh).select(*live_cols)
-            dels = (
-                self.tail_df()
-                .where((F.col(OP) == OP_DELETE) & (F.col(SEQ) > m.tps))
-                .select(F.col(RID))
-            )
-        else:
-            base = self.base_df().select(*live_cols)
-            dels = self.tail_df().where(F.col(OP) == OP_DELETE).select(F.col(RID))
-        return base.join(dels, on=RID, how="left_anti")
+        return base.select(*live_cols).join(tomb, on=RID, how="left_anti")
 
     def _tail_file_count(self) -> int:
         n = 0

@@ -391,10 +391,12 @@ def test_merge_into_upsert_and_delete_where(tmp_db, spark, sf_dir):
     assert left.where("o_totalprice > 100000").count() == 0
 
 
-def test_auto_compact_by_tail_file_count(tmp_db, spark, sf_dir):
+@pytest.mark.parametrize("commit", ["bulk_update", "merge_into"])
+def test_auto_compact_by_tail_file_count(tmp_db, spark, sf_dir, commit):
     """Bulk mutations trigger compaction once the tail accumulates
     enough commit files (the reference's merge-every-N-updates intent
-    at commit granularity); answers invariant as always."""
+    at commit granularity); answers invariant as always. A merge whose
+    source keys all match writes tail deltas only, like bulk_update."""
     from pyspark.sql import functions as F
 
     src = spark.read.parquet(f"{sf_dir}/orders.parquet").limit(200)
@@ -403,7 +405,7 @@ def test_auto_compact_by_tail_file_count(tmp_db, spark, sf_dir):
     t.ingest_dataframe(src)
     assert t.manifest.compact_version == -1
     for i in range(3):
-        t.bulk_update(
+        getattr(t, commit)(
             src.limit(10).select(
                 "o_orderkey", (F.col("o_totalprice") + 1).alias("o_totalprice")
             )
@@ -414,6 +416,7 @@ def test_auto_compact_by_tail_file_count(tmp_db, spark, sf_dir):
     got = t.current_view().agg(F.round(F.sum("o_totalprice"), 2)).collect()[0][0]
     exp = src.agg(F.round(F.sum("o_totalprice") + 10, 2)).collect()[0][0]
     assert got == exp
+    assert t.current_view().count() == 200
 
 
 def test_liveness_after_compact_vacuum_delete(tmp_db, spark, sf_dir):
@@ -497,15 +500,17 @@ def test_merge_into_duplicate_source_keys_raise(tmp_db, spark, sf_dir):
         t.merge_into(dup)
 
 
-def test_mutation_batch_equals_sequential(tmp_db, spark, sf_dir):
+@pytest.mark.parametrize("partition_by", [None, ["o_orderstatus"]], ids=["flat", "hive"])
+def test_mutation_batch_equals_sequential(tmp_db, spark, sf_dir, partition_by):
     """mutation_batch (one staged commit) must produce exactly the
     state of the equivalent sequential bulk_update/bulk_delete calls,
-    including version travel (each round keeps its own batch id)."""
+    including version travel (each round keeps its own batch id), and
+    the same tail deltas: rid, op, key, partition and value columns."""
     from pyspark.sql import functions as F
 
     src = spark.read.parquet(f"{sf_dir}/orders.parquet").limit(500)
 
-    ts = tmp_db.create_table_typed("orders_seq", src.schema, "o_orderkey")
+    ts = tmp_db.create_table_typed("orders_seq", src.schema, "o_orderkey", partition_by)
     ts.ingest_dataframe(src)
     r1 = src.where("o_orderkey % 7 = 0").select(
         "o_orderkey", (F.col("o_totalprice") + 100).alias("o_totalprice")
@@ -518,7 +523,7 @@ def test_mutation_batch_equals_sequential(tmp_db, spark, sf_dir):
     )
     ts.bulk_delete(src.where("o_orderkey % 10 = 3").select("o_orderkey"))
 
-    tb = tmp_db.create_table_typed("orders_batched", src.schema, "o_orderkey")
+    tb = tmp_db.create_table_typed("orders_batched", src.schema, "o_orderkey", partition_by)
     tb.ingest_dataframe(src)
     with tb.mutation_batch() as b:
         b.update(r1)
@@ -537,9 +542,12 @@ def test_mutation_batch_equals_sequential(tmp_db, spark, sf_dir):
     av = ts.version_view(-1).select("o_orderkey", "o_totalprice")
     cv = tb.version_view(-1).select("o_orderkey", "o_totalprice")
     assert av.exceptAll(cv).count() == 0 and cv.exceptAll(av).count() == 0
-    # single commit: batched table's tail landed in one staged append
-    # per round-count batches but ONE parquet append (fewer files)
-    assert tb.tail_df().count() == ts.tail_df().count()
+    # both commit paths encode every delta identically (only the
+    # per-row _seq offsets and _ts may differ)
+    cols = ["_rid", "_op", *ts.user_cols]
+    at, bt = ts.tail_df().select(*cols), tb.tail_df().select(*cols)
+    assert at.count() == bt.count() > 0
+    assert at.exceptAll(bt).count() == 0 and bt.exceptAll(at).count() == 0
 
 
 def test_optimistic_concurrency_two_writers(tmp_db, spark, sf_dir):

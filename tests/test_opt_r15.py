@@ -154,3 +154,36 @@ def test_estimate_plan_bytes_public_api(spark, tmp_path):
     mem = spark.range(0, 1000).select(F.col("id"))
     est2 = _estimate_plan_bytes(mem)
     assert est2 is not None and est2 > 0
+
+
+def test_estimate_plan_bytes_keeps_concurrent_prints(spark, capsys):
+    """The estimate reads the plan as a result row, so it never swaps
+    the process-global ``sys.stdout``: lines another thread prints
+    while estimates run all reach the real stdout."""
+    import threading
+    import time
+
+    from lineage_store_database_management_system_spark.lineage import (
+        _estimate_plan_bytes,
+    )
+
+    n = 200
+    started = threading.Event()
+
+    def printer():
+        started.set()
+        for i in range(n):
+            print(f"concurrent-line-{i}")
+            time.sleep(0.002)
+
+    th = threading.Thread(target=printer)
+    th.start()
+    started.wait()
+    df = spark.range(0, 1000).select(F.col("id"))
+    while th.is_alive():
+        assert _estimate_plan_bytes(df) > 0
+    th.join()
+    out = capsys.readouterr().out.splitlines()
+    assert [ln for ln in out if ln.startswith("concurrent-line-")] == [
+        f"concurrent-line-{i}" for i in range(n)
+    ]
