@@ -603,8 +603,8 @@ class Database:
                 self._agg_mv_build(name, table_name, group_by, sums, count_col)
                 return "rebuild"
         t.flush()
-        base = t.base_df()
-        tail = t.tail_df()
+        live = t.filelog.live_state()
+        base, tail, _ = t._read_state(live, None)
         touched = (
             tail.where(F.col(SEQ) > old_wm)
             .select(F.col(RID))
@@ -619,22 +619,19 @@ class Database:
         touched = F.broadcast(touched)
 
         def state(rid_hi, seq_hi, pick):
-            if pick is None:
-                b = base.where(F.col(RID) <= rid_hi)
-                d = tail.where(F.col(SEQ) <= seq_hi)
-            else:
+            # the fold inputs at the chosen snapshot's watermarks (raw
+            # history without one), cut at the refresh watermark. The
+            # snapshot may postdate ``rid_hi`` on the INSERT axis
+            # (compaction folds base-only commits without advancing
+            # tps) — the rid filter keeps the state at the watermark
+            # exact either way
+            wm = None
+            if pick is not None:
                 v, tps_v, rid_hi_v = pick
-                snap = t._read_or_empty(t.compacted_dir(v), t.base_schema)
-                # the snapshot may postdate ``rid_hi`` on the INSERT
-                # axis (compaction folds base-only commits without
-                # advancing tps) — the rid filter keeps the state at
-                # the watermark exact either way
-                b = snap.where(F.col(RID) <= rid_hi).unionByName(
-                    base.where(
-                        (F.col(RID) > rid_hi_v) & (F.col(RID) <= rid_hi)
-                    )
-                )
-                d = tail.where((F.col(SEQ) > tps_v) & (F.col(SEQ) <= seq_hi))
+                wm = {"compact_version": v, "compact_rid_hi": rid_hi_v, "tps": tps_v}
+            b, d, _ = t._read_state(live, wm)
+            b = b.where(F.col(RID) <= rid_hi)
+            d = d.where(F.col(SEQ) <= seq_hi)
             b = b.join(touched, on=RID, how="left_semi")
             d = d.join(touched, on=RID, how="left_semi")
             return t._fold_tail(b, d)

@@ -460,8 +460,6 @@ class FileLog:
         per-commit log files were checkpoint-compacted before any
         replay under a ledger-aware build) are simply absent — callers
         treat absent as unauditable and serve the feed (grandfather)."""
-        if not self.exists():
-            return {}
         self._refresh_locked()
         out: dict[int, int] = {}
         for key, v in (self._cache.get(CDC_ADDS_TAG) or {}).items():
@@ -504,13 +502,22 @@ class FileLog:
             "checkpoint cleanup"
         )
 
-    def live(self, tag: str) -> list[dict] | None:
-        """Live entries for a directory tag, or None when the log was
-        never initialized (caller falls back to directory listing)."""
-        if not self.exists():
-            return None
+    def live(self, tag: str) -> list[dict]:
+        """Live entries for one directory tag."""
         self._refresh_locked()
         return list(self._cache.get(tag, {}).values())
+
+    def live_state(self) -> dict[str, list[dict]]:
+        """The whole live state (tag -> entries) from ONE refresh — the
+        shape :meth:`state_at` returns for a past commit, so a reader
+        folds the live table and a historical one alike. The CDC
+        ledger is bookkeeping, not a file set, and stays out."""
+        self._refresh_locked()
+        return {
+            tag: list(d.values())
+            for tag, d in self._cache.items()
+            if tag != CDC_ADDS_TAG
+        }
 
     def replayable_range(self) -> tuple[int, int] | None:
         """Inclusive (lo, hi) of log indexes :meth:`state_at` can
@@ -518,8 +525,6 @@ class FileLog:
         newest checkpoint (checkpointing compacts the per-commit files
         it supersedes, so pre-checkpoint states are unreachable — the
         log's own retention horizon); hi is the newest commit."""
-        if not self.exists():
-            return None
         ck, idxs = self._scan_log_dir()
         if ck is None and not idxs:
             return None

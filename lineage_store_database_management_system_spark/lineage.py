@@ -53,7 +53,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any, Iterable
+from typing import Any, Iterable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -307,13 +307,31 @@ def _opt_unhide(p: str) -> str:
     )
 
 
-def _has_parquet(path: str) -> bool:
-    if not os.path.isdir(path):
-        return False
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+class _StateFiles(NamedTuple):
+    """One table state's fold inputs, classified by the watermark rule
+    (:meth:`LineageTable._state_files`): file-log entries under
+    ``root``, and the row filters the fold still owes them."""
+
+    root: str  # directory holding the tag directories
+    snap_tag: str | None  # compacted snapshot tag; None = raw history
+    snap: list[dict]
+    fresh: list[dict]  # base files past the rid watermark (or all)
+    tail: list[dict]  # tail files past TPS (or all)
+    rid_hi: int | None  # fresh rows need _rid > rid_hi
+    tps: int | None  # tail rows need _seq > tps
+    key_range: tuple | None  # base rows need lo <= key <= hi
+
+    def straddling(self) -> list[dict]:
+        """Fresh files that may still hold rows at or below the rid
+        watermark (no rid stats, or a logged range across it): only
+        these need the ``_rid > rid_hi`` row filter to be exact."""
+        if self.rid_hi is None:
+            return []
+        return [
+            e
+            for e in self.fresh
+            if (st := e.get("stats", {}).get(RID)) is None or st[0] <= self.rid_hi
+        ]
 
 
 @dataclass
@@ -1020,7 +1038,7 @@ class LineageTable:
             }
         # files-then-log: the commit becomes visible to log-planned
         # scans here (one footer read per new file for stats)
-        if moved and self.filelog.exists():
+        if moved:
             from .filelog import file_entries
 
             self.filelog.append(
@@ -1352,7 +1370,7 @@ class LineageTable:
     def _commit_mutation_batch_rounds(self, rounds: list[tuple[str, Any]]) -> None:
         self.flush()
         first_batch = self._reserve_batches(len(rounds))
-        base, tail = self._live_frames()
+        base, tail, tail_empty = self._read_live()
         deltas: list[DataFrame] = []
         cur_tail = tail
         # liveness changes only via DELETE rounds; track their rids so
@@ -1368,7 +1386,7 @@ class LineageTable:
                     base,
                     cur_tail,
                     # flushed above, nothing published since
-                    tail_known_empty=i == 0 and not _has_parquet(self.tail_dir),
+                    tail_known_empty=i == 0 and tail_empty,
                 )
                 changes = payload(pending.select(*self.user_cols))
             else:
@@ -1459,17 +1477,6 @@ class LineageTable:
         keys = self.current_view().where(cond).select(self.key)
         self.bulk_delete(keys)
 
-    def _live_frames(self) -> tuple[DataFrame, DataFrame]:
-        """(base, tail) past the compacted snapshot: the snapshot ∪
-        fresh base rows, and the post-TPS tail — or the raw frames when
-        nothing is compacted."""
-        m = self.manifest
-        if m.compact_version < 0:
-            return self.base_df(), self.tail_df()
-        snap = self._read_or_empty(self.compacted_dir(), self.base_schema)
-        base = snap.unionByName(self.base_df().where(F.col(RID) > m.compact_rid_hi))
-        return base, self.tail_df().where(F.col(SEQ) > m.tps)
-
     def _live_key_rid_map(
         self, base: DataFrame | None = None, tomb: DataFrame | None = None
     ) -> DataFrame:
@@ -1491,7 +1498,7 @@ class LineageTable:
         batch passes its own ``base`` and ``tomb`` (the tombstone rids,
         in-flight rounds included)."""
         if base is None:
-            base, tail = self._live_frames()
+            base, tail, _ = self._read_live()
             tomb = tail.where(F.col(OP) == OP_DELETE).select(F.col(RID))
         live_cols = [F.col(RID), F.col(self.key), *[F.col(c) for c in self.partition_by]]
         return base.select(*live_cols).join(tomb, on=RID, how="left_anti")
@@ -1520,56 +1527,39 @@ class LineageTable:
         and the publish intents return instead of the log committing —
         see :meth:`stage_pending` / :func:`commit_tables_atomically`."""
         intents: list[dict] = []
+        # A violation aborts the whole buffered batch — nothing
+        # publishes, and the buffer is dropped. CHECKs ride the staged
+        # write itself (_append_via_staging's Observation).
         if self._pending_base:
             df = self.spark.createDataFrame(self._pending_base, self.base_schema)
-            aggs = self._check_aggs()
-            if aggs:
-                bad = {
-                    n: v
-                    for n, v in df.agg(*aggs.values()).collect()[0].asDict().items()
-                    if v
-                }
-                if bad:
-                    # abort the whole buffered batch — nothing publishes
-                    self._pending_base = []
-                    raise CheckViolation(f"check constraint(s) violated: {bad}")
             try:
                 self._validate_unique_inserts(df)
-            except UniqueViolation:
+                it = self._append_via_staging(
+                    df.coalesce(1),
+                    self.base_dir,
+                    partition_by=self.partition_by,
+                    txn_hidden=_txn_id,
+                )
+            except CheckViolation:  # UniqueViolation included
                 self._pending_base = []
                 raise
-            it = self._append_via_staging(
-                df.coalesce(1),
-                self.base_dir,
-                partition_by=self.partition_by,
-                txn_hidden=_txn_id,
-            )
             if it:
                 intents.append(it)
             self._pending_base = []
         if self._pending_tail:
             df = self.spark.createDataFrame(self._pending_tail, self.tail_schema)
-            aggs = self._check_aggs()
-            if aggs:
-                bad = {
-                    n: v
-                    for n, v in df.agg(*aggs.values()).collect()[0].asDict().items()
-                    if v
-                }
-                if bad:
-                    self._pending_tail = []
-                    raise CheckViolation(f"check constraint(s) violated: {bad}")
-                try:
-                    self._validate_folded_updates(df)
-                except CheckViolation:
-                    self._pending_tail = []
-                    raise
-            # staged like every other commit (was a direct
-            # mode("append") before the file log existed: staging is
-            # what lets the new files be enumerated for the log entry)
-            it = self._append_via_staging(
-                df.coalesce(1), self.tail_dir, txn_hidden=_txn_id
-            )
+            try:
+                # the folded post-update rows, as _publish_tail checks
+                # a bulk commit's
+                self._validate_folded_updates(df)
+                # staged like every other commit: staging is what lets
+                # the new files be enumerated for the log entry
+                it = self._append_via_staging(
+                    df.coalesce(1), self.tail_dir, txn_hidden=_txn_id
+                )
+            except CheckViolation:  # UniqueViolation included
+                self._pending_tail = []
+                raise
             if it:
                 intents.append(it)
             self._pending_tail = []
@@ -1604,48 +1594,18 @@ class LineageTable:
         schema: T.StructType,
         prune: dict[str, tuple] | None = None,
     ) -> DataFrame:
-        """Planned scan of one table directory.
-
-        With the file log present, the scan is planned from the log's
-        live-file set — no directory listing (the expensive operation
-        on object storage) — and ``prune`` (``physical col -> (lo,
-        hi)`` bounds) skips whole files by their logged min/max before
-        Spark opens a single footer. Without the log (pre-filelog
-        table), falls back to the directory-listing read. Pruning is
-        a pure optimization: files without stats are always kept.
-        """
-        entries = self.filelog.live(self._log_tag(path))
-        if entries is not None:
-            # zero-row part files (Spark writes one per empty output
-            # task) can never contribute rows — never open them
-            entries = [e for e in entries if e.get("rows", 1) != 0]
-            if prune:
-                entries = prune_entries(entries, prune)
-            if entries:
-                # basePath (inside _df_from_entries) keeps Hive
-                # partition-column derivation identical to the
-                # directory read
-                return self._df_from_entries(path, schema, entries)
-        elif _has_parquet(path):
-            m = self._phys_map
-            if not m:
-                return self.spark.read.schema(schema).parquet(path)
-            # files carry physical names; present logical names upward
-            phys = self._physical_schema(schema)
-            df = self.spark.read.schema(phys).parquet(path)
-            inv = {ph: lg for lg, ph in m.items()}
-            return df.select(
-                *[F.col(f.name).alias(inv.get(f.name, f.name)) for f in phys.fields]
-            )
-        # Known-empty relation, NOT createDataFrame([], schema): the
-        # latter is a LogicalRDD whose emptiness Catalyst cannot see,
-        # so every join against it plans as a real shuffle (measured
-        # ~10x slower on a fresh/compacted table's empty tail).
-        # Range(0,0) constant-folds through PropagateEmptyRelation and
-        # the join collapses away.
-        return self.spark.range(0).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
+        """Planned scan of one live table directory, from the file
+        log's live-file set — no directory listing (the expensive
+        operation on object storage). ``prune`` (``physical col ->
+        (lo, hi)`` bounds) skips whole files by their logged min/max
+        before Spark opens a single footer; files without stats are
+        always kept (pruning is an optimization, never a filter)."""
+        entries = [
+            e for e in self.filelog.live(self._log_tag(path)) if e.get("rows", 1) != 0
+        ]
+        if prune:
+            entries = prune_entries(entries, prune)
+        return self._df_from_entries(path, schema, entries)
 
     def base_df(
         self,
@@ -1670,6 +1630,143 @@ class LineageTable:
         if include_pending and self._pending_tail:
             df = df.unionByName(self.spark.createDataFrame(self._pending_tail, self.tail_schema))
         return df
+
+    # ------------------------------------------------------------------
+    # read path: the one table-state reader
+    #
+    # L-Store's read rule — the merged base pages, then only the tail
+    # records past their TPS watermark — lives here and nowhere else.
+    # Every view, time-travel read and maintenance pass hands in a
+    # file-log state (live, at a commit, or pinned by a ref) plus the
+    # watermarks that state folds under, and gets back the base and
+    # tail frames (or, for metadata-plane readers, the classified
+    # files themselves).
+    # ------------------------------------------------------------------
+    def _watermarks(self) -> dict:
+        """The manifest's fold watermarks, in the shape compact() logs
+        them (``setmeta``) and refs pin them."""
+        m = self.manifest
+        return {
+            "compact_version": m.compact_version,
+            "compact_rid_hi": m.compact_rid_hi,
+            "tps": m.tps,
+        }
+
+    def _state_files(
+        self,
+        state: dict[str, list[dict]],
+        wm: dict | None,
+        root: str | None = None,
+        key_range: tuple | None = None,
+    ) -> _StateFiles:
+        """Classify a file-log state (tag -> entries; tags are
+        directories under ``root``, default the table) for the fold.
+
+        With watermarks whose ``compact_version`` is set, the fold
+        reads the snapshot files, the base files whose logged ``_rid``
+        max is above ``compact_rid_hi`` and the tail files whose
+        logged ``_seq`` max is above ``tps``; ``wm=None`` (or no
+        snapshot) reads raw history: every base and tail file.
+        Zero-row part files (Spark writes one per empty output task)
+        are dropped. ``key_range=(lo, hi)`` (either side None)
+        prunes by the logged key min/max — the tail only when deltas
+        carry the key (:attr:`tail_keyed`): un-keyed deltas hold NULL
+        there, and parquet min/max ignores nulls, so a file's stats
+        could exclude a key whose delta it holds."""
+
+        def nonempty(tag: str) -> list[dict]:
+            return [e for e in state.get(tag, []) if e.get("rows", 1) != 0]
+
+        fresh = nonempty(self._log_tag(self.base_dir))
+        tail = nonempty(self._log_tag(self.tail_dir))
+        snap_tag, snap, rid_hi, tps = None, [], None, None
+        if wm is not None and wm.get("compact_version", -1) >= 0:
+            snap_tag = self._log_tag(self.compacted_dir(wm["compact_version"]))
+            snap = nonempty(snap_tag)
+            rid_hi, tps = wm["compact_rid_hi"], wm["tps"]
+            fresh = prune_entries(fresh, {RID: (rid_hi + 1, None)})
+            tail = prune_entries(tail, {SEQ: (tps + 1, None)})
+        if key_range is not None:
+            kb = {self._phys_map.get(self.key, self.key): tuple(key_range)}
+            snap = prune_entries(snap, kb)
+            fresh = prune_entries(fresh, kb)
+            if self.tail_keyed:
+                tail = prune_entries(tail, kb)
+        return _StateFiles(
+            self.path if root is None else root,
+            snap_tag, snap, fresh, tail, rid_hi, tps, key_range,
+        )
+
+    def _state_frames(
+        self, files: _StateFiles, include_pending: bool = False
+    ) -> tuple[DataFrame, DataFrame, bool]:
+        """``(base, tail, tail_known_empty)`` over classified files:
+        base = snapshot ∪ fresh rows with ``_rid > rid_hi``, tail =
+        rows with ``_seq > tps`` (raw frames without watermarks), the
+        key row filter on base, and the buffered rows when
+        ``include_pending``. ``tail_known_empty`` lets the fold skip
+        its outer join outright."""
+        pend_base = include_pending and bool(self._pending_base)
+        pend_tail = include_pending and bool(self._pending_tail)
+        base = self._df_from_entries(
+            os.path.join(files.root, self._log_tag(self.base_dir)),
+            self.base_schema,
+            files.fresh,
+        )
+        tail = self._df_from_entries(
+            os.path.join(files.root, self._log_tag(self.tail_dir)),
+            self.tail_schema,
+            files.tail,
+        )
+        if pend_base:
+            base = base.unionByName(
+                self.spark.createDataFrame(self._pending_base, self.base_schema)
+            )
+        if pend_tail:
+            tail = tail.unionByName(
+                self.spark.createDataFrame(self._pending_tail, self.tail_schema)
+            )
+        if files.snap_tag is not None:
+            snap = self._df_from_entries(
+                os.path.join(files.root, files.snap_tag), self.base_schema, files.snap
+            )
+            base = snap.unionByName(base.where(F.col(RID) > F.lit(files.rid_hi)))
+            tail = tail.where(F.col(SEQ) > F.lit(files.tps))
+        if files.key_range is not None:
+            lo, hi = files.key_range
+            kc = F.col(self.key)
+            if lo is not None:
+                base = base.where(kc >= F.lit(lo))
+            if hi is not None:
+                base = base.where(kc <= F.lit(hi))
+        return base, tail, not files.tail and not pend_tail
+
+    def _read_state(
+        self,
+        state: dict[str, list[dict]],
+        wm: dict | None,
+        root: str | None = None,
+        key_range: tuple | None = None,
+        include_pending: bool = False,
+    ) -> tuple[DataFrame, DataFrame, bool]:
+        """The shared reader: :meth:`_state_files` then
+        :meth:`_state_frames`."""
+        return self._state_frames(
+            self._state_files(state, wm, root, key_range), include_pending
+        )
+
+    def _live_files(self, key_range: tuple | None = None) -> _StateFiles:
+        """The live state, classified under the manifest's watermarks
+        (one file-log refresh)."""
+        return self._state_files(
+            self.filelog.live_state(), self._watermarks(), key_range=key_range
+        )
+
+    def _read_live(
+        self, key_range: tuple | None = None
+    ) -> tuple[DataFrame, DataFrame, bool]:
+        """The current view's fold inputs, buffered rows included."""
+        return self._state_frames(self._live_files(key_range), include_pending=True)
 
     # ------------------------------------------------------------------
     # read path: views
@@ -1782,39 +1879,7 @@ class LineageTable:
         likewise pushed into file skipping — a compacted table's
         current view never opens pre-snapshot base or pre-TPS tail
         files, regardless of row-group pruning."""
-        kb: dict[str, tuple] = {}
-        if key_range is not None:
-            kp = self._phys_map.get(self.key, self.key)
-            kb = {kp: (key_range[0], key_range[1])}
-        # Tail key-skipping is only sound when deltas carry the key
-        # (tail_keyed): un-keyed deltas hold NULL there, and parquet
-        # min/max ignores nulls — a file's stats could then exclude a
-        # key whose delta it holds.
-        tail_kb = kb if self.tail_keyed else {}
-        m = self.manifest
-        if m.compact_version >= 0:
-            snap = self._read_or_empty(
-                self.compacted_dir(), self.base_schema, prune=kb or None
-            )
-            fresh = self.base_df(
-                prune={RID: (m.compact_rid_hi + 1, None), **kb}
-            ).where(F.col(RID) > m.compact_rid_hi)
-            base = snap.unionByName(fresh)
-            tail = self.tail_df(
-                prune={SEQ: (m.tps + 1, None), **tail_kb}
-            ).where(F.col(SEQ) > m.tps)
-            known_empty = False
-        else:
-            base = self.base_df(prune=kb or None)
-            tail = self.tail_df(prune=tail_kb or None)
-            known_empty = not self._pending_tail and not _has_parquet(self.tail_dir)
-        if key_range is not None:
-            lo, hi = key_range
-            kc = F.col(self.key)
-            if lo is not None:
-                base = base.where(kc >= F.lit(lo))
-            if hi is not None:
-                base = base.where(kc <= F.lit(hi))
+        base, tail, known_empty = self._read_live(key_range)
         # ANALYZE-driven planning: stats collected at the CURRENT
         # commit watermark (any write invalidates them) know exactly
         # how many tail rows the fold would process. Zero rows -> skip
@@ -1823,7 +1888,7 @@ class LineageTable:
         # the initial plan is already the broadcast join AQE would
         # otherwise only discover at runtime.
         broadcast_tail = False
-        st = m.extra.get("stats")
+        st = self.manifest.extra.get("stats")
         if not known_empty and st and st.get("watermark") == self.watermark():
             tail_rows = st.get("tail_rows_past_tps")
             if tail_rows == 0 and not self._pending_tail:
@@ -1878,33 +1943,13 @@ class LineageTable:
         k = abs(int(relative_version))
         if k == 0 and not include_meta:
             return self.current_view(key_range=key_range)
-        kb: dict[str, tuple] = {}
-        if key_range is not None:
-            kp = self._phys_map.get(self.key, self.key)
-            kb = {kp: (key_range[0], key_range[1])}
-        tail_kb = kb if self.tail_keyed else {}
         vacuumed = self.manifest.extra.get("history_floor") is not None
-        if vacuumed and self.manifest.compact_version >= 0:
-            snap = self._read_or_empty(
-                self.compacted_dir(), self.base_schema, prune=kb or None
-            )
-            fresh = self.base_df(
-                prune={RID: (self.manifest.compact_rid_hi + 1, None), **kb}
-            ).where(F.col(RID) > self.manifest.compact_rid_hi)
-            base = snap.unionByName(fresh)
-            tail = self.tail_df(
-                prune={SEQ: (self.manifest.tps + 1, None), **tail_kb}
-            ).where(F.col(SEQ) > self.manifest.tps)
-        else:
-            base = self.base_df(prune=kb or None)
-            tail = self.tail_df(prune=tail_kb or None)
-        if key_range is not None:
-            lo, hi = key_range
-            kc = F.col(self.key)
-            if lo is not None:
-                base = base.where(kc >= F.lit(lo))
-            if hi is not None:
-                base = base.where(kc <= F.lit(hi))
+        base, tail, known_empty = self._read_state(
+            self.filelog.live_state(),
+            self._watermarks() if vacuumed else None,
+            key_range=key_range,
+            include_pending=True,
+        )
         if k > 0:
             # Drop the last k update-deltas per rid in ONE pass (r15):
             # the old shape scanned the tail twice (updates through a
@@ -1932,7 +1977,6 @@ class LineageTable:
                 .where((F.col(OP) != OP_UPDATE) | (F.col("_urn") > k))
                 .drop("_urn")
             )
-        known_empty = not self._pending_tail and not _has_parquet(self.tail_dir)
         out = self._fold_tail(base, tail, tail_known_empty=known_empty)
         if not include_meta:
             out = out.select(*self.user_cols)
@@ -2128,62 +2172,44 @@ class LineageTable:
 
         At 100 TB a COUNT(*) therefore reads zero base bytes. Returns
         a one-row DataFrame (column ``cnt`` BIGINT) so it composes
-        with everything else. Pre-filelog tables fall back to counting
-        the current view. Tombstones are counted by FIRST delete
+        with everything else. Tombstones are counted by FIRST delete
         ``_seq`` per rid, so a double tombstone straddling the
         watermark (impossible under the lock protocol, cheap to
         defend against) never double-subtracts: rids whose first
         tombstone is already folded into the snapshot are excluded."""
-        m = self.manifest
-        base_entries = self.filelog.live(self._log_tag(self.base_dir))
-        if base_entries is None:
-            return self.current_view().agg(F.count(F.lit(1)).alias("cnt"))
-        base_entries = [e for e in base_entries if e.get("rows", 1) != 0]
-        meta_rows = 0
-        straddlers: list[str] = []
-        if m.compact_version >= 0:
-            snap_entries = (
-                self.filelog.live(self._log_tag(self.compacted_dir())) or []
-            )
-            meta_rows += sum(e.get("rows", 0) for e in snap_entries)
-            hi = m.compact_rid_hi
-            for e in base_entries:
-                st = e.get("stats", {}).get(RID)
-                if st is None:
-                    straddlers.append(os.path.join(self.base_dir, e["path"]))
-                elif st[0] > hi:
-                    meta_rows += e.get("rows", 0)
-                elif st[1] <= hi:
-                    pass  # fully folded into the snapshot
-                else:
-                    straddlers.append(os.path.join(self.base_dir, e["path"]))
-        else:
-            meta_rows += sum(e.get("rows", 0) for e in base_entries)
+        state = self.filelog.live_state()
+        files = self._state_files(state, self._watermarks())
+        straddlers = files.straddling()
+        skip = {id(e) for e in straddlers}
+        meta_rows = sum(
+            e.get("rows", 0)
+            for e in files.snap + files.fresh
+            if id(e) not in skip
+        )
         meta_rows += len(self._pending_base)
         # Correction 1: live rids killed by a tombstone the snapshot
-        # has not folded yet. Full-tail read (not _seq-skipped): the
-        # first-delete-per-rid exclusion needs pre-TPS tombstones to
-        # classify straddling histories, and the tail is the small
-        # side by contract.
+        # has not folded yet. Full-tail read (raw history, not
+        # _seq-skipped): the first-delete-per-rid exclusion needs
+        # pre-TPS tombstones to classify straddling histories, and the
+        # tail is the small side by contract. The TPS comparison below
+        # is that tombstone rule, not a fold watermark — so it stays
+        # here rather than in the shared reader.
+        _, tail, _ = self._read_state(state, None, include_pending=True)
         tomb = (
-            self.tail_df()
-            .where(F.col(OP) == OP_DELETE)
+            tail.where(F.col(OP) == OP_DELETE)
             .groupBy(F.col(RID))
             .agg(F.min(F.col(SEQ)).alias("_first_del"))
         )
-        if m.compact_version >= 0:
-            tomb = tomb.where(F.col("_first_del") > F.lit(m.tps))
+        if files.tps is not None:
+            tomb = tomb.where(F.col("_first_del") > F.lit(files.tps))
         corr = tomb.agg((-F.count(F.lit(1))).alias("delta"))
         if straddlers:
-            phys = self._physical_schema(self.base_schema)
-            extra = (
-                self.spark.read.option("basePath", self.base_dir)
-                .schema(phys)
-                .parquet(*straddlers)
-                .where(F.col(RID) > F.lit(m.compact_rid_hi))
-                .agg(F.count(F.lit(1)).alias("delta"))
+            # Correction 2: only the straddling files open, under the
+            # reader's exact _rid row filter
+            extra, _, _ = self._state_frames(
+                files._replace(snap=[], fresh=straddlers, tail=[])
             )
-            corr = corr.unionByName(extra)
+            corr = corr.unionByName(extra.agg(F.count(F.lit(1)).alias("delta")))
         return corr.agg(
             (F.lit(int(meta_rows)) + F.coalesce(F.sum("delta"), F.lit(0)))
             .cast("long")
@@ -2221,28 +2247,17 @@ class LineageTable:
         Returns a one-row DataFrame ``(mn, mx)`` typed as the column.
         Scan accounting lands in ``self.last_fast_minmax`` (
         ``files_total`` / ``files_scanned`` / ``rounds``) for plan
-        audits. Pre-filelog tables fall back to a full-view aggregate.
-        Partition columns carry no file stats (their values live in
+        audits. Partition columns carry no file stats (their values live in
         directory names), so they take the scan path unpruned."""
         self.flush()
-        m = self.manifest
         ph = self._phys_map.get(column, column)
         dt = next(f.dataType for f in self.base_schema.fields if f.name == column)
-
-        def _full():
-            return self.current_view().agg(
-                F.min(F.col(column)).alias("mn"), F.max(F.col(column)).alias("mx")
-            )
-
-        if self.filelog.live(self._log_tag(self.base_dir)) is None:
-            return _full()
+        files = self._live_files()
         # ---- tail side: ONE aggregate job for the fold + extremes +
         # dirty count (the zero-scan fast path then needs no second
         # tail job at all; the dirty rid SET materializes lazily only
         # when a scan round actually happens)
-        tail = self.tail_df()
-        if m.compact_version >= 0:
-            tail = tail.where(F.col(SEQ) > F.lit(m.tps))
+        _, tail, _ = self._state_frames(files)
         folded = tail.groupBy(F.col(RID)).agg(
             F.max(F.when(F.col(OP) == OP_DELETE, True).otherwise(False)).alias(
                 "_dead"
@@ -2269,9 +2284,8 @@ class LineageTable:
             .persist()
         )
         try:
-            snap_pairs, fresh_pairs = self._live_base_entries()
-            remaining = [("snap", e) for e in snap_pairs] + [
-                ("fresh", e) for e in fresh_pairs
+            remaining = [("snap", e) for e in files.snap] + [
+                ("fresh", e) for e in files.fresh
             ]
             total = len(remaining)
             scanned = rounds = 0
@@ -2304,25 +2318,7 @@ class LineageTable:
                     break
                 rounds += 1
                 scanned += len(need)
-                parts = []
-                snap_need = [e for d, e in need if d == "snap"]
-                fresh_need = [e for d, e in need if d == "fresh"]
-                if snap_need:
-                    parts.append(
-                        self._df_from_entries(
-                            self.compacted_dir(), self.base_schema, snap_need
-                        ).select(RID, column)
-                    )
-                if fresh_need:
-                    df = self._df_from_entries(
-                        self.base_dir, self.base_schema, fresh_need
-                    ).select(RID, column)
-                    if m.compact_version >= 0:
-                        df = df.where(F.col(RID) > F.lit(m.compact_rid_hi))
-                    parts.append(df)
-                scan = parts[0]
-                for p in parts[1:]:
-                    scan = scan.unionByName(p)
+                scan = self._scan_base_subset(files, need).select(RID, column)
                 if n_dirty:
                     scan = scan.join(F.broadcast(dirty), on=RID, how="left_anti")
                 r = scan.agg(
@@ -2344,36 +2340,20 @@ class LineageTable:
             F.lit(best_mn).cast(dt).alias("mn"), F.lit(best_mx).cast(dt).alias("mx")
         )
 
-    def _live_base_entries(self) -> tuple[list[dict], list[dict]]:
-        """(snapshot entries, fresh-base entries) that the current
-        view reads — the fast_count rid-watermark classification:
-        fresh files fully folded into the snapshot (logged rid max <=
-        compact_rid_hi) are excluded; straddlers stay (callers filter
-        their rows with ``_rid > compact_rid_hi``). Requires a live
-        file log (callers check first)."""
-        m = self.manifest
-        base_entries = self.filelog.live(self._log_tag(self.base_dir)) or []
-        snap_pairs: list[dict] = []
-        fresh_pairs: list[dict] = []
-        if m.compact_version >= 0:
-            snap_pairs = [
-                e
-                for e in (
-                    self.filelog.live(self._log_tag(self.compacted_dir())) or []
-                )
-                if e.get("rows", 1) != 0
-            ]
-            hi = m.compact_rid_hi
-            for e in base_entries:
-                if e.get("rows", 1) == 0:
-                    continue
-                st = e.get("stats", {}).get(RID)
-                if st is not None and st[1] <= hi:
-                    continue  # fully folded into the snapshot
-                fresh_pairs.append(e)
-        else:
-            fresh_pairs = [e for e in base_entries if e.get("rows", 1) != 0]
-        return snap_pairs, fresh_pairs
+    def _scan_base_subset(
+        self, files: _StateFiles, picked: list[tuple[str, dict]]
+    ) -> DataFrame:
+        """The fold's base frame over a subset of ``files``' base side
+        — ``("snap" | "fresh", entry)`` pairs picked by a file-skipping
+        reader — under the same watermark row filter."""
+        base, _, _ = self._state_frames(
+            files._replace(
+                snap=[e for d, e in picked if d == "snap"],
+                fresh=[e for d, e in picked if d == "fresh"],
+                tail=[],
+            )
+        )
+        return base
 
     def scan_with_bounds(self, column: str, lo=None, hi=None) -> DataFrame:
         """Current view filtered to ``lo <= column <= hi`` with EXACT
@@ -2399,8 +2379,7 @@ class LineageTable:
         (keys are immutable — no dirty check needed at all).
 
         Accounting lands in ``self.last_scan_bounds`` (files_total /
-        files_scanned / dirty_rids). Pre-filelog tables fall back to
-        a filtered full view."""
+        files_scanned / dirty_rids)."""
         if column == self.key:
             return self.current_view(key_range=(lo, hi))
         return self.scan_with_multi_bounds({column: (lo, hi)})
@@ -2418,28 +2397,14 @@ class LineageTable:
         pruning without a dirty check. Returns the current view
         filtered to all bounds; accounting in ``last_scan_bounds``."""
         self.flush()
-        m = self.manifest
         nonkey = [c for c in bounds if c != self.key]
-
-        def _cond(df):
-            for c, (lo, hi) in bounds.items():
-                if lo is not None:
-                    df = df.where(F.col(c) >= F.lit(lo))
-                if hi is not None:
-                    df = df.where(F.col(c) <= F.lit(hi))
-            return df
-
-        if self.filelog.live(self._log_tag(self.base_dir)) is None:
-            return _cond(self.current_view())
-        tail = self.tail_df()
-        if m.compact_version >= 0:
-            tail = tail.where(F.col(SEQ) > F.lit(m.tps))
+        files = self._live_files()
+        _, tail, _ = self._state_frames(files)
         dirty_cond = F.lit(False)
         for c in nonkey:
             dirty_cond = dirty_cond | F.col(c).isNotNull()
         dirty = tail.where(dirty_cond).select(RID).distinct()
-        snap_pairs, fresh_pairs = self._live_base_entries()
-        every = [("snap", e) for e in snap_pairs] + [("fresh", e) for e in fresh_pairs]
+        every = [("snap", e) for e in files.snap] + [("fresh", e) for e in files.fresh]
         keep: list[tuple[str, dict]] = []
         prunable: list[tuple[str, dict]] = []
         for d, e in every:
@@ -2457,11 +2422,17 @@ class LineageTable:
                     continue  # incomparable stat types: this column
                     # cannot prune the file
             (prunable if out_of_bounds else keep).append((d, e))
-        out = self._pruned_scan(every, keep, prunable, tail, dirty)
-        return _cond(out).select(*self.user_cols)
+        out = self._pruned_scan(files, every, keep, prunable, tail, dirty)
+        for c, (lo, hi) in bounds.items():
+            if lo is not None:
+                out = out.where(F.col(c) >= F.lit(lo))
+            if hi is not None:
+                out = out.where(F.col(c) <= F.lit(hi))
+        return out.select(*self.user_cols)
 
     def _pruned_scan(
         self,
+        files: _StateFiles,
         every: list[tuple[str, dict]],
         keep: list[tuple[str, dict]],
         prunable: list[tuple[str, dict]],
@@ -2477,7 +2448,6 @@ class LineageTable:
         makes skipping EXACT under merge-on-read. Returns the current
         view over the kept files (caller applies its row predicate);
         accounting lands in ``self.last_scan_bounds``."""
-        m = self.manifest
         n_dirty = 0
         if prunable:
             n_dirty = dirty.count()
@@ -2508,16 +2478,7 @@ class LineageTable:
                 for j, rlo, rhi in ranges:
                     if j in hit:
                         keep.append(prunable[j])
-        snap_need = [e for d, e in keep if d == "snap"]
-        fresh_need = [e for d, e in keep if d == "fresh"]
-        base = self._df_from_entries(
-            self.compacted_dir(), self.base_schema, snap_need
-        ) if snap_need else None
-        fresh = self._df_from_entries(self.base_dir, self.base_schema, fresh_need)
-        if m.compact_version >= 0:
-            fresh = fresh.where(F.col(RID) > F.lit(m.compact_rid_hi))
-        base = fresh if base is None else base.unionByName(fresh)
-        out = self._fold_tail(base, tail)
+        out = self._fold_tail(self._scan_base_subset(files, keep), tail)
         self.last_scan_bounds = {
             "files_total": len(every),
             "files_scanned": len(keep),
@@ -2538,26 +2499,20 @@ class LineageTable:
         # in _metadata.file_path; sidecar rows key on that form.
         return "file:" + os.path.abspath(abs_path)
 
-    def _live_file_paths(self) -> list[tuple[str, str, dict]]:
-        """[(meta_file_path, dir_kind, entry)] for every live base/
-        snapshot file the current view reads."""
-        snap_pairs, fresh_pairs = self._live_base_entries()
-        out = []
-        for e in snap_pairs:
-            out.append((
-                self._meta_file_path(
-                    os.path.join(self.compacted_dir(), e["path"])
-                ),
-                "snap",
-                e,
-            ))
-        for e in fresh_pairs:
-            out.append((
-                self._meta_file_path(os.path.join(self.base_dir, e["path"])),
-                "fresh",
-                e,
-            ))
-        return out
+    def _live_file_paths(
+        self, files: _StateFiles | None = None
+    ) -> list[tuple[str, str, dict]]:
+        """[(meta_file_path, dir_kind, entry)] for every base/snapshot
+        file the fold reads (default: the live state)."""
+        files = self._live_files() if files is None else files
+        return [
+            (self._meta_file_path(os.path.join(files.root, tag, e["path"])), kind, e)
+            for kind, tag, es in (
+                ("snap", files.snap_tag, files.snap),
+                ("fresh", self._log_tag(self.base_dir), files.fresh),
+            )
+            for e in es
+        ]
 
     def build_bloom_filters(
         self, column: str, fpp: float = 0.01, max_bits: int = 1 << 24
@@ -2600,8 +2555,6 @@ class LineageTable:
                 f"{self.schema[column].dataType.simpleString()}"
             )
         self.flush()
-        if self.filelog.live(self._log_tag(self.base_dir)) is None:
-            raise ValueError("bloom sidecars need a file-log table")
         live = self._live_file_paths()
         root = self._bloom_root(column)
         covered: set[str] = set()
@@ -2684,19 +2637,14 @@ class LineageTable:
             return self.current_view(key_range=(value, value))
         self.flush()
         root = self._bloom_root(column)
-        if (
-            self.filelog.live(self._log_tag(self.base_dir)) is None
-            or not os.path.isdir(root)
-        ):
+        if not os.path.isdir(root):
             return (
                 self.current_view()
                 .where(F.col(column) == F.lit(value))
                 .select(*self.user_cols)
             )
-        man = self.manifest
-        tail = self.tail_df()
-        if man.compact_version >= 0:
-            tail = tail.where(F.col(SEQ) > F.lit(man.tps))
+        files = self._live_files()
+        _, tail, _ = self._state_frames(files)
         dirty = tail.where(F.col(column).isNotNull()).select(RID).distinct()
         lit = F.lit(value).cast(self.schema[column].dataType)
         sidecar = self.spark.read.parquet(root)
@@ -2745,13 +2693,13 @@ class LineageTable:
         prunable: list[tuple[str, dict]] = []
         every: list[tuple[str, dict]] = []
         n_bloomed = 0
-        for p, d, e in self._live_file_paths():
+        for p, d, e in self._live_file_paths(files):
             every.append((d, e))
             v = verdicts.get(p)
             if v is not None:
                 n_bloomed += 1
             (keep if v is None or v else prunable).append((d, e))
-        out = self._pruned_scan(every, keep, prunable, tail, dirty)
+        out = self._pruned_scan(files, every, keep, prunable, tail, dirty)
         self.last_scan_bounds["files_bloomed"] = n_bloomed
         return out.where(F.col(column) == lit).select(*self.user_cols)
 
@@ -2781,8 +2729,6 @@ class LineageTable:
                 f"{self.schema[column].dataType.simpleString()}"
             )
         self.flush()
-        if self.filelog.live(self._log_tag(self.base_dir)) is None:
-            raise ValueError("distinct sketches need a file-log table")
         live = self._live_file_paths()
         root = self._sketch_root(column)
         covered: set[str] = set()
@@ -2844,10 +2790,8 @@ class LineageTable:
         fewer than ``k`` values it IS the complete distinct set and
         the answer is exact (collision probability ~n^2/2^64)."""
         self.flush()
-        tail = self.tail_df()
-        man = self.manifest
-        if man.compact_version >= 0:
-            tail = tail.where(F.col(SEQ) > F.lit(man.tps))
+        files = self._live_files()
+        _, tail, _ = self._state_frames(files)
         hazard = tail.agg(
             F.sum(F.when(F.col(OP) == OP_DELETE, 1).otherwise(0)).alias("_d"),
             F.sum(
@@ -2863,7 +2807,7 @@ class LineageTable:
                 f"{hazard['_d'] or 0} delete(s) and {hazard['_u'] or 0} "
                 f"update(s) touching the column — run compact() first"
             )
-        live = self._live_file_paths()
+        live = self._live_file_paths(files)
         root = self._sketch_root(column)
         entries: dict[str, tuple[list[int], int]] = {}
         if os.path.isdir(root):
@@ -2948,7 +2892,7 @@ class LineageTable:
                 else []
             ),
         ):
-            for e in self.filelog.live(tag) or []:
+            for e in self.filelog.live(tag):
                 ks = e.get("stats", {}).get(kp)
                 entries.append(
                     (
@@ -2995,10 +2939,6 @@ class LineageTable:
         pre-filelog bootstrap files read ``_commit`` as NULL."""
         self.flush()
         entries = self.filelog.live(self._log_tag(self.base_dir))
-        if entries is None:
-            raise ValueError(
-                "row provenance requires the file-level manifest log"
-            )
         # Spark renders local paths as "file:" + abspath (one slash)
         pairs = [
             (
@@ -3085,11 +3025,10 @@ class LineageTable:
         # the tail file bytes). current_view() consumes both while
         # these stats stay fresh: 0 rows skips the fold join entirely,
         # a small rid count broadcast-hints the folded side.
-        if self._pending_tail or _has_parquet(self.tail_dir):
+        _, tail, tail_empty = self._read_live()
+        if not tail_empty:
             trow = (
-                self.tail_df()
-                .where(F.col(SEQ) > self.manifest.tps)
-                .agg(
+                tail.agg(
                     F.count(F.lit(1)).alias("n"),
                     F.approx_count_distinct(RID).alias("d"),
                 )
@@ -3154,14 +3093,17 @@ class LineageTable:
                 "reconstructible"
             )
 
-        b = self.base_df().select(
+        base, tail, _ = self._read_state(
+            self.filelog.live_state(), None, include_pending=True
+        )
+        b = base.select(
             F.col(RID),
             F.lit(-1).cast("long").alias(SEQ),  # before any real seq (ids >= 0)
             F.lit("I").alias(OP),
             F.col(TS),
             *[F.col(c) for c in self.user_cols],
         )
-        u = b.unionByName(self.tail_df().select(b.columns))
+        u = b.unionByName(tail.select(b.columns))
         w = (
             Window.partitionBy(RID)
             .orderBy(SEQ)
@@ -3194,6 +3136,9 @@ class LineageTable:
         state whose deltas were vacuumed raises rather than silently
         returning stale pre-update values."""
         t = F.lit(ts).cast(T.TimestampType())
+        # The time floor, not history_floor: a vacuum that dropped no
+        # delta records none, and the raw history is then still whole
+        # (a later compaction's snapshot would fold deltas past ``ts``).
         floor = self.manifest.extra.get("history_floor_ts")
         if floor is not None:
             ts_str = (
@@ -3206,16 +3151,12 @@ class LineageTable:
                     f"as-of {ts_str} predates the vacuumed history floor "
                     f"{floor}; pre-floor deltas were removed by vacuum_tail"
                 )
-            snap = self._read_or_empty(self.compacted_dir(), self.base_schema)
-            fresh = self.base_df().where(F.col(RID) > self.manifest.compact_rid_hi)
-            base = snap.unionByName(fresh).where(F.col(TS) <= t)
-            tail = self.tail_df().where(
-                (F.col(SEQ) > self.manifest.tps) & (F.col(TS) <= t)
-            )
-        else:
-            base = self.base_df().where(F.col(TS) <= t)
-            tail = self.tail_df().where(F.col(TS) <= t)
-        out = self._fold_tail(base, tail)
+        base, tail, _ = self._read_state(
+            self.filelog.live_state(),
+            None if floor is None else self._watermarks(),
+            include_pending=True,
+        )
+        out = self._fold_tail(base.where(F.col(TS) <= t), tail.where(F.col(TS) <= t))
         if not include_meta:
             out = out.select(*self.user_cols)
         return out
@@ -3258,35 +3199,16 @@ class LineageTable:
                     "the tail has been vacuumed; state is beyond the "
                     "reconstructable horizon"
                 )
-        tags = (self._log_tag(self.base_dir), self._log_tag(self.tail_dir))
-        base_entries = [e for e in st.get(tags[0], []) if e.get("rows", 1) != 0]
-        tail_entries = [e for e in st.get(tags[1], []) if e.get("rows", 1) != 0]
-        snap_entries: list[dict] = []
-        snap_dir = None
-        if cv >= 0:
-            snap_dir = self.compacted_dir(cv)
-            snap_entries = [
-                e
-                for e in st.get(self._log_tag(snap_dir), [])
-                if e.get("rows", 1) != 0
-            ]
-            hi = meta["compact_rid_hi"]
-            base_entries = [
-                e
-                for e in base_entries
-                if (rs := e.get("stats", {}).get(RID)) is None or rs[1] > hi
-            ]
-        scan_sets = [
-            (self.base_dir, base_entries),
-            (self.tail_dir, tail_entries),
-        ]
-        if snap_dir is not None:
-            scan_sets.append((snap_dir, snap_entries))
+        files = self._state_files(st, meta)
         missing = [
             p
-            for d, es in scan_sets
+            for tag, es in (
+                (files.snap_tag, files.snap),
+                (self._log_tag(self.base_dir), files.fresh),
+                (self._log_tag(self.tail_dir), files.tail),
+            )
             for e in es
-            if not os.path.isfile(p := os.path.join(d, e["path"]))
+            if not os.path.isfile(p := os.path.join(self.path, tag, e["path"]))
         ]
         if missing:
             raise ValueError(
@@ -3294,15 +3216,8 @@ class LineageTable:
                 f"reclaimed by vacuum (first: {missing[0]}); state is "
                 "beyond the physical retention horizon"
             )
-        base = self._df_from_entries(self.base_dir, self.base_schema, base_entries)
-        tail = self._df_from_entries(self.tail_dir, self.tail_schema, tail_entries)
-        if cv >= 0:
-            base = base.where(F.col(RID) > F.lit(meta["compact_rid_hi"]))
-            base = self._df_from_entries(
-                snap_dir, self.base_schema, snap_entries
-            ).unionByName(base)
-            tail = tail.where(F.col(SEQ) > F.lit(meta["tps"]))
-        out = self._fold_tail(base, tail, tail_known_empty=not tail_entries)
+        base, tail, tail_empty = self._state_frames(files)
+        out = self._fold_tail(base, tail, tail_known_empty=tail_empty)
         if not include_meta:
             out = out.select(*self.user_cols)
         return out
@@ -3310,10 +3225,16 @@ class LineageTable:
     def _df_from_entries(
         self, path: str, schema: T.StructType, entries: list[dict]
     ) -> DataFrame:
-        """Scan exactly the given log entries under ``path`` (the
-        arbitrary-file-set core of :meth:`_read_or_empty`, used by
-        commit travel where the file set is historical, not live)."""
+        """Scan exactly the given log entries under ``path`` — the one
+        scan builder under every reader. ``basePath`` keeps Hive
+        partition-column derivation identical to a directory read."""
         if not entries:
+            # Known-empty relation, NOT createDataFrame([], schema): the
+            # latter is a LogicalRDD whose emptiness Catalyst cannot
+            # see, so every join against it plans as a real shuffle
+            # (measured ~10x slower on a fresh/compacted table's empty
+            # tail). Range(0,0) constant-folds through
+            # PropagateEmptyRelation and the join collapses away.
             return self.spark.range(0).select(
                 *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
             )
@@ -3431,35 +3352,12 @@ class LineageTable:
             raise KeyError(f"no such ref: {name}")
         with open(meta_path) as f:
             ref = json.load(f)
-        base_tag = self._log_tag(self.base_dir)
-        tail_tag = self._log_tag(self.tail_dir)
-        base_entries = [
-            e for e in ref["state"].get(base_tag, []) if e.get("rows", 1) != 0
-        ]
-        tail_entries = [
-            e for e in ref["state"].get(tail_tag, []) if e.get("rows", 1) != 0
-        ]
-        base = self._df_from_entries(
-            os.path.join(ref_dir, base_tag), self.base_schema, base_entries
+        # snapshot-aware fold, exactly like current_view at pin time,
+        # over the ref's own hardlinked files
+        base, tail, tail_empty = self._read_state(
+            ref["state"], ref.get("meta"), root=ref_dir
         )
-        tail = self._df_from_entries(
-            os.path.join(ref_dir, tail_tag), self.tail_schema, tail_entries
-        )
-        wm = ref.get("meta")
-        if wm is not None and wm.get("compact_version", -1) >= 0:
-            # snapshot-aware fold, exactly like current_view at pin
-            # time: snapshot ∪ fresh base past the rid watermark,
-            # post-TPS tail only
-            snap_tag = self._log_tag(self.compacted_dir(wm["compact_version"]))
-            snap_entries = [
-                e for e in ref["state"].get(snap_tag, []) if e.get("rows", 1) != 0
-            ]
-            base = base.where(F.col(RID) > F.lit(wm["compact_rid_hi"]))
-            base = self._df_from_entries(
-                os.path.join(ref_dir, snap_tag), self.base_schema, snap_entries
-            ).unionByName(base)
-            tail = tail.where(F.col(SEQ) > F.lit(wm["tps"]))
-        out = self._fold_tail(base, tail, tail_known_empty=not tail_entries)
+        out = self._fold_tail(base, tail, tail_known_empty=tail_empty)
         if not include_meta:
             out = out.select(*self.user_cols)
         return out
@@ -3712,7 +3610,7 @@ class LineageTable:
             (self._log_tag(self.tail_dir), self.tail_dir, self.tail_schema, None),
             (self._log_tag(self.base_dir), self.base_dir, self.base_schema, "I"),
         ):
-            live = self.filelog.live(tag) or []
+            live = self.filelog.live(tag)
             ledger = self.filelog.added_rows(tag)
             if ledger:
                 surviving: dict[int, int] = {}
@@ -3919,8 +3817,9 @@ class LineageTable:
         if sort_by and zorder_by:
             raise ValueError("sort_by and zorder_by are mutually exclusive")
         self.flush()
-        base = self.base_df(include_pending=False)
-        tail = self.tail_df(include_pending=False)
+        state = self.filelog.live_state()
+        # the new watermarks cover everything committed: raw history
+        base, tail, _ = self._read_state(state, None)
         tps_row = tail.agg(F.max(SEQ).alias("m"), F.count(F.lit(1)).alias("n")).collect()[0]
         new_tps = tps_row["m"] if tps_row["m"] is not None else self.manifest.tps
         rid_row = base.agg(F.max(RID).alias("m")).collect()[0]
@@ -3934,20 +3833,16 @@ class LineageTable:
             and sort_by is None
             and zorder_by is None
         ):
-            self._compact_incremental(out_dir)
+            self._compact_incremental(out_dir, state)
         else:
-            if self.manifest.compact_version >= 0:
-                # Fold forward from the previous snapshot: only deltas
-                # past the TPS watermark are re-applied (identical
-                # result — deltas carry absolute values, max-seq wins —
-                # and REQUIRED after vacuum_tail, when pre-TPS deltas
-                # no longer exist).
-                prev = self._read_or_empty(self.compacted_dir(), self.base_schema)
-                base = prev.unionByName(
-                    base.where(F.col(RID) > self.manifest.compact_rid_hi)
-                )
-                tail = tail.where(F.col(SEQ) > self.manifest.tps)
-            snap = self._fold_tail(base, tail)  # keeps _rid,_ts + user cols
+            # Fold forward from the previous snapshot, if any: only
+            # deltas past the TPS watermark are re-applied (identical
+            # result — deltas carry absolute values, max-seq wins —
+            # and REQUIRED after vacuum_tail, when pre-TPS deltas no
+            # longer exist).
+            base, tail, tail_empty = self._read_state(state, self._watermarks())
+            # keeps _rid,_ts + user cols
+            snap = self._fold_tail(base, tail, tail_known_empty=tail_empty)
             parts = n_files or self.spark.sparkContext.defaultParallelism
             if sort_by:
                 # range-partition FIRST so the clustering is global
@@ -3971,33 +3866,32 @@ class LineageTable:
             writer.parquet(out_dir)
         # log the new snapshot dir BEFORE the manifest swap points
         # readers at it (a vN's file set is immutable once written, so
-        # a one-shot reset entry fully describes it)
-        if self.filelog.exists():
-            # the setmeta action pins the NEW watermarks into the log
-            # state itself, so commit travel / refs landing on any
-            # later commit can fold snapshot-aware (base+tail alone no
-            # longer reconstruct state once vacuum_tail drops pre-TPS
-            # deltas — the round-9 soak catch)
-            self.filelog.append(
-                [
-                    {
-                        "op": "reset",
-                        "dir": self._log_tag(out_dir),
-                        "files": self.filelog.import_dir(
-                            self._log_tag(out_dir), out_dir, self._stat_cols
-                        ),
+        # a one-shot reset entry fully describes it). The setmeta
+        # action pins the NEW watermarks into the log state itself, so
+        # commit travel / refs landing on any later commit can fold
+        # snapshot-aware (base+tail alone no longer reconstruct state
+        # once vacuum_tail drops pre-TPS deltas — the round-9 soak
+        # catch)
+        self.filelog.append(
+            [
+                {
+                    "op": "reset",
+                    "dir": self._log_tag(out_dir),
+                    "files": self.filelog.import_dir(
+                        self._log_tag(out_dir), out_dir, self._stat_cols
+                    ),
+                },
+                {
+                    "op": "setmeta",
+                    "dir": TABLE_META_TAG,
+                    "meta": {
+                        "compact_version": new_version,
+                        "tps": new_tps if new_tps is not None else -1,
+                        "compact_rid_hi": rid_hi,
                     },
-                    {
-                        "op": "setmeta",
-                        "dir": TABLE_META_TAG,
-                        "meta": {
-                            "compact_version": new_version,
-                            "tps": new_tps if new_tps is not None else -1,
-                            "compact_rid_hi": rid_hi,
-                        },
-                    },
-                ]
-            )
+                },
+            ]
+        )
         self.manifest.compact_version = new_version
         self.manifest.tps = new_tps if new_tps is not None else -1
         self.manifest.compact_rid_hi = rid_hi
@@ -4048,7 +3942,7 @@ class LineageTable:
                     {"op": "drop", "dir": self._log_tag(self.compacted_dir(v))}
                 )
                 removed += 1
-        if dropped and self.filelog.exists():
+        if dropped:
             self.filelog.append(dropped)
         if removed:
             # prune watermark entries of reclaimed versions (persisted
@@ -4111,11 +4005,10 @@ class LineageTable:
         # small task files, so per-commit packing still collapses
         # those, while rows never silently adopt the pack commit as
         # their insert provenance (lineage.provenance_view contract)
-        idx_of: dict[str, int | None] = {}
-        log_live = self.filelog.exists()
-        if log_live:
-            for e in self.filelog.live(self._log_tag(self.base_dir)) or []:
-                idx_of[os.path.join(self.base_dir, e["path"])] = e.get("_idx")
+        idx_of = {
+            os.path.join(self.base_dir, e["path"]): e.get("_idx")
+            for e in self.filelog.live(self._log_tag(self.base_dir))
+        }
         by_part: dict[tuple[str, int | None], list[tuple[str, int]]] = {}
         n_before = 0
         for root, _dirs, files in os.walk(self.base_dir):
@@ -4127,7 +4020,7 @@ class LineageTable:
                 # never pack a file the live log does not list (a
                 # crash orphan awaiting repair): packing would
                 # republish logically-dead rows
-                if log_live and p not in idx_of:
+                if p not in idx_of:
                     continue
                 sz = os.path.getsize(p)
                 if sz < small_cap:
@@ -4187,37 +4080,33 @@ class LineageTable:
                 visible.append(_opt_unhide(h))
             os.remove(marker)
             shutil.rmtree(staging, ignore_errors=True)
-            if self.filelog.exists():
-                self.filelog.append(
-                    [
-                        {
-                            "op": "remove",
-                            "dir": "base",
-                            "paths": [
-                                os.path.relpath(p, self.base_dir) for p in paths
-                            ],
-                        },
-                        {
-                            "op": "add",
-                            "dir": "base",
-                            # carry the SOURCE commit forward: _apply's
-                            # setdefault never overrides an explicit
-                            # _idx, so packed rows keep their insert
-                            # provenance
-                            "files": [
-                                dict(
-                                    file_entry(
-                                        v,
-                                        os.path.relpath(v, self.base_dir),
-                                        self._stat_cols,
-                                    ),
-                                    **({"_idx": src_idx} if src_idx is not None else {}),
-                                )
-                                for v in visible
-                            ],
-                        },
-                    ]
-                )
+            self.filelog.append(
+                [
+                    {
+                        "op": "remove",
+                        "dir": "base",
+                        "paths": [os.path.relpath(p, self.base_dir) for p in paths],
+                    },
+                    {
+                        "op": "add",
+                        "dir": "base",
+                        # carry the SOURCE commit forward: _apply's
+                        # setdefault never overrides an explicit _idx,
+                        # so packed rows keep their insert provenance
+                        "files": [
+                            dict(
+                                file_entry(
+                                    v,
+                                    os.path.relpath(v, self.base_dir),
+                                    self._stat_cols,
+                                ),
+                                **({"_idx": src_idx} if src_idx is not None else {}),
+                            )
+                            for v in visible
+                        ],
+                    },
+                ]
+            )
         n_after = sum(
             1
             for root, _d, files in os.walk(self.base_dir)
@@ -4273,28 +4162,21 @@ class LineageTable:
                 f"{column!r} is not a partition column {self.partition_by}"
             )
         self.flush()
-        m = self.manifest
         token = f"{column}={value}"
         targets: list[tuple[str, list[dict]]] = []  # (tag, entries)
+        state = self.filelog.live_state()
         tags = [self._log_tag(self.base_dir)]
-        if m.compact_version >= 0:
+        if self.manifest.compact_version >= 0:
             tags.append(self._log_tag(self.compacted_dir()))
         for tag in tags:
-            live = self.filelog.live(tag)
-            if live is None:
-                raise ValueError(
-                    "drop_partition requires the file-level manifest log"
-                )
-            hit = [e for e in live if token in e["path"].split(os.sep)]
+            hit = [e for e in state.get(tag, []) if token in e["path"].split(os.sep)]
             if hit:
                 targets.append((tag, hit))
         if not targets:
             return {"files": 0, "rows": 0, "bytes": 0}
         # delta-safety: ANY post-TPS delta (update or delete) inside
         # the dropped rid ranges refuses — see docstring
-        tail = self.tail_df()
-        if m.compact_version >= 0:
-            tail = tail.where(F.col(SEQ) > F.lit(m.tps))
+        _, tail, _ = self._read_state(state, self._watermarks())
         tomb = tail.select(RID).distinct()
         ranges = [
             (i, int(st[0]), int(st[1]))
@@ -4406,8 +4288,7 @@ class LineageTable:
             marker = os.path.join(self.path, name)
             with open(marker) as fh:
                 dm = json.load(fh)
-            if self.filelog.exists():
-                self.filelog.append(dm["actions"])
+            self.filelog.append(dm["actions"])
             for src_rel, dst_rel in dm["moves"]:
                 src = os.path.join(self.path, src_rel)
                 if os.path.exists(src):
@@ -4466,50 +4347,46 @@ class LineageTable:
                             disc += 1
                     except OSError:  # pragma: no cover - raced removal
                         pass
-        if self.filelog.exists():
-            # Repair is the designated log-resync point: a crash
-            # between file publish and log append leaves orphans the
-            # log never saw (invisible, by the files-then-log commit
-            # order), and an interrupted optimize pack may have been
-            # rolled forward/back above. One listing per table dir
-            # rebuilds ground truth. Re-imported entries CARRY their
-            # prior commit stamp (_idx) where the path was already
-            # live — a benign repair must not re-home every row's
-            # insert provenance onto the repair commit; genuinely new
-            # (orphan) paths get an explicit None stamp so _apply's
-            # setdefault leaves them unattributed rather than lying.
-            actions = []
-            dirs = [("base", self.base_dir), ("tail", self.tail_dir)]
-            if self.manifest.compact_version >= 0:
-                cd = self.compacted_dir()
-                dirs.append((self._log_tag(cd), cd))
-            for tag, d in dirs:
-                prior = {
-                    e["path"]: e.get("_idx")
-                    for e in (self.filelog.live(tag) or [])
-                }
-                files = self.filelog.import_dir(tag, d, self._stat_cols)
-                for e in files:
-                    e["_idx"] = prior.get(e["path"])
-                actions.append({"op": "reset", "dir": tag, "files": files})
-            self.filelog.append(actions)
+        # Repair is the designated log-resync point: a crash
+        # between file publish and log append leaves orphans the
+        # log never saw (invisible, by the files-then-log commit
+        # order), and an interrupted optimize pack may have been
+        # rolled forward/back above. One listing per table dir
+        # rebuilds ground truth. Re-imported entries CARRY their
+        # prior commit stamp (_idx) where the path was already
+        # live — a benign repair must not re-home every row's
+        # insert provenance onto the repair commit; genuinely new
+        # (orphan) paths get an explicit None stamp so _apply's
+        # setdefault leaves them unattributed rather than lying.
+        actions = []
+        dirs = [("base", self.base_dir), ("tail", self.tail_dir)]
+        if self.manifest.compact_version >= 0:
+            cd = self.compacted_dir()
+            dirs.append((self._log_tag(cd), cd))
+        for tag, d in dirs:
+            prior = {e["path"]: e.get("_idx") for e in self.filelog.live(tag)}
+            files = self.filelog.import_dir(tag, d, self._stat_cols)
+            for e in files:
+                e["_idx"] = prior.get(e["path"])
+            actions.append({"op": "reset", "dir": tag, "files": files})
+        self.filelog.append(actions)
         return {"rolled_forward": fwd, "discarded": disc, "staging": stag}
 
-    def _compact_incremental(self, out_dir: str) -> None:
+    def _compact_incremental(self, out_dir: str, state: dict[str, list[dict]]) -> None:
         """Partition-level compaction: recompute affected partitions
         from (previous snapshot ∪ fresh base) + new tail deltas —
         the same fold the current view performs — and hardlink the
         untouched partitions' immutable files into the new version."""
-        m = self.manifest
         pcols = self.partition_by
-        snap_old = self._read_or_empty(self.compacted_dir(), self.base_schema)
-        fresh = self.base_df(include_pending=False).where(F.col(RID) > m.compact_rid_hi)
-        tail_new = self.tail_df(include_pending=False).where(F.col(SEQ) > m.tps)
+        files = self._state_files(state, self._watermarks())
+        part_base, tail_new, tail_empty = self._state_frames(files)
+        fresh, _, _ = self._state_frames(files._replace(snap=[], tail=[]))
+        raw_base, _, _ = self._read_state(state, None)
         # partitions touched by deltas (rid -> partition via base) or
         # by fresh inserts; the result is a small driver-side list
         touched = (
             tail_new.select(RID)
-            .join(self.base_df(include_pending=False).select(RID, *pcols), on=RID)
+            .join(raw_base.select(RID, *pcols), on=RID)
             .select(*pcols)
             .unionByName(fresh.select(*pcols))
             .distinct()
@@ -4531,8 +4408,9 @@ class LineageTable:
 
         # recompute ONLY the affected partitions
         if touched_vals:
-            part_base = _pred(snap_old).unionByName(_pred(fresh))
-            folded = self._fold_tail(part_base, tail_new)
+            folded = self._fold_tail(
+                _pred(part_base), tail_new, tail_known_empty=tail_empty
+            )
             self._df_to_physical(folded).write.mode("overwrite").partitionBy(
                 *pcols
             ).parquet(out_dir)
@@ -4621,19 +4499,18 @@ class LineageTable:
             os.rename(old, swap)
         os.rename(new_dir, old)
         shutil.rmtree(swap, ignore_errors=True)
-        if self.filelog.exists():
-            # whole-directory swap -> reset entry from the new files
-            self.filelog.append(
-                [
-                    {
-                        "op": "reset",
-                        "dir": self._log_tag(old),
-                        "files": self.filelog.import_dir(
-                            self._log_tag(old), old, self._stat_cols
-                        ),
-                    }
-                ]
-            )
+        # whole-directory swap -> reset entry from the new files
+        self.filelog.append(
+            [
+                {
+                    "op": "reset",
+                    "dir": self._log_tag(old),
+                    "files": self.filelog.import_dir(
+                        self._log_tag(old), old, self._stat_cols
+                    ),
+                }
+            ]
+        )
         return n_before - self.tail_df(include_pending=False).count()
 
     def point_lookup(self, col: str, value, max_stale_commits: int = 64) -> DataFrame:

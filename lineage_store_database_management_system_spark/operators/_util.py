@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -70,8 +71,11 @@ def spread(
 # One slot per (application, operator-purpose): plan-scoped persists
 # are bounded by the number of distinct operator slots per session,
 # not by how many times an operator is invoked — see
-# plan_scoped_persist.
+# plan_scoped_persist. The lock makes each slot's swap (pop, unpersist,
+# persist, store) atomic: two threads racing one slot would otherwise
+# both pop nothing, both persist, and leak the frame stored first.
 _PLAN_PERSIST_SLOTS: dict[tuple, DataFrame] = {}
+_PLAN_PERSIST_LOCK = threading.Lock()
 
 
 def plan_scoped_persist(
@@ -110,14 +114,15 @@ def plan_scoped_persist(
         key = (df.sparkSession.sparkContext.applicationId, slot)
     except Exception:
         key = ("", slot)
-    prev = _PLAN_PERSIST_SLOTS.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
-    df = df.persist()
-    _PLAN_PERSIST_SLOTS[key] = df
+    with _PLAN_PERSIST_LOCK:
+        prev = _PLAN_PERSIST_SLOTS.pop(key, None)
+        if prev is not None:
+            try:
+                prev.unpersist(blocking=False)
+            except Exception:
+                pass
+        df = df.persist()
+        _PLAN_PERSIST_SLOTS[key] = df
     if eager:
         df.count()
     return df

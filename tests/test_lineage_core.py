@@ -1424,8 +1424,9 @@ def test_unique_constraint_enforced_on_all_write_paths(spark, tmp_path):
     """UNIQUE constraints (SQL semantics: NULLs exempt): validated on
     add, enforced on bulk ingest (intra-batch + vs-live), on folded
     bulk updates (intra-batch collisions + collisions with untouched
-    live rows, self-value updates allowed), persisted in the
-    manifest; a violating write publishes nothing."""
+    live rows, self-value updates allowed) and on buffered point
+    updates at flush, persisted in the manifest; a violating write
+    publishes nothing."""
     from pyspark.sql import functions as F
 
     from lineage_store_database_management_system_spark.catalog import Database
@@ -1481,6 +1482,13 @@ def test_unique_constraint_enforced_on_all_write_paths(spark, tmp_path):
     # fresh value passes
     t.bulk_update(spark.createDataFrame([(3, 9999)], "k long, u long"))
     assert t.current_view().where("k = 3").first()["u"] == 9999
+    # buffered point update folding to a live row's value -> rejected
+    # at flush, the buffer dropped, nothing published
+    assert Query(t).update(4, None, 70, None)
+    with pytest.raises(UniqueViolation):
+        t.flush()
+    assert t.current_view().where("k = 4").first()["u"] == 40
+    assert t.current_view().where("u = 70").count() == 1
     # freed value is reusable after the update moved it
     t.ingest_dataframe(spark.createDataFrame([(105, 30, "d")], src.schema))
 

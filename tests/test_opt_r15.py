@@ -4,7 +4,8 @@ session's persisted state.
 
 1. plan_scoped_persist: repeated operator invocations hold at most
    one cached frame per slot (VERDICT r14 #3 done-criterion: no net
-   growth in getPersistentRDDs after N calls).
+   growth in getPersistentRDDs after N calls), also when threads race
+   one slot.
 2. version_view's single-window version rewind (one tail scan, window
    partitioned like the fold's grouping) equals the two-scan
    row_number+union reference on histories with multi-delta rids,
@@ -52,6 +53,49 @@ def test_plan_scoped_persist_bounded(spark):
     # one live slot per operator family, not one per call
     grown = _n_persisted(spark) - base
     assert grown <= 5, grown
+
+
+def test_plan_scoped_persist_slot_swap_is_atomic():
+    """Threads racing one slot must leave at most one frame cached:
+    each persist sleeps, which without the slot lock lets every
+    thread pop an empty slot and persist, leaking all but the frame
+    stored last."""
+    import threading
+    import time
+
+    from lineage_store_database_management_system_spark.operators import _util
+
+    class _Frame:
+        sparkSession = None  # no session: the slot key falls back to ("", slot)
+
+        def __init__(self):
+            self.cached = False
+
+        def persist(self):
+            time.sleep(0.2)  # widen the pop -> store window
+            self.cached = True
+            return self
+
+        def unpersist(self, blocking=False):
+            self.cached = False
+
+    frames = [_Frame() for _ in range(4)]
+    start = threading.Barrier(len(frames))
+
+    def run(f):
+        start.wait(timeout=10)
+        _util.plan_scoped_persist(f, "race-test-slot")
+
+    threads = [threading.Thread(target=run, args=(f,)) for f in frames]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=30)
+    try:
+        assert not any(th.is_alive() for th in threads)
+        assert sum(f.cached for f in frames) == 1
+    finally:
+        _util._PLAN_PERSIST_SLOTS.pop(("", "race-test-slot"), None)
 
 
 def test_version_view_single_window_matches_two_scan_reference(spark, tmp_db):

@@ -189,6 +189,19 @@ def test_travel_plane_exact_or_refuse(spark, tmp_db, seed):
             rng_now = t.filelog.replayable_range()
             if rng_now:
                 captured.append((rng_now[1], rows_now()))
+                # live and historical reads agree through the one
+                # table-state reader: travel to the head commit is the
+                # current view, and version 0 of the raw history folds
+                # to the same rows
+                assert sorted(t.snapshot_at_commit(rng_now[1]).collect()) == sorted(
+                    t.current_view().collect()
+                ), f"seed {seed}: head commit travel diverged from the view"
+                user = t.user_cols
+                assert sorted(
+                    t.version_view(0, include_meta=True).select(user).collect()
+                ) == sorted(
+                    t.current_view(include_meta=True).select(user).collect()
+                ), f"seed {seed}: version 0 diverged from the view"
         elif op == "ref":
             name = f"r{step}"
             try:

@@ -488,7 +488,7 @@ def main() -> int:
     # Manifest-log FILE-SKIPPING PROBE: plan strings don't expose file
     # counts, so measure them directly — a key-range current view over
     # the 8-commit orders_mc scenario must open a strict subset of the
-    # live base files (lineage.py _read_or_empty prune path).
+    # live base files (the shared reader's key-range file pruning).
     from lineage_store_database_management_system_spark.workloads import _table
 
     t = _table(spark, sf_dir, "orders_mc")

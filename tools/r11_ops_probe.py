@@ -1,6 +1,7 @@
 """Scale probes for the round-11 operators at sf10 (500k docs / 200k
-vectors): measure the pruned path against its naive twin, the same
-evidence discipline as fastcount_probe/metadata_plane_probe.
+vectors): measure the pruned path against its naive twin, the
+evidence discipline of the metadata-plane probes whose results
+SCALING.md records.
 
 - trigram substring search: index-pruned verify (candidate IN-list)
   vs the naive full-corpus contains() scan; reports candidate count
