@@ -1503,17 +1503,12 @@ class LineageTable:
         live_cols = [F.col(RID), F.col(self.key), *[F.col(c) for c in self.partition_by]]
         return base.select(*live_cols).join(tomb, on=RID, how="left_anti")
 
-    def _tail_file_count(self) -> int:
-        n = 0
-        for _root, _dirs, files in os.walk(self.tail_dir):
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
-
     def _maybe_auto_compact(self) -> None:
-        if (
-            self.AUTO_COMPACT_TAIL_FILES
-            and self._tail_file_count() > self.AUTO_COMPACT_TAIL_FILES
-        ):
+        # the tail's file count is the file log's live tail entries —
+        # no directory listing on the commit path
+        if self.AUTO_COMPACT_TAIL_FILES and len(
+            self.filelog.live(self._log_tag(self.tail_dir))
+        ) > self.AUTO_COMPACT_TAIL_FILES:
             self.compact()
 
     def _maybe_flush(self) -> None:
@@ -3131,10 +3126,14 @@ class LineageTable:
         usual fold. Compaction alone cannot change any answer (the
         fold runs over original base + full tail); after
         :meth:`vacuum_tail` the pre-TPS deltas no longer exist, so the
-        fold starts from the compacted snapshot instead and ``ts``
-        must not predate the recorded history floor — asking for a
-        state whose deltas were vacuumed raises rather than silently
-        returning stale pre-update values."""
+        fold starts from the snapshot the vacuum left (the one whose
+        tps is ``history_floor``) instead and ``ts`` must not predate
+        the recorded history floor — asking for a state whose deltas
+        were vacuumed, or whose fold base a later snapshot reclaim
+        removed, raises rather than silently returning stale
+        pre-update values. A newer snapshot is never the fold base: a
+        later ``compact()`` may have folded deltas committed after
+        ``ts`` into it."""
         t = F.lit(ts).cast(T.TimestampType())
         # The time floor, not history_floor: a vacuum that dropped no
         # delta records none, and the raw history is then still whole
@@ -3151,11 +3150,31 @@ class LineageTable:
                     f"as-of {ts_str} predates the vacuumed history floor "
                     f"{floor}; pre-floor deltas were removed by vacuum_tail"
                 )
-        base, tail, _ = self._read_state(
-            self.filelog.live_state(),
-            None if floor is None else self._watermarks(),
-            include_pending=True,
-        )
+        state = self.filelog.live_state()
+        wm = None
+        if floor is not None:
+            floor_tps = int(self.manifest.extra["history_floor"])
+            snaps = self.manifest.extra.get("snapshots", {})
+            live = [
+                int(v)
+                for v, d in snaps.items()
+                if int(d["tps"]) == floor_tps
+                and self._log_tag(self.compacted_dir(int(v))) in state
+            ]
+            if not live:
+                raise ValueError(
+                    f"as-of {ts} needs the snapshot at the history floor "
+                    f"(tps {floor_tps}, vacuumed at {floor}) as its fold "
+                    "base, and that snapshot has been reclaimed; only the "
+                    "current state remains reconstructable"
+                )
+            d = snaps[str(max(live))]
+            wm = {
+                "compact_version": max(live),
+                "compact_rid_hi": int(d["rid_hi"]),
+                "tps": floor_tps,
+            }
+        base, tail, _ = self._read_state(state, wm, include_pending=True)
         out = self._fold_tail(base.where(F.col(TS) <= t), tail.where(F.col(TS) <= t))
         if not include_meta:
             out = out.select(*self.user_cols)

@@ -74,6 +74,8 @@ def spread(
 # plan_scoped_persist. The lock makes each slot's swap (pop, unpersist,
 # persist, store) atomic: two threads racing one slot would otherwise
 # both pop nothing, both persist, and leak the frame stored first.
+# Slots of any other (stopped or replaced) application are swept on
+# every swap, so a restarted session does not pin dead frames.
 _PLAN_PERSIST_SLOTS: dict[tuple, DataFrame] = {}
 _PLAN_PERSIST_LOCK = threading.Lock()
 
@@ -115,10 +117,9 @@ def plan_scoped_persist(
     except Exception:
         key = ("", slot)
     with _PLAN_PERSIST_LOCK:
-        prev = _PLAN_PERSIST_SLOTS.pop(key, None)
-        if prev is not None:
+        for k in [k for k in _PLAN_PERSIST_SLOTS if k == key or k[0] != key[0]]:
             try:
-                prev.unpersist(blocking=False)
+                _PLAN_PERSIST_SLOTS.pop(k).unpersist(blocking=False)
             except Exception:
                 pass
         df = df.persist()

@@ -13,7 +13,7 @@ independently maintained systems — what IS guaranteed is
 CONVERGENCE: every index reaches the post-change state after enough
 retries, a crash anywhere included, because each index application
 runs under its own reservation-marker discipline
-(textsearch._index_apply_stream_batch): already-applied indexes skip
+(_idxmeta.IndexFamily.apply_stream_batch): already-applied indexes skip
 on retry, a torn apply repairs (markers-vs-footers) and re-applies
 through update semantics, so exactly one live generation of each
 changed id survives however many attempts ran."""
@@ -55,14 +55,8 @@ def asof_markers_for_change(
     from ._idxmeta import read_raw_meta
 
     out = {}
-    for key, d, name in (
-        ("bm25", bm25_dir, "_meta.json"),
-        ("trigram", trigram_dir, "_meta.json"),
-        ("ann", ann_dir, "_ann_meta.json"),
-    ):
-        if d is None:
-            continue
-        hist = (read_raw_meta(d, name).get("change_markers") or {}).get(
+    for key, d, fam in _families(bm25_dir, trigram_dir, ann_dir):
+        hist = (read_raw_meta(d, fam.meta_name).get("change_markers") or {}).get(
             stream_id
         ) or {}
         m = hist.get(str(int(change_id)))
@@ -71,7 +65,7 @@ def asof_markers_for_change(
                 f"{key} index has no as-of marker for change "
                 f"{change_id}: the change was never applied there, or "
                 "the marker aged past the retention cap "
-                "(textsearch._CHANGE_MARKER_CAP) or the last "
+                "(_idxmeta._CHANGE_MARKER_CAP) or the last "
                 "compaction"
             )
         out[key] = {"epoch": int(m["epoch"]), "batch": int(m["batch"])}
@@ -158,57 +152,49 @@ def apply_corpus_changes(
 
         return _fn
 
+    def _ann_update(index_dir: str):
+        def _fn():
+            if deletes is not None:
+                similarity.ivf_pq_delete_from_index(
+                    deletes.select(deletes.columns[0]), index_dir
+                )
+            if updates is not None and vec_col in updates.columns:
+                meta = similarity.IVF_PQ.read_meta(index_dir)
+                similarity.ivf_pq_update_index(
+                    updates.select(
+                        updates[id_col].alias(meta["id_col"]),
+                        updates[vec_col].alias(meta["vec_col"]),
+                    ),
+                    index_dir,
+                )
+
+        return _fn
+
     try:
-        if bm25_dir is not None:
-            spark = _session(deletes, updates)
-            applied["bm25"] = textsearch._index_apply_stream_batch(
-                bm25_dir,
-                change_id,
-                stream_id,
-                update_fn=_text_update("bm25", bm25_dir),
-                repair_fn=lambda: textsearch.bm25_index_repair(spark, bm25_dir),
-            )
-        if trigram_dir is not None:
-            spark = _session(deletes, updates)
-            applied["trigram"] = textsearch._index_apply_stream_batch(
-                trigram_dir,
-                change_id,
-                stream_id,
-                update_fn=_text_update("trigram", trigram_dir),
-                repair_fn=lambda: textsearch.trigram_index_repair(
-                    spark, trigram_dir
-                ),
-            )
-        if ann_dir is not None:
-            spark = _session(deletes, updates)
-
-            def _ann_fn():
-                if deletes is not None:
-                    similarity.ivf_pq_delete_from_index(
-                        deletes.select(deletes.columns[0]), ann_dir
-                    )
-                if updates is not None and vec_col in updates.columns:
-                    meta = similarity._open_ann_meta(ann_dir)
-                    similarity.ivf_pq_update_index(
-                        updates.select(
-                            updates[id_col].alias(meta["id_col"]),
-                            updates[vec_col].alias(meta["vec_col"]),
-                        ),
-                        ann_dir,
-                    )
-
-            applied["ann"] = textsearch._index_apply_stream_batch(
-                ann_dir,
-                change_id,
-                stream_id,
-                update_fn=_ann_fn,
-                repair_fn=lambda: similarity.ivf_pq_index_repair(spark, ann_dir),
-                meta_name="_ann_meta.json",
+        for key, d, fam in _families(bm25_dir, trigram_dir, ann_dir):
+            update = _ann_update(d) if key == "ann" else _text_update(key, d)
+            applied[key] = fam.apply_stream_batch(
+                _session(deletes, updates), d, change_id, stream_id, update
             )
     finally:
         for f in pinned:
             f.unpersist()
     return applied
+
+
+def _families(bm25_dir, trigram_dir, ann_dir):
+    """(key, index dir, lifecycle family) of every supplied index."""
+    from . import similarity, textsearch
+
+    return [
+        (key, d, fam)
+        for key, d, fam in (
+            ("bm25", bm25_dir, textsearch.BM25),
+            ("trigram", trigram_dir, textsearch.TRIGRAM),
+            ("ann", ann_dir, similarity.IVF_PQ),
+        )
+        if d is not None
+    ]
 
 
 def _session(*frames):
@@ -258,14 +244,8 @@ def sync_indexes_from_table(
 
     id_col = table.key
     lo = None
-    for d, name in (
-        (bm25_dir, "_meta.json"),
-        (trigram_dir, "_meta.json"),
-        (ann_dir, "_ann_meta.json"),
-    ):
-        if d is None:
-            continue
-        m = (read_raw_meta(d, name).get("stream_appends") or {}).get(
+    for _key, d, fam in _families(bm25_dir, trigram_dir, ann_dir):
+        m = (read_raw_meta(d, fam.meta_name).get("stream_appends") or {}).get(
             "corpus_changes"
         )
         if m is None:

@@ -24,6 +24,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, dot_product, l2_norm
+from ._idxmeta import (
+    IndexFamily,
+    _atomic_dump,
+    footer_rows,
+    publish_meta,
+    read_raw_meta,
+    swap_in,
+)
 
 
 def brute_force_topk(
@@ -735,7 +743,7 @@ def hybrid_search_from_indexes(
     bm_id = [c for c in bm.columns if c != "bm25"][0]
     if bm_id != id_col:
         bm = bm.withColumnRenamed(bm_id, id_col)
-    meta = _open_ann_meta(ann_index_dir)
+    meta = IVF_PQ.read_meta(ann_index_dir)
     ann = ivf_pq_topk_from_index(
         spark, ann_index_dir, query_vec, k=k_ann, nprobe=nprobe,
         n_candidates=n_candidates, round_to=ann_round_to,
@@ -1177,9 +1185,6 @@ def ivf_pq_write_index(
     :func:`ivf_pq_range_filtered_topk_from_index` prunes lists whose
     [min, max] provably misses the query range and sizes its probe
     escalation from the buckets — again zero data jobs to plan."""
-    import json as _json
-    import os as _os
-
     cents = ivf_centroids(df, n_lists=n_lists, id_col=id_col, vec_col=vec_col)
     assigned = ivf_assign(df, cents, vec_col=vec_col)
     if residual:
@@ -1194,8 +1199,7 @@ def ivf_pq_write_index(
     # the tombstone kills generations <= its _upto, the re-indexed
     # row rides a later generation and stays live (round 14; before
     # this, same-id updates required a compaction first)
-    prepared = prepared.withColumn("_gen", F.lit(0))
-    prepared.write.mode("overwrite").partitionBy("_list").parquet(index_dir)
+    IVF_PQ.write("", prepared.withColumn("_gen", F.lit(0)), index_dir, "overwrite")
     # Sidecar stats aggregate over the FRESHLY WRITTEN index, not the
     # `assigned` plan (r14 optimization): `assigned` re-runs the
     # ArrowEvalPython centroid-assign kernel over the whole corpus per
@@ -1225,11 +1229,8 @@ def ivf_pq_write_index(
             "build_stats": build_stats, "filter_hist": fhist,
             "range_stats": rstats,
             "hist_rows": build_stats["rows"]}
-    _refresh_ann_markers(index_dir, meta)
-    tmp = _os.path.join(index_dir, "_ann_meta.json.tmp")
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, _os.path.join(index_dir, "_ann_meta.json"))
+    meta.update(IVF_PQ.footers(index_dir))
+    _atomic_dump(index_dir, IVF_PQ.meta_name, meta)
 
 
 def ivf_range_stats(
@@ -1382,155 +1383,54 @@ def _hist_from_triples(triples: list) -> dict:
     return out
 
 
-def _ann_recover(index_dir: str) -> bool:
-    """Heal a crash inside :func:`ivf_pq_maintain_index`'s directory
-    swap (rename index_dir -> _old_{t}; rename _rebuild_{t} ->
-    index_dir; rmtree _old_{t}): a crash between the two renames
-    leaves NOTHING at index_dir, with the previous index intact under
-    the _old_ sibling and the complete rebuild under the _rebuild_
-    sibling. Promote the completed rebuild if one exists (its sidecar
-    is written last, atomically — presence means complete), else
-    restore the old index; then sweep superseded siblings. No-op (and
-    zero-cost) while index_dir exists. Returns True when a recovery
-    happened."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
+class _IvfPqIndex(IndexFamily):
+    """The IVF-PQ layout on the shared lifecycle: rows partitioned by
+    inverted list (``_list=N``) at the index root with their ``_gen``
+    write generation, tombstones ``(<id_col>, _upto, _slot)`` under
+    ``_tombstones`` (the underscore keeps them invisible to
+    ``spark.read.parquet(index_dir)``), and the quantizers,
+    filter/range stats and counters in ``_ann_meta.json``. Every query
+    operator reads through :meth:`~._idxmeta.IndexFamily.live`, so a
+    deleted vector can never be scored, ranked, or fused, and
+    partition pruning on ``_list`` survives below the anti-join."""
 
-    base = index_dir.rstrip("/")
-    if _os.path.isdir(base):
-        return False
-    candidates = sorted(_glob.glob(base + "_rebuild_*")) + sorted(
-        _glob.glob(base + "_old_*")
-    )
-    for c in candidates:
-        if _os.path.isfile(_os.path.join(c, "_ann_meta.json")):
-            try:
-                _os.rename(c, base)
-            except OSError:
-                if not _os.path.isdir(base):
-                    raise
-            break
-    else:
-        return False
-    for leftover in _glob.glob(base + "_rebuild_*") + _glob.glob(
-        base + "_old_*"
-    ):
-        _shutil.rmtree(leftover, ignore_errors=True)
-    return True
+    meta_name = "_ann_meta.json"
+    gen_col = "_gen"
+    tomb_sub = "_tombstones"
+    markers = {"data_rows": "", "tomb_rows": "_tombstones"}
+    data_subs = ("",)
 
+    def id_col(self, meta, df):
+        return meta["id_col"]
 
-def _open_ann_meta(index_dir: str) -> dict:
-    """Load an index sidecar, healing an interrupted maintenance swap
-    first when the index directory is missing (see _ann_recover)."""
-    import json as _json
-    import os as _os
+    def tomb_id(self, meta):
+        return meta["id_col"]
 
-    p = _os.path.join(index_dir, "_ann_meta.json")
-    try:
-        with open(p) as f:
-            return _json.load(f)
-    except FileNotFoundError:
-        if _ann_recover(index_dir):
-            with open(p) as f:
-                return _json.load(f)
-        raise
+    def members(self, spark, index_dir, meta):
+        return spark.read.parquet(index_dir).select(meta["id_col"], "_gen")
+
+    def pressure(self, meta):
+        rows = int(meta.get("data_rows", 0))
+        return {"rows": rows, "n_dead": meta["n_dead"]}, rows
+
+    def write(self, sub, df, path, mode):
+        df.write.mode(mode).partitionBy("_list").parquet(path)
+
+    def rebuild_derived(self, spark, root, meta):
+        """Filter histograms and range stats re-aggregated from the
+        columns stored under ``root`` (one bounded aggregate per
+        column), with ``hist_rows`` set to its footer count."""
+        if not meta.get("filter_hist") and not meta.get("range_stats"):
+            return
+        idx = spark.read.parquet(root)
+        for c in list(meta.get("filter_hist") or {}):
+            meta["filter_hist"][c] = _hist_triples(ivf_filter_histogram(idx, c))
+        for c in list(meta.get("range_stats") or {}):
+            meta["range_stats"][c] = ivf_range_stats(idx, c)
+        meta["hist_rows"] = footer_rows(root)
 
 
-def _ann_reserve(index_dir: str, meta: dict) -> None:
-    """CAS-claim the ANN index for one mutation BEFORE its first data
-    write — the lineage manifest discipline, shared with the text
-    indexes (see operators/_idxmeta.py). Two concurrent maintainers
-    (a stream upsert racing a compaction, two appenders) no longer
-    last-meta-win silently: the loser aborts with
-    ``IndexConcurrentWriteError`` with nothing published."""
-    from ._idxmeta import reserve_meta
-
-    reserve_meta(index_dir, meta, meta_name="_ann_meta.json")
-
-
-def _ann_abandon(index_dir: str, meta: dict) -> None:
-    from ._idxmeta import abandon_meta
-
-    abandon_meta(index_dir, meta, meta_name="_ann_meta.json")
-
-
-def _ann_publish(index_dir: str, meta: dict, heal: bool = False) -> None:
-    """Publish the ANN sidecar via compare-and-swap (lease must still
-    be ours; cleared in the same atomic rename). ``heal=True`` for
-    the repair paths, which own torn states by definition."""
-    from ._idxmeta import publish_meta
-
-    publish_meta(index_dir, meta, meta_name="_ann_meta.json", heal=heal)
-
-
-_GEN_INF = 2**62  # pre-r14 tombstones had no _upto: they kill ALL
-# generations (the old id-equality semantics), which this sentinel
-# reproduces exactly
-
-
-def _refresh_ann_markers(index_dir: str, meta: dict) -> None:
-    """Record footer row counts of the data partitions and tombstone
-    table — the text indexes' consistency-marker discipline
-    (textsearch._refresh_markers): called at the end of every
-    mutation so :func:`ivf_pq_index_repair` can detect a crash
-    between any parquet write and the sidecar rewrite from metadata
-    alone."""
-    import os as _os
-
-    from .textsearch import _parquet_rows
-
-    meta["data_rows"] = _ann_footer_rows(index_dir)
-    meta["tomb_rows"] = _parquet_rows(_os.path.join(index_dir, "_tombstones"))
-
-
-def _ann_tombstones(spark, index_dir: str):
-    """The ANN index's tombstone table ``(id, _upto)`` — a row kills
-    the id's generations ``_gen <= _upto`` — or None when the index
-    has no deletes. Lives at ``<index_dir>/_tombstones`` (the
-    underscore prefix keeps it invisible to
-    ``spark.read.parquet(index_dir)``). Read with schema merge so a
-    dir holding pre-r14 rows (no ``_upto`` column) stays readable;
-    their null ``_upto`` folds to kill-all, the old semantics."""
-    import os as _os
-
-    path = _os.path.join(index_dir, "_tombstones")
-    if not _os.path.isdir(path):
-        return None
-    tomb = spark.read.option("mergeSchema", "true").parquet(path)
-    if "_upto" not in tomb.columns:
-        tomb = tomb.withColumn("_upto", F.lit(_GEN_INF))
-    return tomb.withColumn(
-        "_upto", F.coalesce(F.col("_upto"), F.lit(_GEN_INF))
-    )
-
-
-def _ann_live(spark, index_dir: str, meta: dict) -> DataFrame:
-    """The index's LIVE rows: the partitioned parquet anti-joined
-    against the tombstone table (small by the compaction contract, so
-    it broadcasts) on id equality BOUNDED by write generation
-    (``_gen <= _upto``) — so a delete-then-append of the same id
-    keeps the re-indexed row live while every earlier generation
-    stays dead (the trigram/BM25 reconciliation, round 14). Every
-    query operator reads through this, so a deleted vector can never
-    be scored, ranked, or fused — whatever branch (prefilter / probe
-    / ADC / exact refine) runs downstream. Partition pruning
-    survives: ``_list`` filters apply to the scan side below the
-    anti-join."""
-    idx = spark.read.parquet(index_dir)
-    if "_gen" not in idx.columns:  # pre-r14 index layout
-        idx = idx.withColumn("_gen", F.lit(0))
-    tomb = _ann_tombstones(spark, index_dir)
-    if tomb is None:
-        return idx
-    idc = meta["id_col"]
-    dead_id = [c for c in tomb.columns if c not in ("_upto", "_slot")][0]
-    return idx.join(
-        F.broadcast(tomb.select(F.col(dead_id).alias("_dead_id"), "_upto")),
-        on=(F.col(idc) == F.col("_dead_id"))
-        & (F.col("_gen") <= F.col("_upto")),
-        how="left_anti",
-    )
+IVF_PQ = _IvfPqIndex()
 
 
 def ann_index_asof_marker(index_dir: str) -> dict:
@@ -1539,51 +1439,12 @@ def ann_index_asof_marker(index_dir: str) -> dict:
     (textsearch.index_asof_marker for the vector index; reference
     parity: select_version, reference lstore/query.py:125). Every
     mutation consumes one slot: appends take the ``_gen`` they stamp,
-    deletes (r14) take a slot recorded as ``_slot`` on their
-    tombstones. ``epoch`` counts compactions — markers from before
-    the last compaction address swept history and raise
-    :class:`~.textsearch.IndexHistoryTruncatedError` when replayed.
+    deletes take a slot recorded as ``_slot`` on their tombstones.
+    ``epoch`` counts compactions — markers from before the last
+    compaction address swept history and raise
+    :class:`~._idxmeta.IndexHistoryTruncatedError` when replayed.
     Metadata-plane only."""
-    meta = _open_ann_meta(index_dir)
-    n = int(meta.get("n_batches", 1))
-    return {"epoch": int(meta.get("epoch", 0)), "batch": n - 1}
-
-
-def _ann_asof(spark, index_dir: str, meta: dict, as_of: dict) -> DataFrame:
-    """The index rows AS OF a marker: generations written after the
-    marker's slot are filtered out, and only tombstones whose
-    mutation slot is <= the marker apply — a later delete cannot
-    reach back, a doc dead at the marker stays dead. Legacy
-    tombstones (pre-``_slot``) predate the feature and therefore any
-    marker: they always apply. Partition pruning survives exactly as
-    in :func:`_ann_live` (the ``_gen``/anti-join sit above the
-    ``_list`` scan filter)."""
-    from .textsearch import _validate_asof
-
-    upto = _validate_asof(
-        {"epoch": meta.get("epoch", 0), "n_batches": meta.get("n_batches", 1)},
-        as_of,
-    )
-    idx = spark.read.parquet(index_dir)
-    if "_gen" not in idx.columns:  # pre-r14 index layout
-        idx = idx.withColumn("_gen", F.lit(0))
-    idx = idx.where(F.col("_gen") <= F.lit(upto))
-    tomb = _ann_tombstones(spark, index_dir)
-    if tomb is None:
-        return idx
-    if "_slot" in tomb.columns:
-        # null _slot = legacy kill-all row: applied to every marker
-        tomb = tomb.where(
-            F.coalesce(F.col("_slot"), F.lit(-1)) <= F.lit(upto)
-        )
-    idc = meta["id_col"]
-    dead_id = [c for c in tomb.columns if c not in ("_upto", "_slot")][0]
-    return idx.join(
-        F.broadcast(tomb.select(F.col(dead_id).alias("_dead_id"), "_upto")),
-        on=(F.col(idc) == F.col("_dead_id"))
-        & (F.col("_gen") <= F.col("_upto")),
-        how="left_anti",
-    )
+    return IVF_PQ.asof_marker(index_dir)
 
 
 def ivf_pq_delete_from_index(ids: DataFrame, index_dir: str) -> int:
@@ -1592,9 +1453,9 @@ def ivf_pq_delete_from_index(ids: DataFrame, index_dir: str) -> int:
     table — the trigram/BM25 discipline (textsearch.py) applied to
     the vector index, completing delete support across all three
     durable retrieval indexes. Every query path reads through
-    :func:`_ann_live`, so correctness is immediate; the physical
-    bytes leave at :func:`ivf_pq_compact_index` once the dead
-    fraction crosses its threshold.
+    :meth:`~._idxmeta.IndexFamily.live`, so correctness is immediate;
+    the physical bytes leave at :func:`ivf_pq_compact_index` once the
+    dead fraction crosses its threshold.
 
     Counters move by the matched live count (unknown / repeated
     deletes are a counted no-op). The tombstone FILE is the
@@ -1613,43 +1474,7 @@ def ivf_pq_delete_from_index(ids: DataFrame, index_dir: str) -> int:
     WITHOUT a prior delete still double-indexes (the Parquet-append
     contract: dedup upstream or route through update). Returns the
     number of vectors actually deleted."""
-    import os as _os
-
-    spark = ids.sparkSession
-    meta = _open_ann_meta(index_dir)
-    _ann_reserve(index_dir, meta)
-    idc = meta["id_col"]
-    live = _ann_live(spark, index_dir, meta).select(idc)
-    matched = (
-        live.join(
-            F.broadcast(ids.select(F.col(ids.columns[0]).alias(idc))), on=idc
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # the write below appends into
-        # the _tombstones dir this frame's lineage reads
-    )
-    n = matched.count()
-    if n == 0:
-        _ann_abandon(index_dir, meta)
-        return 0
-    # the delete consumes its own mutation SLOT (r14, the BM25
-    # discipline): _upto still kills every landed generation, _slot
-    # records WHEN — so an as-of marker orders deletes against
-    # appends exactly, and n_batches advances so the next marker
-    # differs from the pre-delete one
-    slot = int(meta.get("n_batches", 1))
-    matched.select(
-        F.col(idc),
-        F.lit(slot - 1).alias("_upto"),
-        F.lit(slot).alias("_slot"),
-    ).coalesce(1).write.mode("append").parquet(
-        _os.path.join(index_dir, "_tombstones")
-    )
-    meta["n_batches"] = slot + 1
-    meta["n_dead"] = int(meta.get("n_dead", 0)) + n
-    _refresh_ann_markers(index_dir, meta)
-    _ann_publish(index_dir, meta)
-    return n
+    return IVF_PQ.delete(ids, index_dir)
 
 
 def ivf_pq_update_index(
@@ -1665,23 +1490,16 @@ def ivf_pq_update_index(
     insert (the delete half is a counted no-op). Returns the number
     of vectors whose prior generation was tombstoned."""
     n = ivf_pq_delete_from_index(
-        df.select(_open_ann_meta(index_dir)["id_col"]), index_dir
+        df.select(IVF_PQ.read_meta(index_dir)["id_col"]), index_dir
     )
     ivf_pq_append_index(df, index_dir)
     return n
 
 
 def ivf_pq_index_dead_fraction(spark, index_dir: str) -> dict:
-    """Tombstone pressure: dead vs total rows, both metadata-plane
-    (tombstone footers / index footers — no vector bytes)."""
-    total = _ann_footer_rows(index_dir)
-    tomb = _ann_tombstones(spark, index_dir)
-    dead = tomb.count() if tomb is not None else 0
-    return {
-        "rows": total,
-        "n_dead": int(dead),
-        "dead_fraction": (dead / total) if total else 0.0,
-    }
+    """Tombstone pressure: dead vs total rows, read from the sidecar's
+    counters and row markers alone (no Spark job)."""
+    return IVF_PQ.staleness(index_dir)
 
 
 def ivf_pq_compact_index(
@@ -1697,79 +1515,11 @@ def ivf_pq_compact_index(
     :func:`ivf_pq_maintain_index` trigger), re-derive the
     filter/range sidecars from the survivors (their dead counts drop
     out, so strategy estimates are honest again), refresh
-    ``hist_rows`` to the new footer count, and swap directories with
-    the rename-rename-rmtree dance :func:`_ann_recover` already
-    heals. Below threshold this is a zero-data-job metadata check —
-    the maintain-cadence shape shared with the text indexes."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    _ann_recover(index_dir)
-    rep = ivf_pq_index_dead_fraction(spark, index_dir)
-    if not force and rep["dead_fraction"] < tombstone_fraction:
-        return {**rep, "compacted": False}
-    meta = _open_ann_meta(index_dir)
-    _ann_reserve(index_dir, meta)  # racing upsert/delete aborts cleanly
-    live = _ann_live(spark, index_dir, meta)
-    token = _uuid.uuid4().hex[:8]
-    fresh = f"{index_dir.rstrip('/')}_rebuild_{token}"
-    _os.makedirs(fresh, exist_ok=True)
-    live.withColumn("_gen", F.lit(0)).write.mode("overwrite").partitionBy(
-        "_list"
-    ).parquet(fresh)
-    new_meta = dict(meta)
-    new_meta["n_batches"] = 1  # generations reset with the tombstones
-    # history is physically gone: bump the epoch so pre-compaction
-    # as-of markers raise instead of re-aiming at the collapsed gen 0
-    new_meta["epoch"] = int(new_meta.get("epoch", 0)) + 1
-    # the swap IS the publish: carry the reserved commit_seq forward
-    # (so a stale snapshot can't CAS past the rebuild) and clear the
-    # lease in the same directory rename
-    new_meta.pop("_pending", None)
-    new_meta["commit_seq"] = int(new_meta.get("commit_seq", 0)) + 1
-    new_meta["n_dead"] = 0
-    idx2 = spark.read.parquet(fresh)
-    for c in list(new_meta.get("filter_hist") or {}):
-        new_meta["filter_hist"][c] = _hist_triples(ivf_filter_histogram(idx2, c))
-    for c in list(new_meta.get("range_stats") or {}):
-        new_meta["range_stats"][c] = ivf_range_stats(idx2, c)
-    if new_meta.get("filter_hist") or new_meta.get("range_stats"):
-        new_meta["hist_rows"] = _ann_footer_rows(fresh)
-    _refresh_ann_markers(fresh, new_meta)
-    with open(_os.path.join(fresh, "_ann_meta.json"), "w") as f:
-        _json.dump(new_meta, f)
-    old = f"{index_dir.rstrip('/')}_old_{token}"
-    _os.rename(index_dir, old)
-    _os.rename(fresh, index_dir)
-    _shutil.rmtree(old, ignore_errors=True)
-    return {**rep, "compacted": True}
-
-
-def _ann_footer_rows(index_dir: str) -> int:
-    """Exact index row count from parquet FILE FOOTERS (no Spark job,
-    no vector bytes — the LIST + footer pass any engine pays to plan
-    a scan over the index). Walks the partition tree explicitly: the
-    partition dirs are ``_list=N``, which pyarrow's default dataset
-    discovery would IGNORE as underscore-prefixed (it returned 0 for
-    every index — caught by the r13 delete tests); sidecars and the
-    ``_tombstones`` subtree are skipped."""
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    total = 0
-    for root, dirs, files in _os.walk(index_dir):
-        dirs[:] = [
-            d
-            for d in dirs
-            if d.startswith("_list=") or not d.startswith(("_", "."))
-        ]
-        for fn in files:
-            if fn.endswith(".parquet"):
-                total += _pq.read_metadata(_os.path.join(root, fn)).num_rows
-    return int(total)
+    ``hist_rows`` to the new footer count, and swap the fresh tree in
+    whole (:meth:`~._idxmeta.IndexFamily.compact`). Below threshold
+    this is a zero-job sidecar check — the maintain-cadence shape
+    shared with the text indexes."""
+    return IVF_PQ.compact(spark, index_dir, tombstone_fraction, force)
 
 
 def _verified_meta(spark, index_dir: str, meta: dict) -> dict:
@@ -1786,10 +1536,10 @@ def _verified_meta(spark, index_dir: str, meta: dict) -> dict:
     actually lies (a crash window, not a steady state)."""
     if not meta.get("filter_hist") and not meta.get("range_stats"):
         return meta
-    if int(meta.get("hist_rows", -1)) == _ann_footer_rows(index_dir):
+    if int(meta.get("hist_rows", -1)) == footer_rows(index_dir):
         return meta
     ivf_filter_histogram_repair(spark, index_dir)
-    return _open_ann_meta(index_dir)
+    return IVF_PQ.read_meta(index_dir)
 
 
 def ivf_pq_append_index(
@@ -1832,8 +1582,8 @@ def ivf_pq_append_index(
     duplicates data and histogram counts TOGETHER (marker still
     matches) — that is the upstream-dedup caveat above, not a torn
     sidecar."""
-    meta = _open_ann_meta(index_dir)
-    _ann_reserve(index_dir, meta)
+    meta = IVF_PQ.read_meta(index_dir)
+    IVF_PQ.reserve(index_dir, meta)
     vec_col = meta["vec_col"]
     assigned = ivf_assign(df, meta["centroids"], vec_col=vec_col)
     if meta.get("residual"):
@@ -1841,7 +1591,7 @@ def ivf_pq_append_index(
         prepared = pq_encode(src, meta["codebooks"], vec_col="_res").drop("_res")
     else:
         prepared = pq_encode(assigned, meta["codebooks"], vec_col=vec_col)
-    gen = int(meta.get("n_batches", 1))  # pre-r14 sidecars: base is 0
+    gen = meta["n_batches"]
     # Assign + PQ-encode ONCE (r14 optimization): count, the
     # partitioned write, and every sidecar aggregate below re-read the
     # persisted O(batch) encoded frame instead of re-running the two
@@ -1852,7 +1602,7 @@ def ivf_pq_append_index(
     prepared = prepared.withColumn("_gen", F.lit(gen)).persist()
     try:
         n = prepared.count()
-        prepared.write.mode("append").partitionBy("_list").parquet(index_dir)
+        IVF_PQ.write("", prepared, index_dir, "append")
         meta["n_batches"] = gen + 1
         if meta.get("filter_hist"):
             # histograms are additive over disjoint batches: fold the
@@ -1875,37 +1625,30 @@ def ivf_pq_append_index(
         prepared.unpersist()
     if meta.get("filter_hist") or meta.get("range_stats"):
         meta["hist_rows"] = int(meta.get("hist_rows", 0)) + n
-    _refresh_ann_markers(index_dir, meta)
-    _ann_publish(index_dir, meta)
+    IVF_PQ.publish(index_dir, meta)
     return n
 
 
 def ivf_filter_histogram_repair(spark, index_dir: str) -> dict:
     """Detect and heal a torn filter sidecar (a crash between
     :func:`ivf_pq_append_index`'s data append and its meta rewrite).
-    Check is metadata-plane: ``count()`` over the index parquet is
-    answered from file footers (no vector bytes read) and compared
-    against the sidecar's ``hist_rows`` marker. On mismatch the
-    per-(list, value) histograms AND the range stats (same crash
-    window tears both) are re-aggregated from the columns STORED in
-    the index partitions (one bounded aggregate per column — the
-    rebuild-of-last-resort, run only when the cheap marker says the
+    Check is metadata-plane: the index's footer row count (no Spark
+    job, no vector bytes) against the sidecar's ``hist_rows`` marker.
+    On mismatch the per-(list, value) histograms AND the range stats
+    (same crash window tears both) are re-aggregated from the columns
+    STORED in the index partitions (one bounded aggregate per column —
+    the rebuild-of-last-resort, run only when the cheap marker says the
     sidecar lies) and the sidecar is atomically rewritten. Returns
     ``{"checked": rows, "hist_rows": marker, "repaired": bool}``."""
-    meta = _open_ann_meta(index_dir)
+    meta = IVF_PQ.read_meta(index_dir)
     if not meta.get("filter_hist") and not meta.get("range_stats"):
         return {"checked": 0, "hist_rows": 0, "repaired": False}
-    actual = spark.read.parquet(index_dir).count()
+    actual = footer_rows(index_dir)
     marker = int(meta.get("hist_rows", -1))
     if marker == actual:
         return {"checked": actual, "hist_rows": marker, "repaired": False}
-    idx = spark.read.parquet(index_dir)
-    for c in list(meta.get("filter_hist") or {}):
-        meta["filter_hist"][c] = _hist_triples(ivf_filter_histogram(idx, c))
-    for c in list(meta.get("range_stats") or {}):
-        meta["range_stats"][c] = ivf_range_stats(idx, c)
-    meta["hist_rows"] = int(actual)
-    _ann_publish(index_dir, meta, heal=True)
+    IVF_PQ.rebuild_derived(spark, index_dir, meta)
+    publish_meta(index_dir, meta, IVF_PQ.meta_name, heal=True)
     return {"checked": actual, "hist_rows": marker, "repaired": True}
 
 
@@ -1917,54 +1660,16 @@ def ivf_pq_index_repair(spark, index_dir: str) -> dict:
 
     Detection is metadata-plane: every mutation records the footer
     row counts of the data partitions and the tombstone table in the
-    sidecar (:func:`_refresh_ann_markers`); mismatch means a crash
-    landed parquet without its counters. Repair re-derives what the
-    sidecar claims from storage: the filter/range histograms through
-    :func:`ivf_filter_histogram_repair` (its own ``hist_rows`` marker
-    gates the expensive re-aggregate), ``n_batches`` from
-    ``max(_gen) + 1`` over the data — the critical one: a replayed
-    upsert tombstones at ``n_batches - 1``, so the counter must clear
-    EVERY landed generation including a crashed attempt's orphans —
-    and ``n_dead`` from the tombstones' distinct ids. Idempotent; on
-    the tools/maintain.py cadence."""
-    import os as _os
-
-    from .textsearch import _parquet_rows
-
-    _ann_recover(index_dir)
-    meta = _open_ann_meta(index_dir)
-    actual = {
-        "data_rows": _ann_footer_rows(index_dir),
-        "tomb_rows": _parquet_rows(_os.path.join(index_dir, "_tombstones")),
-    }
-    recorded = {k: int(meta.get(k, -1)) for k in actual}
-    if recorded == actual:
-        return {"repaired": False, **actual}
-    ivf_filter_histogram_repair(spark, index_dir)
-    meta = _open_ann_meta(index_dir)
-    idx = spark.read.parquet(index_dir)
-    if "_gen" in idx.columns:
-        mx = idx.agg(F.max("_gen")).first()[0]
-    else:  # pre-r14 layout: single generation
-        mx = 0
-    meta["n_batches"] = int(mx) + 1 if mx is not None else 1
-    tomb = _ann_tombstones(spark, index_dir)
-    if tomb is not None:
-        dead_id = [c for c in tomb.columns if c not in ("_upto", "_slot")][0]
-        meta["n_dead"] = int(tomb.select(dead_id).distinct().count())
-        # deletes consume mutation slots (r14): a re-derived
-        # n_batches must clear every CONSUMED slot, not just every
-        # landed data generation, or as-of ordering corrupts and the
-        # next delete reuses a taken slot
-        if "_slot" in tomb.columns:
-            mx_t = tomb.agg(F.max("_slot")).first()[0]
-            if mx_t is not None:
-                meta["n_batches"] = max(meta["n_batches"], int(mx_t) + 1)
-    else:
-        meta["n_dead"] = 0
-    _refresh_ann_markers(index_dir, meta)
-    _ann_publish(index_dir, meta, heal=True)
-    return {"repaired": True, **{k: meta[k] for k in actual}}
+    sidecar; mismatch means a crash landed parquet without its
+    counters. Repair (:meth:`~._idxmeta.IndexFamily.repair`)
+    re-derives what the sidecar claims from storage: the filter/range
+    histograms, ``n_batches`` past every landed generation and delete
+    slot — the critical one: a replayed upsert tombstones at
+    ``n_batches - 1``, so the counter must clear a crashed attempt's
+    orphans — and ``n_dead`` from the tombstones. An interrupted
+    compaction or rebuild swap is recovered first. Idempotent; on the
+    tools/maintain.py cadence."""
+    return IVF_PQ.repair(spark, index_dir)
 
 
 def ivf_pq_apply_stream_batch(
@@ -1979,9 +1684,9 @@ def ivf_pq_apply_stream_batch(
     What's-missing #1: BM25/trigram had the exactly-once stream
     discipline, ANN had the parts but not the composition). Shares
     the reserve-marker -> update-semantics apply -> complete-marker
-    protocol (``textsearch._index_apply_stream_batch``) against the
-    ``_ann_meta.json`` sidecar, with :func:`ivf_pq_index_repair`
-    run on dirty replays so counters match whatever parquet landed —
+    protocol (:meth:`~._idxmeta.IndexFamily.apply_stream_batch`)
+    against the ``_ann_meta.json`` sidecar, with the repair run on
+    dirty replays so counters match whatever parquet landed —
     however many attempts crashed, exactly one live generation of
     each batch id survives (the generation-bounded tombstones make
     re-applies idempotent).
@@ -1992,25 +1697,15 @@ def ivf_pq_apply_stream_batch(
     by :func:`ivf_pq_maintain_index` on its own cadence). Batch rows
     must carry the sidecar's id and vector columns. Returns True iff
     THIS call applied the batch."""
-    import os as _os
-
-    from .textsearch import _index_apply_stream_batch
-
-    if not _os.path.isfile(_os.path.join(index_dir, "_ann_meta.json")):
-        if not _ann_recover(index_dir):
-            raise FileNotFoundError(
-                f"no ANN index at {index_dir!r}: build one with "
-                "ivf_pq_write_index over a seed corpus first (a stream "
-                "cannot train the quantizers)"
-            )
-    spark = batch_df.sparkSession
-    return _index_apply_stream_batch(
-        index_dir,
-        batch_id,
-        stream_id,
-        update_fn=lambda: ivf_pq_update_index(batch_df, index_dir),
-        repair_fn=lambda: ivf_pq_index_repair(spark, index_dir),
-        meta_name="_ann_meta.json",
+    if "id_col" not in IVF_PQ.read_meta(index_dir):
+        raise FileNotFoundError(
+            f"no ANN index at {index_dir!r}: build one with "
+            "ivf_pq_write_index over a seed corpus first (a stream "
+            "cannot train the quantizers)"
+        )
+    return IVF_PQ.apply_stream_batch(
+        batch_df.sparkSession, index_dir, batch_id, stream_id,
+        lambda: ivf_pq_update_index(batch_df, index_dir),
     )
 
 
@@ -2058,9 +1753,10 @@ def ivf_pq_recall_probe(
     mean residual barely moves). Cost: n_queries exact scans of the
     index — a sampled, scheduled health check, not a per-query path;
     at 100 TB run it on an index sample or a fixed witness set."""
-    meta = _open_ann_meta(index_dir)
+    meta = IVF_PQ.read_meta(index_dir)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    idx = _ann_live(spark, index_dir, meta).select(id_col, vec_col)
+    (idx,) = IVF_PQ.live(spark, index_dir, meta, "")
+    idx = idx.select(id_col, vec_col)
     picks = (
         idx.orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit("probe")))
         .limit(n_queries)
@@ -2116,8 +1812,8 @@ def ivf_pq_index_staleness(
     when recall@recall_k at recall_nprobe falls below
     ``recall_floor``. Opt-in because it costs recall_probe exact index
     scans (vs the statistics' single aggregate)."""
-    meta = _open_ann_meta(index_dir)
-    idx = _ann_live(spark, index_dir, meta)  # dead rows carry no health signal
+    meta = IVF_PQ.read_meta(index_dir)
+    (idx,) = IVF_PQ.live(spark, index_dir, meta, "")  # dead rows: no health signal
     cur = _ivf_health(
         ivf_residuals(idx, meta["centroids"], vec_col=meta["vec_col"])
     )
@@ -2164,18 +1860,15 @@ def ivf_pq_maintain_index(
     directories (rename-rename-rmtree, the vacuum_tail dance). A crash
     BETWEEN the two renames leaves index_dir momentarily absent with
     both complete siblings on disk — every index entry point heals
-    that on its next open via :func:`_ann_recover` (promote the
+    that on its next open via :func:`~._idxmeta.recover` (promote the
     completed rebuild, else restore the old index), so readers always
     resolve to a complete index, never a torn one; a concurrent read
     landing exactly inside the swap window may see path-not-found
     once and succeeds on retry. Work is one corpus re-encode — the
     operation the staleness gate exists to run RARELY. Returns the
     staleness report plus ``rebuilt``."""
-    import os as _os
-    import shutil as _shutil
     import uuid as _uuid
 
-    _ann_recover(index_dir)
     rep = ivf_pq_index_staleness(
         spark, index_dir, skew_factor, err_factor,
         recall_probe=recall_probe, recall_floor=recall_floor,
@@ -2183,15 +1876,14 @@ def ivf_pq_maintain_index(
     )
     if not rep["stale"]:
         return {**rep, "rebuilt": False}
-    meta = _open_ann_meta(index_dir)
-    _ann_reserve(index_dir, meta)  # racing upsert/delete aborts cleanly
+    meta = IVF_PQ.read_meta(index_dir)
+    IVF_PQ.reserve(index_dir, meta)  # racing upsert/delete aborts cleanly
     fcols = list(meta.get("filter_hist") or {})
     rcols = [c for c in (meta.get("range_stats") or {}) if c not in fcols]
     # LIVE rows only: a rebuild must never resurrect tombstoned
     # vectors (the fresh index needs no tombstones at all)
-    vecs = _ann_live(spark, index_dir, meta).select(
-        meta["id_col"], meta["vec_col"], *fcols, *rcols
-    )
+    (live,) = IVF_PQ.live(spark, index_dir, meta, "")
+    vecs = live.select(meta["id_col"], meta["vec_col"], *fcols, *rcols)
     token = _uuid.uuid4().hex[:8]
     fresh = f"{index_dir.rstrip('/')}_rebuild_{token}"
     kw = dict(
@@ -2208,19 +1900,10 @@ def ivf_pq_maintain_index(
     ivf_pq_write_index(vecs, fresh, **kw)
     # the swap IS the publish: stamp the rebuilt sidecar with the
     # reserved commit_seq so a stale snapshot can't CAS past it
-    import json as _json
-
-    fm_path = _os.path.join(fresh, "_ann_meta.json")
-    with open(fm_path) as f:
-        fm = _json.load(f)
+    fm = read_raw_meta(fresh, IVF_PQ.meta_name)
     fm["commit_seq"] = int(meta.get("commit_seq", 0)) + 1
-    with open(fm_path + ".tmp", "w") as f:
-        _json.dump(fm, f)
-    _os.replace(fm_path + ".tmp", fm_path)
-    old = f"{index_dir.rstrip('/')}_old_{token}"
-    _os.rename(index_dir, old)
-    _os.rename(fresh, index_dir)
-    _shutil.rmtree(old, ignore_errors=True)
+    _atomic_dump(fresh, IVF_PQ.meta_name, fm)
+    swap_in(index_dir, fresh, token)
     return {**rep, "rebuilt": True}
 
 
@@ -2243,23 +1926,20 @@ def ivf_pq_topk_from_index(
     the search against the corpus state AT that marker —
     select_version for the vector index: later appends are
     generation-filtered, later deletes/updates slot-filtered
-    (:func:`_ann_asof`). Probe planning stays driver math over the
-    FROZEN centroids (data-independent, so as-of needs no historical
-    sidecar), the raw vectors ride in the index rows, and the
-    exact-refine reads only as-of-live candidates. Markers from
+    (:meth:`~._idxmeta.IndexFamily.live`). Probe planning stays
+    driver math over the FROZEN centroids (data-independent, so as-of
+    needs no historical sidecar), the raw vectors ride in the index
+    rows, and the exact-refine reads only as-of-live candidates.
+    Markers from
     before the last compaction raise IndexHistoryTruncatedError."""
     import numpy as np
 
-    meta = _open_ann_meta(index_dir)
+    meta = IVF_PQ.read_meta(index_dir)
     cents = np.asarray(meta["centroids"], dtype=np.float64)
     q = np.asarray(query_vec, dtype=np.float64)
     order = (((cents - q[None, :]) ** 2).sum(axis=1)).argsort()[:nprobe]
     probes = [int(i) for i in order]
-    idx = (
-        _ann_asof(spark, index_dir, meta, as_of)
-        if as_of is not None
-        else _ann_live(spark, index_dir, meta)
-    )
+    (idx,) = IVF_PQ.live(spark, index_dir, meta, "", as_of=as_of)
     lists = idx.where(F.col("_list").isin(probes))
     if meta.get("residual"):
         # per-list query-residual ADC tables; each single-list filter
@@ -2324,12 +2004,12 @@ def ivf_pq_topk_batch_from_index(
     saving no longer pays for its recall loss), so with
     ``nprobe = n_lists`` the batch answer is EXACT per query — the
     oracle-gate configuration. Deleted vectors are invisible
-    (:func:`_ann_live`). Output: (q_id, vec_id, cosine), ties by id."""
+    (:meth:`~._idxmeta.IndexFamily.live`). Output: (q_id, vec_id, cosine), ties by id."""
     import numpy as np
 
     from pyspark.sql import Window
 
-    meta = _open_ann_meta(index_dir)
+    meta = IVF_PQ.read_meta(index_dir)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     cents = np.asarray(meta["centroids"], dtype=np.float64)
     cap = min(nprobe, len(cents))
@@ -2375,11 +2055,8 @@ def ivf_pq_topk_batch_from_index(
         ),
     )
     union_lists = sorted({li for _q, _v, li in probe_rows})
-    idx = (
-        _ann_asof(spark, index_dir, meta, as_of)
-        if as_of is not None
-        else _ann_live(spark, index_dir, meta)
-    ).where(
+    (idx,) = IVF_PQ.live(spark, index_dir, meta, "", as_of=as_of)
+    idx = idx.where(
         F.col("_list").isin(union_lists)  # partition pruning for the batch
     )
     joined = idx.join(
@@ -2525,7 +2202,7 @@ def ivf_pq_filtered_topk_from_index(
     Returns ``(topk_df, info)`` like the in-memory operator."""
     import numpy as np
 
-    meta = _open_ann_meta(index_dir)
+    meta = IVF_PQ.read_meta(index_dir)
     triples = (meta.get("filter_hist") or {}).get(filter_col)
     if triples is None:
         raise ValueError(
@@ -2535,7 +2212,7 @@ def ivf_pq_filtered_topk_from_index(
     hist = _hist_from_triples(triples)
     per_list = hist.get(filter_value, {})
     total = sum(per_list.values())
-    idx = _ann_live(spark, index_dir, meta)
+    (idx,) = IVF_PQ.live(spark, index_dir, meta, "")
     pred = F.col(filter_col) == F.lit(filter_value)
     if total <= brute_threshold:
         out = brute_force_topk(
@@ -2617,7 +2294,7 @@ def ivf_pq_range_filtered_topk_from_index(
     means exact, whatever crashed before this query."""
     import numpy as np
 
-    meta = _verified_meta(spark, index_dir, _open_ann_meta(index_dir))
+    meta = _verified_meta(spark, index_dir, IVF_PQ.read_meta(index_dir))
     stats = (meta.get("range_stats") or {}).get(filter_col)
     if stats is None:
         raise ValueError(
@@ -2628,7 +2305,7 @@ def ivf_pq_range_filtered_topk_from_index(
     est = _range_estimate(stats, lo_d, hi_d)
     n_lists = len(meta["centroids"])
     pred = F.col(filter_col).between(F.lit(lo), F.lit(hi))
-    idx = _ann_live(spark, index_dir, meta)
+    (idx,) = IVF_PQ.live(spark, index_dir, meta, "")
     info_base = {
         "lists_possible": sorted(est),
         "lists_pruned": n_lists - len(est),
@@ -2710,7 +2387,7 @@ def ivf_pq_composite_filtered_topk_from_index(
     the exact-claiming prefilter branch."""
     import numpy as np
 
-    meta = _verified_meta(spark, index_dir, _open_ann_meta(index_dir))
+    meta = _verified_meta(spark, index_dir, IVF_PQ.read_meta(index_dir))
     triples = (meta.get("filter_hist") or {}).get(eq_col)
     if triples is None:
         raise ValueError(
@@ -2735,7 +2412,7 @@ def ivf_pq_composite_filtered_topk_from_index(
     pred = (F.col(eq_col) == F.lit(eq_value)) & F.col(range_col).between(
         F.lit(lo), F.lit(hi)
     )
-    idx = _ann_live(spark, index_dir, meta)
+    (idx,) = IVF_PQ.live(spark, index_dir, meta, "")
     info_base = {
         "lists_possible": sorted(est),
         "lists_pruned": n_lists - len(est),

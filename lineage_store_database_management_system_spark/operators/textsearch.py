@@ -40,9 +40,14 @@ the honest full verify scan (flagged in the returned plan info).
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._idxmeta import IndexFamily, IndexHistoryTruncatedError
 from ._util import _default_parallelism
 
 __all__ = [
@@ -71,6 +76,8 @@ __all__ = [
     "bm25_index_apply_stream_batch",
     "trigram_index_apply_stream_batch",
     "fuzzy_similarity_search",
+    "index_asof_marker",
+    "IndexHistoryTruncatedError",
 ]
 
 # candidate sets up to this size verify through a pushed-down IN-list
@@ -122,213 +129,173 @@ def pattern_grams(pattern: str) -> list[str]:
     return seen
 
 
-def _read_meta(index_dir: str, meta_name: str = "_meta.json") -> dict:
-    import json
-    import os
+# --- the text index families ------------------------------------------
 
-    try:
-        with open(os.path.join(index_dir, meta_name)) as f:
-            m = json.load(f)
-    except FileNotFoundError:
-        m = {}
-    out = dict(m)  # index-kind-specific counters pass through
-    for k in ("n_docs", "n_batches", "n_dead"):
-        out[k] = int(m.get(k, 0))
-    return out
+#: posting/membership columns that are not the doc id
+_NON_ID = ("term", "gram", "tf", "dl", "_batch")
 
 
-def _reserve(index_dir: str, meta: dict) -> None:
-    """CAS-claim the index for one mutation BEFORE its first data
-    write — the lineage ``_ManifestLock`` discipline ported to the
-    text indexes (see :mod:`._idxmeta`). A concurrent mutator (a
-    stream upsert racing a compaction, two writers appending) aborts
-    with :class:`~._idxmeta.IndexConcurrentWriteError` with nothing
-    published, instead of the last meta rewrite silently winning."""
-    from ._idxmeta import reserve_meta
+class _TextIndex(IndexFamily):
+    """The text indexes' layout on the shared lifecycle:
+    ``<dir>/postings`` clustered by ``key`` (term / gram), a membership
+    table ``member_sub`` with one ``(id, [dl,] _batch)`` row per
+    indexed document — what deletes match against and repair
+    re-derives the counters from — ``<dir>/tombstones``
+    ``(_dead_id, _upto, _slot)``, and counters in ``_meta.json``
+    (``n_docs`` for query-time selectivity / idf)."""
 
-    reserve_meta(index_dir, meta)
+    counters = ("n_docs", "n_batches", "n_dead")
+    member_sub = ""
+    key = ""
+    member_extra: tuple = ()
+
+    def id_col(self, meta, df):
+        return [c for c in df.columns if c not in _NON_ID][0]
+
+    def members(self, spark, index_dir, meta):
+        path = os.path.join(index_dir, self.member_sub)
+        return spark.read.parquet(path) if os.path.isdir(path) else None
+
+    def pressure(self, meta):
+        rep = {k: meta[k] for k in ("n_docs", "n_dead", "n_batches")}
+        return rep, meta["n_docs"] + meta["n_dead"]
+
+    def write(self, sub, df, path, mode):
+        if sub == "postings":
+            # CLUSTER BY KEY: range-partition + sort so every posting
+            # file covers a narrow key range — the query's key IN-list
+            # then prunes at the parquet row-group/file level instead
+            # of scanning the whole posting table (at sf10 the
+            # unclustered posting scan was BIGGER than the corpus scan
+            # it was supposed to avoid)
+            df = df.repartitionByRange(
+                max(_default_parallelism(df), 8), self.key
+            ).sortWithinPartitions(self.key)
+        df.write.mode(mode).parquet(path)
+
+    def tallies(self, agg: dict) -> dict:
+        """The live counters a set of member rows carries (``agg``:
+        the distinct id count ``n``, the row count ``rows`` and the
+        :meth:`delete_aggs` sums)."""
+        return {"n_docs": int(agg.get("n") or 0)}
+
+    def on_delete(self, meta, agg):
+        for k, v in self.tallies(agg).items():
+            meta[k] = int(meta.get(k, 0)) - v
+
+    def heal(self, spark, index_dir, meta):
+        """No postings means no write completed its first step: the
+        true state is the empty index. Generations present in postings
+        but missing from the membership table (a crash between the two
+        appends, the table never created included) are re-derived from
+        the posting rows — the doc id, and BM25's denormalized dl, ride
+        in every posting — so a replayed upsert tombstones the orphans
+        instead of indexing them a second time. The live counters then
+        come from the tombstone-filtered membership table. One honest
+        boundary: a BM25 doc whose text tokenized to nothing has no
+        doclens row, so a re-derived n_docs counts only scorable docs —
+        the same idf a from-scratch rebuild would produce."""
+        ppath = os.path.join(index_dir, "postings")
+        mpath = os.path.join(index_dir, self.member_sub)
+        if os.path.isdir(ppath):
+            raw = spark.read.parquet(ppath)
+            have = _generations(spark.read.parquet(mpath)) if os.path.isdir(
+                mpath
+            ) else set()
+            orphan = sorted(_generations(raw) - have)
+            if orphan:
+                (
+                    raw.where(F.col("_batch").isin(orphan))
+                    .select(self.id_col(meta, raw), *self.member_extra, "_batch")
+                    .distinct()
+                    .write.mode("append")
+                    .parquet(mpath)
+                )
+        agg: dict = {}
+        if os.path.isdir(mpath):
+            (live,) = self.live(spark, index_dir, meta, self.member_sub)
+            agg = live.agg(
+                F.count_distinct(self.id_col(meta, live)).alias("n"),
+                F.count(F.lit(1)).alias("rows"),
+                *self.delete_aggs(),
+            ).first().asDict()
+        meta.update(self.tallies(agg))
 
 
-def _abandon(index_dir: str, meta: dict) -> None:
-    from ._idxmeta import abandon_meta
-
-    abandon_meta(index_dir, meta)
+def _generations(df: DataFrame) -> set:
+    return {int(r[0]) for r in df.select("_batch").distinct().collect()}
 
 
-def _write_meta(index_dir: str, meta: dict, heal: bool = False) -> None:
-    """Publish the sidecar via compare-and-swap: the lease granted by
-    :func:`_reserve` must still be ours, and it clears in the same
-    atomic rename. ``heal=True`` is the repair functions' door — they
-    own torn states by definition, lease included."""
-    from ._idxmeta import publish_meta
+class _TrigramIndex(_TextIndex):
+    member_sub = "docids"
+    key = "gram"
+    data_subs = ("postings", "docids")
+    markers = {
+        "postings_rows": "postings",
+        "docids_rows": "docids",
+        "tombstones_rows": "tombstones",
+    }
 
-    publish_meta(index_dir, meta, heal=heal)
-
-
-def _parquet_rows(path: str) -> int:
-    """Exact row count of a parquet directory from FILE FOOTERS alone
-    (no Spark job, no data bytes — the LIST + footer-read pass any
-    engine pays to plan a scan). 0 for a missing/empty dir. This is
-    the consistency-marker check's ground truth: a parquet append and
-    its ``_meta.json`` counter rewrite are two writes, so a crash
-    between them is detectable by comparing the recorded row marker
-    with this footer count (the ANN sidecar's ``hist_rows`` repair
-    discipline, similarity.py ivf_filter_histogram_repair)."""
-    import os
-
-    if not os.path.isdir(path):
-        return 0
-    import pyarrow.dataset as pads
-
-    ds = pads.dataset(path, format="parquet")
-    return int(sum(f.metadata.num_rows for f in ds.get_fragments()))
-
-
-def _refresh_markers(index_dir: str, meta: dict, subdirs: tuple) -> None:
-    """Record the footer row counts of ``subdirs`` in ``meta`` —
-    called at the END of every write/delete/compact so a matching
-    marker set certifies the sidecar counters were written AFTER the
-    parquet they describe."""
-    import os
-
-    for sub in subdirs:
-        meta[f"{sub}_rows"] = _parquet_rows(os.path.join(index_dir, sub))
+    def rebuild_derived(self, spark, root, meta):
+        """Stats rebuilt from the postings that landed under ``root``
+        (per-batch deltas fold to the same sums, so one rewrite is
+        equivalent): a torn postings-landed/stats-missing append would
+        otherwise make substring_search's df=0 short-circuit a FALSE
+        NEGATIVE, and after a compaction the dead docs' frequencies
+        drop out."""
+        ppath = os.path.join(root, "postings")
+        if not os.path.isdir(ppath):
+            return
+        fresh = os.path.join(root, f"stats_new_{uuid.uuid4().hex[:8]}")
+        trigram_stats(spark.read.parquet(ppath).drop("_batch")).write.mode(
+            "overwrite"
+        ).parquet(fresh)
+        shutil.rmtree(os.path.join(root, "stats"), ignore_errors=True)
+        os.rename(fresh, os.path.join(root, "stats"))
 
 
-#: newest change->marker entries kept per (index, stream) — a meta
-#: size bound; compaction's epoch bump is the true retention edge
-_CHANGE_MARKER_CAP = 256
+class _Bm25Index(_TextIndex):
+    member_sub = "doclens"
+    key = "term"
+    member_extra = ("dl",)
+    data_subs = ("postings", "doclens")
+    markers = {
+        "postings_rows": "postings",
+        "doclens_rows": "doclens",
+        "tombstones_rows": "tombstones",
+    }
+
+    def delete_aggs(self):
+        return (F.sum("dl").alias("dl"),)
+
+    def tallies(self, agg):
+        # n_docs_dl/total_dl feed avgdl (non-empty docs only, matching
+        # the scan path's AVG over tokenized docs)
+        return {
+            **super().tallies(agg),
+            "n_docs_dl": int(agg.get("rows") or 0),
+            "total_dl": int(agg.get("dl") or 0),
+        }
 
 
-class IndexHistoryTruncatedError(ValueError):
-    """An as-of marker addresses generations the index no longer
-    holds: compaction physically swept the dead rows and tombstones
-    the marker's reconstruction needs. The retention contract is the
-    lineage tables' (filelog.py changes_between_commits raising
-    outside its horizon; Delta VACUUM + time travel): history older
-    than the last compaction is gone, and asking for it raises
-    instead of returning a silently wrong answer."""
+TRIGRAM = _TrigramIndex()
+BM25 = _Bm25Index()
 
 
 def index_asof_marker(index_dir: str) -> dict:
-    """Capture the index's current position on its mutation timeline
-    — the handle :func:`bm25_topk_from_index` ``as_of=`` replays.
-    Every mutation consumes one SLOT on that timeline: appends take
-    the generation number they stamp into their rows, and deletes
-    (r14) take a slot recorded as ``_slot`` on their tombstones — so
-    two states that differ only by a delete have DIFFERENT markers
-    and as-of ordering is exact, the discipline the lineage tables
-    get from commit ids (reference parity: select_version /
-    sum_version, reference lstore/query.py:125,220 — this is
-    select_version for the retrieval index). ``epoch`` counts compactions: a marker
-    from before the last compaction addresses physically swept
+    """Capture a text index's (BM25 or trigram) current position on
+    its mutation timeline — the handle :func:`bm25_topk_from_index`,
+    :func:`substring_search` and :func:`fuzzy_similarity_search`
+    ``as_of=`` replay. Every mutation consumes one SLOT: appends take
+    the generation number they stamp into their rows, deletes take a
+    slot recorded as ``_slot`` on their tombstones — so two states that
+    differ only by a delete have DIFFERENT markers and as-of ordering
+    is exact (reference parity: select_version / sum_version,
+    reference lstore/query.py:125,220). ``epoch`` counts compactions: a
+    marker from before the last compaction addresses physically swept
     history and raises :class:`IndexHistoryTruncatedError` when
     replayed. Metadata-plane only — no Spark job."""
-    meta = _read_meta(index_dir)
-    if meta["n_batches"] <= 0:
-        raise ValueError("index has no committed mutations to mark")
-    return {
-        "epoch": int(meta.get("epoch", 0)),
-        "batch": meta["n_batches"] - 1,
-    }
-
-
-def _validate_asof(meta: dict, as_of) -> int:
-    """Resolve an as-of marker against the live sidecar: wrong shape
-    and out-of-range batches are caller errors (ValueError); an epoch
-    mismatch is truncated history (compaction swept it) and raises
-    the honest retention error."""
-    try:
-        epoch = int(as_of["epoch"])
-        batch = int(as_of["batch"])
-    except (TypeError, KeyError, ValueError) as exc:
-        raise ValueError(
-            "as_of must be a marker from index_asof_marker(): a dict "
-            f"with integer 'epoch' and 'batch' keys, got {as_of!r}"
-        ) from exc
-    cur = int(meta.get("epoch", 0))
-    if epoch != cur:
-        raise IndexHistoryTruncatedError(
-            f"as-of marker epoch {epoch} != index epoch {cur}: a "
-            "compaction since the marker was captured physically "
-            "removed the tombstones and dead generations its replay "
-            "needs — as-of history only reaches back to the last "
-            "compaction"
-        )
-    if not (0 <= batch < meta["n_batches"]):
-        raise ValueError(
-            f"as-of batch {batch} outside the index's committed "
-            f"range [0, {meta['n_batches']})"
-        )
-    return batch
-
-
-def _bm25_asof_frames(spark, index_dir: str, upto: int):
-    """(postings, doclens) reconstructed AS OF mutation slot
-    ``upto``: generations written after the slot are filtered out,
-    and only tombstones whose mutation slot is <= the marker apply —
-    a delete issued after the marker cannot reach back and a doc
-    deleted before it stays dead. Legacy tombstones (written before
-    ``_slot`` existed) fall back to ``_upto`` as their slot: exact
-    for every marker not captured between a same-level append and
-    delete, and conservative (the delete folds in) for one captured
-    there. Tombstones read with mergeSchema so pre-upgrade rows
-    coexist with slotted ones."""
-    import os
-
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-    if "_batch" not in postings.columns:  # pre-r12 layout
-        postings = postings.withColumn("_batch", F.lit(0))
-    doclens = spark.read.parquet(os.path.join(index_dir, "doclens"))
-    if "_batch" not in doclens.columns:  # pre-r12 layout
-        doclens = doclens.withColumn("_batch", F.lit(0))
-    postings = postings.where(F.col("_batch") <= F.lit(upto))
-    doclens = doclens.where(F.col("_batch") <= F.lit(upto))
-    tomb = None
-    tpath = os.path.join(index_dir, "tombstones")
-    if os.path.isdir(tpath):
-        tomb = spark.read.option("mergeSchema", "true").parquet(tpath)
-        slot = (
-            F.coalesce(F.col("_slot"), F.col("_upto"))
-            if "_slot" in tomb.columns
-            else F.col("_upto")
-        )
-        tomb = tomb.where(slot <= F.lit(upto))
-    return _tombstone_filtered(postings, tomb), _tombstone_filtered(
-        doclens, tomb
-    )
-
-
-def _trigram_asof_frames(spark, index_dir: str, upto: int):
-    """(postings, stats) reconstructed AS OF mutation slot ``upto`` —
-    the trigram twin of :func:`_bm25_asof_frames`. Postings are
-    generation- and slot-filtered; STATS stay the live table: they
-    are planner input only (rarest-gram choice, scan-fallback
-    trigger), never correctness, and between compactions they only
-    GROW — so a gram absent from live stats was absent at every
-    marker of the current epoch, which keeps the df=0 short-circuit
-    sound for as-of reads."""
-    import os
-
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-    if "_batch" not in postings.columns:  # pre-r12 layout
-        postings = postings.withColumn("_batch", F.lit(0))
-    postings = postings.where(F.col("_batch") <= F.lit(upto))
-    tomb = trigram_tombstones(spark, index_dir)
-    if tomb is not None:
-        slot = (
-            F.coalesce(F.col("_slot"), F.col("_upto"))
-            if "_slot" in tomb.columns
-            else F.col("_upto")
-        )
-        tomb = tomb.where(slot <= F.lit(upto))
-    postings = _tombstone_filtered(postings, tomb)
-    stats = (
-        spark.read.parquet(os.path.join(index_dir, "stats"))
-        .groupBy("gram")
-        .agg(F.sum("df").alias("df"))
-    )
-    return postings, stats
+    return BM25.asof_marker(index_dir)
 
 
 def write_trigram_index(
@@ -349,10 +316,8 @@ def write_trigram_index(
     :func:`delete_from_trigram_index` / :func:`update_trigram_index`)
     and the staleness counter triggers compaction
     (:func:`compact_trigram_index`) past a tombstone fraction."""
-    import os
-
-    meta = _read_meta(index_dir)
-    _reserve(index_dir, meta)  # claims the batch id: loser aborts here
+    meta = TRIGRAM.read_meta(index_dir)
+    TRIGRAM.reserve(index_dir, meta)  # claims the batch id: loser aborts here
     batch = meta["n_batches"]
     # Gram-extract ONCE per batch (r14 optimization): the old tree
     # re-ran the shingling in repartitionByRange's sampling pass and
@@ -365,16 +330,9 @@ def write_trigram_index(
         .persist()
     )
     try:
-        # CLUSTER BY GRAM: range-partition + sort so every posting file
-        # covers a narrow gram range — the query's gram IN-list then
-        # prunes at the parquet row-group/file level instead of scanning
-        # the whole posting table (at sf10 the unclustered posting scan
-        # was BIGGER than the corpus scan it was supposed to avoid —
-        # measured in tools/r11_ops_probe.py).
-        clustered = postings.repartitionByRange(
-            max(_default_parallelism(postings), 8), "gram"
-        ).sortWithinPartitions("gram")
-        clustered.write.mode("append").parquet(os.path.join(index_dir, "postings"))
+        TRIGRAM.write(
+            "postings", postings, os.path.join(index_dir, "postings"), "append"
+        )
         trigram_stats(postings.drop("_batch")).write.mode("append").parquet(
             os.path.join(index_dir, "stats")
         )
@@ -390,8 +348,7 @@ def write_trigram_index(
     # additive doc count for query-time selectivity planning
     meta["n_docs"] += docs.count()
     meta["n_batches"] = batch + 1
-    _refresh_markers(index_dir, meta, ("postings", "docids", "tombstones"))
-    _write_meta(index_dir, meta)
+    TRIGRAM.publish(index_dir, meta)
 
 
 def append_trigram_index(
@@ -427,20 +384,18 @@ def open_trigram_index(spark, index_dir: str):
     docs' counts until compaction (doc-frequency OVERestimates only
     make the planner fall back to the honest scan earlier, never miss
     a match)."""
-    import os
+    return _trigram_frames(spark, index_dir)
 
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-    if "_batch" not in postings.columns:  # pre-r12 index layout
-        postings = postings.withColumn("_batch", F.lit(0))
-    tomb = trigram_tombstones(spark, index_dir)
-    if tomb is not None:
-        idc = [c for c in postings.columns if c not in ("gram", "_batch")][0]
-        postings = postings.join(
-            F.broadcast(tomb),
-            on=(F.col(idc) == F.col("_dead_id"))
-            & (F.col("_batch") <= F.col("_upto")),
-            how="left_anti",
-        )
+
+def _trigram_frames(spark, index_dir: str, as_of: dict | None = None):
+    """(postings, stats): postings live — or as of the marker — and
+    STATS the live table either way: they are planner input only
+    (rarest-gram choice, scan-fallback trigger), never correctness,
+    and between compactions they only GROW — so a gram absent from
+    live stats was absent at every marker of the current epoch, which
+    keeps the df=0 short-circuit sound for as-of reads."""
+    meta = TRIGRAM.read_meta(index_dir)
+    (postings,) = TRIGRAM.live(spark, index_dir, meta, "postings", as_of=as_of)
     stats = (
         spark.read.parquet(os.path.join(index_dir, "stats"))
         .groupBy("gram")
@@ -455,15 +410,7 @@ def trigram_tombstones(spark, index_dir: str) -> DataFrame | None:
     its ``_batch`` generation is <= ``_upto`` — so an UPDATED document
     kills only its pre-update postings while the re-indexed text stays
     live."""
-    import os
-
-    path = os.path.join(index_dir, "tombstones")
-    if not os.path.isdir(path):
-        return None
-    # mergeSchema: pre-r14 rows (no _slot) coexist with slotted ones;
-    # the table is small by the compaction contract, so the footer
-    # union costs nothing that matters
-    return spark.read.option("mergeSchema", "true").parquet(path)
+    return TRIGRAM.tombstones(spark, index_dir, {})
 
 
 def _fully_dead_ids(spark, index_dir: str) -> DataFrame | None:
@@ -474,88 +421,26 @@ def _fully_dead_ids(spark, index_dir: str) -> DataFrame | None:
     document appears among the tombstones, and anti-joining a scan on
     id equality alone would permanently drop it from exact-claiming
     ``contains()`` results (ADVICE r13 — the bug the index strategy
-    never had, because :func:`_tombstone_filtered` bounds the kill by
-    generation). Membership comes from the docids table (postings-
-    derived for pre-r13 layouts), pruned to tombstoned ids FIRST via a
-    broadcast semi-join, so the whole computation is O(tombstoned
-    ids) — small by the compaction contract — and the returned frame
-    is a subset of the tombstone ids, so it broadcasts. Returns None
-    when the index has no tombstones."""
-    import os
-
-    tomb = trigram_tombstones(spark, index_dir)
+    never had, because the live filter bounds the kill by
+    generation). Membership comes from the docids table, pruned to
+    tombstoned ids FIRST via a broadcast semi-join, so the whole
+    computation is O(tombstoned ids) — small by the compaction
+    contract — and the returned frame is a subset of the tombstone
+    ids, so it broadcasts. Returns None when the index has no
+    tombstones."""
+    tomb = TRIGRAM.tombstones(spark, index_dir, {})
     if tomb is None:
         return None
     dead = tomb.select("_dead_id").distinct()
-    path = os.path.join(index_dir, "docids")
-    if os.path.isdir(path):
-        members = spark.read.parquet(path)
-        if "_batch" not in members.columns:
-            members = members.withColumn("_batch", F.lit(0))
-    else:  # pre-r13 trigram layout: derive membership from postings
-        p = spark.read.parquet(os.path.join(index_dir, "postings"))
-        if "_batch" not in p.columns:
-            p = p.withColumn("_batch", F.lit(0))
-        pid = [c for c in p.columns if c not in ("gram", "_batch")][0]
-        members = p.select(F.col(pid), "_batch").distinct()
-    mcol = [c for c in members.columns if c not in ("_batch", "dl")][0]
+    members = spark.read.parquet(os.path.join(index_dir, "docids"))
+    mcol = TRIGRAM.id_col({}, members)
     tombed = members.join(
         F.broadcast(dead), on=F.col(mcol) == F.col("_dead_id"), how="left_semi"
     )
-    live = (
-        _tombstone_filtered(tombed, tomb).select(F.col(mcol)).distinct()
-    )
+    live = TRIGRAM.filtered(tombed, tomb, mcol).select(F.col(mcol)).distinct()
     return dead.join(
         live, on=F.col("_dead_id") == F.col(mcol), how="left_anti"
     )
-
-
-def _live_matched_ids(
-    spark, index_dir: str, ids: DataFrame, member_sub: str, out_col: str
-) -> DataFrame:
-    """The subset of requested ``ids`` that are LIVE members of the
-    index (present in the membership table, not already tombstoned) —
-    the set whose cardinality the staleness/selectivity counters must
-    move by. Deleting unknown or already-deleted ids is a no-op, not
-    a counter skew (ADVICE r12: unconditional ``n_docs -= n`` drove
-    the BM25 idf denominator and dead_fraction wrong, and could go
-    negative). ``member_sub`` is 'docids' (trigram) or 'doclens'
-    (BM25); legacy trigram indexes without a docids table fall back
-    to the postings' distinct ids (one pruned-column scan)."""
-    import os
-
-    idc = ids.columns[0]
-    path = os.path.join(index_dir, member_sub)
-    if not os.path.isdir(path) and not os.path.isdir(
-        os.path.join(index_dir, "postings")
-    ):
-        # no index yet (first stream batch routed through update
-        # semantics): nothing can match
-        return ids.select(F.col(idc).alias(out_col)).where(F.lit(False))
-    if os.path.isdir(path):
-        members = spark.read.parquet(path)
-        if "_batch" not in members.columns:
-            members = members.withColumn("_batch", F.lit(0))
-    else:  # pragma: no cover - pre-r13 trigram layout
-        p = spark.read.parquet(os.path.join(index_dir, "postings"))
-        pid = [c for c in p.columns if c not in ("gram", "_batch")][0]
-        members = p.select(pid, "_batch").distinct()
-    mcol = [c for c in members.columns if c not in ("_batch", "dl")][0]
-    live = _tombstone_filtered(
-        members.select(F.col(mcol), F.col("_batch")),
-        trigram_tombstones(spark, index_dir),
-    )
-    matched = (
-        live.join(
-            F.broadcast(ids.select(F.col(idc).alias(mcol))), on=mcol
-        )
-        .select(F.col(mcol).alias(out_col))
-        .distinct()
-    )
-    # the caller APPENDS this frame into the tombstones dir its own
-    # lineage reads — materialize (O(deleted ids)) so the write job
-    # can't re-list the directory it is writing into
-    return matched.localCheckpoint(eager=True)
 
 
 def delete_from_trigram_index(ids: DataFrame, index_dir: str) -> int:
@@ -569,36 +454,7 @@ def delete_from_trigram_index(ids: DataFrame, index_dir: str) -> int:
     (unknown / already-deleted ids are a no-op), so n_docs/n_dead
     track reality under repeated or speculative deletes. Returns the
     number of documents actually removed."""
-    import os
-
-    spark = ids.sparkSession
-    meta = _read_meta(index_dir)
-    _reserve(index_dir, meta)
-    matched = _live_matched_ids(spark, index_dir, ids, "docids", "_dead_id")
-    n = matched.count()
-    if n == 0:
-        _abandon(index_dir, meta)
-        return 0
-    # the delete consumes its own mutation SLOT (r14): _upto still
-    # kills every landed generation, _slot records WHEN, and
-    # n_batches advances so as-of markers order deletes exactly
-    slot = meta["n_batches"]
-    (
-        matched.select(
-            F.col("_dead_id"),
-            F.lit(slot - 1).alias("_upto"),
-            F.lit(slot).alias("_slot"),
-        )
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(os.path.join(index_dir, "tombstones"))
-    )
-    meta["n_batches"] = slot + 1
-    meta["n_dead"] += n
-    meta["n_docs"] -= n
-    _refresh_markers(index_dir, meta, ("postings", "docids", "tombstones"))
-    _write_meta(index_dir, meta)
-    return n
+    return TRIGRAM.delete(ids, index_dir)
 
 
 def update_trigram_index(
@@ -622,14 +478,7 @@ def update_trigram_index(
 def trigram_index_staleness(index_dir: str) -> dict:
     """Dead-posting pressure report: live docs, tombstoned docs, and
     the dead fraction that drives the compaction trigger."""
-    meta = _read_meta(index_dir)
-    total = meta["n_docs"] + meta["n_dead"]
-    return {
-        "n_docs": meta["n_docs"],
-        "n_dead": meta["n_dead"],
-        "n_batches": meta["n_batches"],
-        "dead_fraction": (meta["n_dead"] / total) if total else 0.0,
-    }
+    return TRIGRAM.staleness(index_dir)
 
 
 def compact_trigram_index(
@@ -642,56 +491,11 @@ def compact_trigram_index(
     threshold: rewrite the live postings (gram-clustered, generation
     reset), rebuild stats from them (dead doc-frequencies drop out, so
     the planner's selectivity estimates are honest again), drop the
-    tombstone table, and swap directories atomically-enough (two
-    renames; a crash between them is healed by re-running — the new
-    layout is complete before the first rename). The trigger runs on
-    the metadata counter alone: below threshold this is a zero-job
-    no-op, the maintain-cadence shape shared with the ANN staleness
-    gate."""
-    import os
-    import shutil
-    import uuid
-
-    rep = trigram_index_staleness(index_dir)
-    if not force and rep["dead_fraction"] < tombstone_fraction:
-        return {**rep, "compacted": False}
-    meta = _read_meta(index_dir)
-    _reserve(index_dir, meta)  # a racing upsert/delete aborts cleanly
-    postings, _stats = open_trigram_index(spark, index_dir)  # tombstone-filtered
-    token = uuid.uuid4().hex[:8]
-    fresh_p = os.path.join(index_dir, f"postings_new_{token}")
-    fresh_s = os.path.join(index_dir, f"stats_new_{token}")
-    live = postings.withColumn("_batch", F.lit(0))
-    (
-        live.repartitionByRange(max(_default_parallelism(live), 8), "gram")
-        .sortWithinPartitions("gram")
-        .write.mode("overwrite")
-        .parquet(fresh_p)
-    )
-    trigram_stats(spark.read.parquet(fresh_p).drop("_batch")).write.mode(
-        "overwrite"
-    ).parquet(fresh_s)
-    swaps = [("postings", fresh_p), ("stats", fresh_s)]
-    if os.path.isdir(os.path.join(index_dir, "docids")):
-        docids = spark.read.parquet(os.path.join(index_dir, "docids"))
-        live_ids = _tombstone_filtered(docids, trigram_tombstones(spark, index_dir))
-        fresh_d = os.path.join(index_dir, f"docids_new_{token}")
-        live_ids.withColumn("_batch", F.lit(0)).write.mode("overwrite").parquet(
-            fresh_d
-        )
-        swaps.append(("docids", fresh_d))
-    for sub, fresh in swaps:
-        old = os.path.join(index_dir, f"{sub}_old_{token}")
-        os.rename(os.path.join(index_dir, sub), old)
-        os.rename(fresh, os.path.join(index_dir, sub))
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(os.path.join(index_dir, "tombstones"), ignore_errors=True)
-    meta["n_dead"] = 0
-    meta["n_batches"] = 1
-    meta["epoch"] = int(meta.get("epoch", 0)) + 1  # history swept
-    _refresh_markers(index_dir, meta, ("postings", "docids", "tombstones"))
-    _write_meta(index_dir, meta)
-    return {**rep, "compacted": True}
+    tombstone table, and swap the fresh tree in whole
+    (:meth:`~._idxmeta.IndexFamily.compact`). The trigger runs on
+    the sidecar alone: below threshold this is a zero-job no-op, the
+    maintain-cadence shape shared with the ANN index."""
+    return TRIGRAM.compact(spark, index_dir, tombstone_fraction, force)
 
 
 def trigram_index_repair(spark, index_dir: str) -> dict:
@@ -702,106 +506,23 @@ def trigram_index_repair(spark, index_dir: str) -> dict:
     the ANN sidecar's ``ivf_filter_histogram_repair`` discipline).
 
     Detection is metadata-plane: every mutation records the footer
-    row counts of postings/docids/tombstones in the sidecar
-    (:func:`_refresh_markers`); this compares those markers against
-    the actual footers (no Spark job, no data bytes). On mismatch the
-    sidecar LIES, and everything it claims is re-derived from
-    storage: stats rebuilt from the raw postings (a torn
-    postings-landed/stats-missing append would otherwise make
-    substring_search's df=0 short-circuit a FALSE NEGATIVE for grams
-    only in the torn batch), n_batches from max(_batch)+1, and
-    n_docs/n_dead from the live-vs-raw docids counts. Runs on the
-    maintenance cadence (tools/maintain.py) and is idempotent.
-    Returns ``{"repaired": bool, ...markers}``."""
-    import os
-    import shutil
-    import uuid
-
-    meta = _read_meta(index_dir)
-    actual = {
-        sub: _parquet_rows(os.path.join(index_dir, sub))
-        for sub in ("postings", "docids", "tombstones")
-    }
-    recorded = {sub: int(meta.get(f"{sub}_rows", -1)) for sub in actual}
-    if recorded == actual:
-        return {"repaired": False, **{f"{k}_rows": v for k, v in actual.items()}}
-    if not os.path.isdir(os.path.join(index_dir, "postings")):
-        # first-batch crash window: the reservation marker landed but
-        # no parquet did (ADVICE r13 — reading the missing dir raised
-        # on every replay, so the crash-anywhere convergence claim
-        # failed exactly at batch 0). An absent postings dir means NO
-        # write ever completed its first step, so the true state is
-        # the empty index: zero the counters, certify the (all-empty)
-        # markers, and let the replay apply cleanly.
-        meta["n_docs"] = 0
-        meta["n_dead"] = 0
-        meta["n_batches"] = 0
-        _refresh_markers(index_dir, meta, ("postings", "docids", "tombstones"))
-        _write_meta(index_dir, meta, heal=True)
-        return {
-            "repaired": True,
-            **{f"{k}_rows": meta[f"{k}_rows"] for k in actual},
-        }
-    raw = spark.read.parquet(os.path.join(index_dir, "postings"))
-    if "_batch" not in raw.columns:  # pragma: no cover - pre-r12 layout
-        raw = raw.withColumn("_batch", F.lit(0))
-    pid = [c for c in raw.columns if c not in ("gram", "_batch")][0]
-    # stats rebuilt from what actually landed (per-batch deltas fold
-    # to the same sum, so a single-batch rewrite is equivalent)
-    token = uuid.uuid4().hex[:8]
-    fresh_s = os.path.join(index_dir, f"stats_new_{token}")
-    trigram_stats(raw.drop("_batch")).write.mode("overwrite").parquet(fresh_s)
-    if os.path.isdir(os.path.join(index_dir, "stats")):
-        old = os.path.join(index_dir, f"stats_old_{token}")
-        os.rename(os.path.join(index_dir, "stats"), old)
-        os.rename(fresh_s, os.path.join(index_dir, "stats"))
-        shutil.rmtree(old, ignore_errors=True)
-    else:  # torn before the first stats delta ever landed
-        os.rename(fresh_s, os.path.join(index_dir, "stats"))
-    tomb = trigram_tombstones(spark, index_dir)
-    if os.path.isdir(os.path.join(index_dir, "docids")):
-        members = spark.read.parquet(os.path.join(index_dir, "docids"))
-    else:  # pre-r13 layout, or torn before the docids append landed:
-        # membership is derivable from the postings that DID land
-        members = raw.select(F.col(pid), "_batch").distinct()
-        members.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"docids_new_{token}")
-        )
-        os.rename(
-            os.path.join(index_dir, f"docids_new_{token}"),
-            os.path.join(index_dir, "docids"),
-        )
-        members = spark.read.parquet(os.path.join(index_dir, "docids"))
-    n_raw = members.select(members.columns[0]).distinct().count()
-    n_live = (
-        _tombstone_filtered(members, tomb)
-        .select(members.columns[0])
-        .distinct()
-        .count()
-    )
-    mx = raw.agg(F.max("_batch")).first()[0]
-    meta["n_docs"] = int(n_live)
-    meta["n_dead"] = int(n_raw - n_live)
-    meta["n_batches"] = int(mx) + 1 if mx is not None else 0
-    # deletes consume mutation slots (r14): never shrink the timeline
-    # below a consumed slot (see bm25_index_repair)
-    if tomb is not None and "_slot" in tomb.columns:
-        mx_t = tomb.agg(F.max("_slot")).first()[0]
-        if mx_t is not None:
-            meta["n_batches"] = max(meta["n_batches"], int(mx_t) + 1)
-    _refresh_markers(index_dir, meta, ("postings", "docids", "tombstones"))
-    _write_meta(index_dir, meta, heal=True)
-    return {"repaired": True, **{f"{k}_rows": meta[f"{k}_rows"] for k in actual}}
+    row counts of postings/docids/tombstones in the sidecar; this
+    compares those markers against the actual footers (no Spark job,
+    no data bytes). On mismatch the sidecar LIES, and everything it
+    claims is re-derived from storage
+    (:meth:`~._idxmeta.IndexFamily.repair`): membership rows for
+    orphan generations, stats rebuilt from the raw postings, n_docs
+    from the live docids, n_dead from the tombstones, n_batches past
+    every generation and delete slot. Runs on the maintenance cadence
+    (tools/maintain.py) and is idempotent. Returns
+    ``{"repaired": bool, ...markers}``."""
+    return TRIGRAM.repair(spark, index_dir)
 
 
 def trigram_index_ndocs(index_dir: str) -> int:
     """Total docs indexed (additive across appends) — the corpus-size
     denominator for query-time selectivity planning."""
-    import json
-    import os
-
-    with open(os.path.join(index_dir, "_meta.json")) as f:
-        return int(json.load(f)["n_docs"])
+    return TRIGRAM.read_meta(index_dir)["n_docs"]
 
 
 def substring_search(
@@ -859,10 +580,7 @@ def substring_search(
     if as_of is not None:
         if index_dir is None:
             raise ValueError("as_of requires index_dir (durable index)")
-        upto = _validate_asof(_read_meta(index_dir), as_of)
-        postings, stats = _trigram_asof_frames(
-            docs.sparkSession, index_dir, upto
-        )
+        postings, stats = _trigram_frames(docs.sparkSession, index_dir, as_of)
         if n_docs is None:
             n_docs = trigram_index_ndocs(index_dir)
     elif index_dir is not None:
@@ -994,10 +712,8 @@ def write_bm25_index(
     rows, counters add. Re-ingesting the same doc id double-counts
     (the Parquet-append contract shared with the ANN index): dedup
     upstream or route through :func:`update_bm25_index`."""
-    import os
-
-    meta = _read_meta(index_dir)
-    _reserve(index_dir, meta)  # claims the batch id: loser aborts here
+    meta = BM25.read_meta(index_dir)
+    BM25.reserve(index_dir, meta)  # claims the batch id: loser aborts here
     batch = meta["n_batches"]
     toks = _bm25_terms(docs, id_col, text_col)
     # Tokenize ONCE per batch (r14 optimization): the old plan tree
@@ -1018,16 +734,8 @@ def write_bm25_index(
     try:
         doclen = tfs.groupBy(id_col).agg(F.sum("tf").alias("dl"))
         postings = tfs.join(doclen, on=id_col).withColumn("_batch", F.lit(batch))
-        # term-clustered like the trigram postings: the query's term
-        # IN-list prunes at parquet stats level instead of scanning the
-        # whole posting table
-        (
-            postings.repartitionByRange(
-                max(_default_parallelism(postings), 8), "term"
-            )
-            .sortWithinPartitions("term")
-            .write.mode("append")
-            .parquet(os.path.join(index_dir, "postings"))
+        BM25.write(
+            "postings", postings, os.path.join(index_dir, "postings"), "append"
         )
         doclen.withColumn("_batch", F.lit(batch)).write.mode("append").parquet(
             os.path.join(index_dir, "doclens")
@@ -1041,8 +749,7 @@ def write_bm25_index(
     meta["n_docs_dl"] = int(meta.get("n_docs_dl", 0)) + int(agg["n"] or 0)
     meta["total_dl"] = int(meta.get("total_dl", 0)) + int(agg["t"] or 0)
     meta["n_batches"] = batch + 1
-    _refresh_markers(index_dir, meta, ("postings", "doclens", "tombstones"))
-    _write_meta(index_dir, meta)
+    BM25.publish(index_dir, meta)
 
 
 def append_bm25_index(
@@ -1055,33 +762,13 @@ def append_bm25_index(
     write_bm25_index(new_docs, index_dir, id_col, text_col)
 
 
-def _tombstone_filtered(df: DataFrame, tomb) -> DataFrame:
-    if tomb is None:
-        return df
-    idc = [
-        c for c in df.columns if c not in ("term", "gram", "tf", "dl", "_batch")
-    ][0]
-    return df.join(
-        F.broadcast(tomb),
-        on=(F.col(idc) == F.col("_dead_id")) & (F.col("_batch") <= F.col("_upto")),
-        how="left_anti",
-    )
-
-
 def open_bm25_index(spark, index_dir: str):
     """(postings, doclens), both tombstone-filtered — a search through
     this handle can never score a deleted document or a stale
     pre-update posting."""
-    import os
-
-    tomb = trigram_tombstones(spark, index_dir)
-    postings = _tombstone_filtered(
-        spark.read.parquet(os.path.join(index_dir, "postings")), tomb
+    return tuple(
+        BM25.live(spark, index_dir, BM25.read_meta(index_dir), "postings", "doclens")
     )
-    doclens = _tombstone_filtered(
-        spark.read.parquet(os.path.join(index_dir, "doclens")), tomb
-    )
-    return postings, doclens
 
 
 def delete_from_bm25_index(ids: DataFrame, index_dir: str) -> int:
@@ -1101,44 +788,7 @@ def delete_from_bm25_index(ids: DataFrame, index_dir: str) -> int:
     is treated as not-present; its build-time n_docs contribution is
     the one drift :func:`bm25_index_repair` re-derives rather than
     this path. Returns the number of documents actually removed."""
-    import os
-
-    spark = ids.sparkSession
-    meta = _read_meta(index_dir)
-    _reserve(index_dir, meta)
-    matched = _live_matched_ids(spark, index_dir, ids, "doclens", "_dead_id")
-    n = matched.count()
-    if n == 0:
-        _abandon(index_dir, meta)
-        return 0
-    _p, doclens = open_bm25_index(spark, index_dir)
-    dcol = [c for c in doclens.columns if c not in ("dl", "_batch")][0]
-    hit = doclens.join(
-        F.broadcast(matched.select(F.col("_dead_id").alias(dcol))), on=dcol
-    ).agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")).first()
-    # the delete consumes its own mutation SLOT (r14): _upto still
-    # kills every landed generation, _slot records WHEN — so an as-of
-    # marker can order a delete against appends at the same level,
-    # and n_batches advances so the next marker differs
-    slot = meta["n_batches"]
-    (
-        matched.select(
-            F.col("_dead_id"),
-            F.lit(slot - 1).alias("_upto"),
-            F.lit(slot).alias("_slot"),
-        )
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(os.path.join(index_dir, "tombstones"))
-    )
-    meta["n_batches"] = slot + 1
-    meta["n_docs"] -= n
-    meta["n_docs_dl"] = int(meta.get("n_docs_dl", 0)) - int(hit["n"] or 0)
-    meta["total_dl"] = int(meta.get("total_dl", 0)) - int(hit["t"] or 0)
-    meta["n_dead"] += n
-    _refresh_markers(index_dir, meta, ("postings", "doclens", "tombstones"))
-    _write_meta(index_dir, meta)
-    return n
+    return BM25.delete(ids, index_dir)
 
 
 def update_bm25_index(
@@ -1153,6 +803,64 @@ def update_bm25_index(
     n = delete_from_bm25_index(docs.select(id_col), index_dir)
     write_bm25_index(docs, index_dir, id_col, text_col)
     return n
+
+
+def _bm25_scoring(
+    spark, index_dir: str, terms: list, k1: float, b: float, as_of
+):
+    """What every BM25 index query shares: the postings of ``terms``
+    (term IN-list -> clustered-file pruning), live or as of a marker,
+    the id column, the idf frame (df = one count-distinct over the
+    pruned rows, live-exact under append/delete) and the per-posting
+    score column. ``n_docs``/avgdl are the sidecar scalars on the live
+    path (zero jobs); as of a marker they are re-derived from the
+    as-of doclens in one slim aggregate (the repair's re-derivation,
+    sharing its boundary: docs that tokenized to nothing have no
+    postings and can never be scored, so only the idf denominator
+    shifts — the shift a from-scratch rebuild would produce)."""
+    meta = BM25.read_meta(index_dir)
+    if as_of is None:
+        (postings,) = BM25.live(spark, index_dir, meta, "postings")
+        n_docs = meta["n_docs"]
+        n_dl = int(meta.get("n_docs_dl", 0))
+        total_dl = int(meta.get("total_dl", 0))
+    else:
+        postings, doclens = BM25.live(
+            spark, index_dir, meta, "postings", "doclens", as_of=as_of
+        )
+        agg = doclens.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
+        ).first()
+        n_docs = n_dl = int(agg["n"] or 0)
+        total_dl = int(agg["t"] or 0)
+    avgdl = (total_dl / n_dl) if n_dl else 1.0
+    # The pruned per-term postings feed both the live-exact df
+    # aggregate and the scoring join, so the pruned posting files are
+    # read twice. Deliberately NOT persisted (r15 probe): the pruned
+    # set is query-term-sized at any corpus scale, and a plan-scoped
+    # persist measured WORSE on every work proxy (tasks 65 -> 125,
+    # input 240 KB -> 440 KB, task CPU ~390 -> ~700 ms at sf0.1) —
+    # cache scan overhead exceeds the second pruned read.
+    p = postings.where(F.col("term").isin(terms))
+    idc = BM25.id_col(meta, p)
+    idf = (
+        p.groupBy("term")
+        .agg(F.count_distinct(F.col(idc)).alias("df"))
+        .select(
+            "term",
+            F.log(
+                F.lit(1.0)
+                + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5))
+            ).alias("idf"),
+        )
+    )
+    score = (
+        F.col("idf")
+        * (F.col("tf") * (k1 + 1))
+        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(float(avgdl))))
+    )
+    return p, idc, idf, score
 
 
 def bm25_topk_from_index(
@@ -1178,64 +886,17 @@ def bm25_topk_from_index(
     appends are generation-filtered out, later deletes/updates are
     slot-filtered out of the tombstones, and a doc dead at the marker
     stays dead. The scoring scalars are re-derived from the as-of
-    doclens in one slim aggregate (the :func:`bm25_index_repair`
-    re-derivation, sharing its honest boundary: docs whose text
-    tokenized to nothing are invisible to it — they have no postings
-    and can never be scored, so only the idf denominator shifts, the
-    same shift a from-scratch rebuild would produce). Time travel is
-    the audit path: the hot live path keeps its zero-job sidecar
-    scalars and its plan is untouched. Markers from before the last
-    compaction raise :class:`IndexHistoryTruncatedError` — swept
-    history, the CDC-retention contract."""
-    terms = [t.lower() for t in query_terms]
-    meta = _read_meta(index_dir)
-    if as_of is not None:
-        upto = _validate_asof(meta, as_of)
-        postings, doclens = _bm25_asof_frames(spark, index_dir, upto)
-        agg = doclens.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
-        ).first()
-        n_docs = int(agg["n"] or 0)
-        avgdl = (int(agg["t"] or 0) / n_docs) if n_docs else 1.0
-    else:
-        n_docs = meta["n_docs"]
-        n_dl = int(meta.get("n_docs_dl", 0))
-        avgdl = (int(meta.get("total_dl", 0)) / n_dl) if n_dl else 1.0
-        postings, _d = open_bm25_index(spark, index_dir)
-    # The pruned per-term postings feed both the live-exact df
-    # aggregate and the scoring join, so the pruned posting files are
-    # read twice. Deliberately NOT persisted (r15 probe): the pruned
-    # set is query-term-sized at any corpus scale, and a plan-scoped
-    # persist measured WORSE on every work proxy (tasks 65 -> 125,
-    # input 240 KB -> 440 KB, task CPU ~390 -> ~700 ms at sf0.1) —
-    # cache scan overhead exceeds the second pruned read.
-    p = postings.where(F.col("term").isin(terms))
-    idc = [c for c in p.columns if c not in ("term", "tf", "dl", "_batch")][0]
-    idf = (
-        p.groupBy("term")
-        .agg(F.count_distinct(F.col(idc)).alias("df"))
-        .select(
-            "term",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ).alias("idf"),
-        )
+    doclens (:func:`_bm25_scoring`). Time travel is the audit path:
+    the hot live path keeps its zero-job sidecar scalars and its plan
+    is untouched. Markers from before the last compaction raise
+    :class:`IndexHistoryTruncatedError` — swept history, the
+    CDC-retention contract."""
+    p, idc, idf, score = _bm25_scoring(
+        spark, index_dir, [t.lower() for t in query_terms], k1, b, as_of
     )
     scored = (
         p.join(F.broadcast(idf), on="term")
-        .select(
-            F.col(idc),
-            (
-                F.col("idf")
-                * (F.col("tf") * (k1 + 1))
-                / (
-                    F.col("tf")
-                    + k1 * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))
-                )
-            ).alias("_s"),
-        )
+        .select(F.col(idc), score.alias("_s"))
         .groupBy(idc)
         .agg(F.round(F.sum("_s"), round_to).alias("bm25"))
     )
@@ -1272,77 +933,31 @@ def bm25_topk_batch_from_index(
         )
     from pyspark.sql import Window
 
-    meta = _read_meta(index_dir)
-    if as_of is not None:
-        # the batch twin of the single-query as_of: one marker, one
-        # as-of reconstruction, shared by every query in the batch
-        upto = _validate_asof(meta, as_of)
-        postings, _asof_dl = _bm25_asof_frames(spark, index_dir, upto)
-        _agg = _asof_dl.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
-        ).first()
-        n_docs = int(_agg["n"] or 0)
-        avgdl = (int(_agg["t"] or 0) / n_docs) if n_docs else 1.0
-    else:
-        n_docs = meta["n_docs"]
-        n_dl = int(meta.get("n_docs_dl", 0))
-        avgdl = (int(meta.get("total_dl", 0)) / n_dl) if n_dl else 1.0
-        postings = None
     # q_id keeps the caller's key type, the doc id keeps the index's
     # (ADVICE r13: the old int(qid) coercion and hardcoded 'long'
     # schemas broke string-id batches the single-query operator
-    # accepts)
+    # accepts); one marker, one as-of reconstruction, shared by every
+    # query in the batch
     pairs = [
         (qid, t.lower()) for qid, terms in queries.items() for t in terms
     ]
-    if postings is None:
-        postings, _d = open_bm25_index(spark, index_dir)
-    idc = [
-        c for c in postings.columns if c not in ("term", "tf", "dl", "_batch")
-    ][0]
+    p, idc, idf, score = _bm25_scoring(
+        spark, index_dir, sorted({t for _q, t in pairs}), k1, b, as_of
+    )
     if not pairs:
         qid_type = "string" if any(
             isinstance(q, str) for q in queries
         ) else "bigint"
-        return (
-            postings.select(F.col(idc))
-            .where(F.lit(False))
-            .select(
-                F.lit(None).cast(qid_type).alias("q_id"),
-                F.col(idc),
-                F.lit(0.0).alias("bm25"),
-            )
+        return p.where(F.lit(False)).select(
+            F.lit(None).cast(qid_type).alias("q_id"),
+            F.col(idc),
+            F.lit(0.0).alias("bm25"),
         )
-    union_terms = sorted({t for _q, t in pairs})
-    p = postings.where(F.col("term").isin(union_terms))
-    idf = (
-        p.groupBy("term")
-        .agg(F.count_distinct(F.col(idc)).alias("df"))
-        .select(
-            "term",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ).alias("idf"),
-        )
-    )
     qt = spark.createDataFrame(pairs, ["q_id", "term"])  # q_id inferred
     scored = (
         p.join(F.broadcast(qt), on="term")
         .join(F.broadcast(idf), on="term")
-        .select(
-            F.col("q_id"),
-            F.col(idc),
-            (
-                F.col("idf")
-                * (F.col("tf") * (k1 + 1))
-                / (
-                    F.col("tf")
-                    + k1 * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))
-                )
-            ).alias("_s"),
-        )
+        .select(F.col("q_id"), F.col(idc), score.alias("_s"))
         .groupBy("q_id", idc)
         .agg(F.round(F.sum("_s"), round_to).alias("bm25"))
     )
@@ -1361,49 +976,11 @@ def compact_bm25_index(
     force: bool = False,
 ) -> dict:
     """Sweep tombstoned posting/doclen rows past the dead fraction —
-    the trigram compaction shape (zero-job metadata no-op below
-    threshold; two-rename swap per table above it). Counters are
+    the trigram compaction shape (zero-job sidecar no-op below
+    threshold; one whole-directory swap above it). Counters are
     already exact (deletes adjusted them), so only the row storage is
     rewritten."""
-    import os
-    import shutil
-    import uuid
-
-    rep = trigram_index_staleness(index_dir)
-    if not force and rep["dead_fraction"] < tombstone_fraction:
-        return {**rep, "compacted": False}
-    meta = _read_meta(index_dir)
-    _reserve(index_dir, meta)  # a racing upsert/delete aborts cleanly
-    postings, doclens = open_bm25_index(spark, index_dir)
-    token = uuid.uuid4().hex[:8]
-    fresh = {}
-    live_p = postings.withColumn("_batch", F.lit(0))
-    fresh["postings"] = os.path.join(index_dir, f"postings_new_{token}")
-    (
-        live_p.repartitionByRange(max(_default_parallelism(live_p), 8), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(fresh["postings"])
-    )
-    fresh["doclens"] = os.path.join(index_dir, f"doclens_new_{token}")
-    doclens.withColumn("_batch", F.lit(0)).write.mode("overwrite").parquet(
-        fresh["doclens"]
-    )
-    for sub, path in fresh.items():
-        old = os.path.join(index_dir, f"{sub}_old_{token}")
-        os.rename(os.path.join(index_dir, sub), old)
-        os.rename(path, os.path.join(index_dir, sub))
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(os.path.join(index_dir, "tombstones"), ignore_errors=True)
-    meta["n_dead"] = 0
-    meta["n_batches"] = 1
-    # history is physically gone: bump the epoch so pre-compaction
-    # as-of markers raise IndexHistoryTruncatedError instead of
-    # silently reading the collapsed generation as batch 0
-    meta["epoch"] = int(meta.get("epoch", 0)) + 1
-    _refresh_markers(index_dir, meta, ("postings", "doclens", "tombstones"))
-    _write_meta(index_dir, meta)
-    return {**rep, "compacted": True}
+    return BM25.compact(spark, index_dir, tombstone_fraction, force)
 
 
 def bm25_index_repair(spark, index_dir: str) -> dict:
@@ -1416,224 +993,15 @@ def bm25_index_repair(spark, index_dir: str) -> dict:
     healed.
 
     Detection: footer row counts vs the markers recorded by every
-    mutation (metadata-plane, no Spark job). Repair: n_docs_dl /
-    total_dl / n_docs from one aggregate over the tombstone-filtered
-    doclens, n_dead from raw-vs-live distinct ids, n_batches from
-    max(_batch)+1 over BOTH tables. Structural healing first (ADVICE
-    r13): a missing postings dir means no write completed its first
-    step — the true state is the empty index, repaired without
-    touching Spark; generations present in postings but absent from
-    doclens (a crash between the two appends, including the doclens
-    dir never existing) are re-derived from the dl column that rides
-    denormalized in every posting row, so the membership table sees
-    the orphan rows and a replayed upsert tombstones them instead of
-    double-indexing. One honest boundary: docs whose text tokenized to
-    nothing have no doclens row, so a re-derived n_docs counts only
-    scorable docs — such docs have no postings and can never be
-    returned, so the idf shift is the same one a from-scratch rebuild
-    of the index over the live corpus would produce. Idempotent; on
-    the tools/maintain.py cadence."""
-    import os
-
-    meta = _read_meta(index_dir)
-    actual = {
-        sub: _parquet_rows(os.path.join(index_dir, sub))
-        for sub in ("postings", "doclens", "tombstones")
-    }
-    recorded = {sub: int(meta.get(f"{sub}_rows", -1)) for sub in actual}
-    if recorded == actual:
-        return {"repaired": False, **{f"{k}_rows": v for k, v in actual.items()}}
-    if not os.path.isdir(os.path.join(index_dir, "postings")):
-        # first-batch crash window: only the reservation marker landed
-        # (ADVICE r13 — the repair itself raised on the missing dir).
-        # No postings means no write completed its first step: the
-        # true state is the empty index.
-        for k in ("n_docs", "n_docs_dl", "total_dl", "n_dead"):
-            meta[k] = 0
-        meta["n_batches"] = 0
-        _refresh_markers(index_dir, meta, ("postings", "doclens", "tombstones"))
-        _write_meta(index_dir, meta, heal=True)
-        return {
-            "repaired": True,
-            **{f"{k}_rows": meta[f"{k}_rows"] for k in actual},
-        }
-    praw = spark.read.parquet(os.path.join(index_dir, "postings"))
-    if "_batch" not in praw.columns:  # pragma: no cover - pre-r12 layout
-        praw = praw.withColumn("_batch", F.lit(0))
-    # Generations present in postings but missing from doclens mark a
-    # crash between the two appends. Left unhealed, their NEW-id rows
-    # are invisible to the membership table, so a replayed upsert
-    # would tombstone nothing and append a SECOND live generation —
-    # double-counted scores. dl rides denormalized in every posting
-    # row, so the missing doclens rows are exactly derivable: append
-    # them and the replay's delete-then-write converges to one live
-    # generation. Covers the doclens dir being absent entirely (torn
-    # FIRST batch) and a torn later batch alike.
-    p_gens = {
-        int(r["_batch"]) for r in praw.select("_batch").distinct().collect()
-    }
-    dpath = os.path.join(index_dir, "doclens")
-    if os.path.isdir(dpath):
-        d0 = spark.read.parquet(dpath)
-        if "_batch" not in d0.columns:  # pragma: no cover - pre-r12
-            d0 = d0.withColumn("_batch", F.lit(0))
-        d_gens = {
-            int(r["_batch"]) for r in d0.select("_batch").distinct().collect()
-        }
-    else:
-        d_gens = set()
-    orphan_gens = sorted(p_gens - d_gens)
-    if orphan_gens:
-        pcol = [
-            c for c in praw.columns if c not in ("term", "tf", "dl", "_batch")
-        ][0]
-        (
-            praw.where(F.col("_batch").isin(orphan_gens))
-            .select(F.col(pcol), F.col("dl"), F.col("_batch"))
-            .distinct()
-            .write.mode("append")
-            .parquet(dpath)
-        )
-    if os.path.isdir(dpath):
-        raw = spark.read.parquet(dpath)
-        if "_batch" not in raw.columns:  # pragma: no cover - pre-r12
-            raw = raw.withColumn("_batch", F.lit(0))
-    else:  # postings landed EMPTY and doclens never did: no rows to
-        # derive — model the table as empty with the postings' shape
-        raw = praw.select(
-            F.col(
-                [c for c in praw.columns
-                 if c not in ("term", "tf", "dl", "_batch")][0]
-            ),
-            F.col("dl"),
-            F.col("_batch"),
-        ).where(F.lit(False))
-    dcol = [c for c in raw.columns if c not in ("dl", "_batch")][0]
-    live = _tombstone_filtered(raw, trigram_tombstones(spark, index_dir))
-    agg = live.agg(
-        F.count_distinct(F.col(dcol)).alias("n"), F.sum("dl").alias("t")
-    ).first()
-    n_raw = raw.select(dcol).distinct().count()
-    # next generation must clear EVERY landed generation — a torn
-    # write can leave doclens a generation ahead of postings (or vice
-    # versa), and a colliding re-reservation would let tombstones
-    # miss orphan rows
-    mx_p = praw.agg(F.max("_batch")).first()[0]
-    mx_d = raw.agg(F.max("_batch")).first()[0]
-    mx = max(int(mx_p) if mx_p is not None else -1,
-             int(mx_d) if mx_d is not None else -1)
-    # deletes consume mutation slots too (r14, _slot on tombstones):
-    # a repair that re-derived n_batches from data generations alone
-    # would shrink it below a consumed slot, corrupting as-of
-    # ordering and letting the next delete reuse a taken slot
-    tpath = os.path.join(index_dir, "tombstones")
-    if os.path.isdir(tpath):
-        traw = spark.read.option("mergeSchema", "true").parquet(tpath)
-        if "_slot" in traw.columns:
-            mx_t = traw.agg(F.max("_slot")).first()[0]
-            if mx_t is not None:
-                mx = max(mx, int(mx_t))
-    meta["n_docs"] = int(agg["n"] or 0)
-    meta["n_docs_dl"] = int(agg["n"] or 0)
-    meta["total_dl"] = int(agg["t"] or 0)
-    meta["n_dead"] = int(n_raw - (agg["n"] or 0))
-    meta["n_batches"] = mx + 1
-    _refresh_markers(index_dir, meta, ("postings", "doclens", "tombstones"))
-    _write_meta(index_dir, meta, heal=True)
-    return {"repaired": True, **{f"{k}_rows": meta[f"{k}_rows"] for k in actual}}
-
-
-def _index_apply_stream_batch(
-    index_dir: str,
-    batch_id: int,
-    stream_id: str,
-    update_fn,
-    repair_fn,
-    meta_name: str = "_meta.json",
-) -> bool:
-    """Exactly-once-OBSERVABLE micro-batch upsert into a durable text
-    index (shared by the BM25 and trigram stream maintainers).
-    ``foreachBatch`` alone is at-least-once; the lineage tables solve
-    replay with a manifest marker (streaming/stream_ops.py) — this is
-    the same discipline adapted to the index's ``_meta.json``:
-
-    1. marker check: past batches skip; a COMPLETED marker for this
-       batch id skips; a reservation for this batch id WITHOUT the
-       completed flag means the previous attempt crashed mid-apply —
-       run ``repair_fn`` first so the counters exactly match whatever
-       parquet landed (markers-vs-footers, the r13 repair path), then
-       fall through to re-apply.
-    2. reserve: write the marker (completed=False) atomically BEFORE
-       any data write.
-    3. apply through UPDATE semantics (``update_fn`` = delete prior
-       generations of the batch's ids + write a fresh generation):
-       a replay first tombstones EVERY landed generation of these ids
-       — including a crashed attempt's orphan rows, which is why the
-       repair step recomputes n_batches over all tables — so however
-       many attempts ran, exactly one live generation survives.
-    4. complete: rewrite the marker with completed=True.
-
-    A crash in any window re-runs from the reservation and converges
-    to the applied-once state. Concurrent writers (another stream, a
-    maintenance compaction) are fenced by the sidecar's optimistic
-    CAS (:mod:`._idxmeta`): the inner mutations reserve before their
-    data writes, so a race aborts one side cleanly with
-    ``IndexConcurrentWriteError`` — the stream's foreachBatch retry
-    then replays through this same convergence path. Returns True
-    iff THIS call applied the batch."""
-    marker = (
-        _read_meta(index_dir, meta_name).get("stream_appends") or {}
-    ).get(stream_id)
-    if marker is not None:
-        if int(marker["stream_batch"]) > batch_id:
-            return False
-        if int(marker["stream_batch"]) == batch_id:
-            if marker.get("completed"):
-                return False
-            repair_fn()  # dirty replay: true-up counters first
-
-    def _set(completed: bool) -> None:
-        from ._idxmeta import update_meta_atomic
-
-        def _mark(meta: dict) -> None:
-            meta.setdefault("stream_appends", {})[stream_id] = {
-                "stream_batch": int(batch_id),
-                "completed": bool(completed),
-            }
-            if completed:
-                # record the index's as-of position AFTER this change
-                # (r14): the key is the caller's idempotence id (a CDC
-                # batch, a table commit via corpus.sync_indexes_from_
-                # table), so corpus.asof_markers_for_change can hand
-                # back a CONSISTENT marker set for time-traveling the
-                # whole retrieval stack to a table commit. The map is
-                # capped (newest _CHANGE_MARKER_CAP kept) — entries
-                # from before the last compaction are already useless
-                # (epoch mismatch raises honestly) so the cap is a
-                # size bound, not the real retention edge.
-                hist = meta.setdefault("change_markers", {}).setdefault(
-                    stream_id, {}
-                )
-                hist[str(int(batch_id))] = {
-                    "epoch": int(meta.get("epoch", 0)),
-                    "batch": int(meta.get("n_batches", 1)) - 1,
-                }
-                if len(hist) > _CHANGE_MARKER_CAP:
-                    for k in sorted(hist, key=int)[
-                        : len(hist) - _CHANGE_MARKER_CAP
-                    ]:
-                        del hist[k]
-
-        # read-modify-write under the sidecar mutex: the marker can
-        # neither clobber nor be clobbered by a concurrent counter
-        # publish, and conflicts with a foreign write lease like any
-        # other mutator
-        update_meta_atomic(index_dir, _mark, meta_name=meta_name)
-
-    _set(False)
-    update_fn()
-    _set(True)
-    return True
+    mutation (metadata-plane, no Spark job). Repair
+    (:meth:`_TextIndex.heal`): structural healing first (ADVICE r13 —
+    a missing postings dir is the empty index; doclens generations
+    missing behind their postings are re-derived from the dl that
+    rides in every posting row), then n_docs_dl / total_dl / n_docs
+    from one aggregate over the tombstone-filtered doclens, n_dead
+    from the tombstones and n_batches past every generation and
+    delete slot. Idempotent; on the tools/maintain.py cadence."""
+    return BM25.repair(spark, index_dir)
 
 
 def bm25_index_apply_stream_batch(
@@ -1645,16 +1013,12 @@ def bm25_index_apply_stream_batch(
     text_col: str = "text",
 ) -> bool:
     """Micro-batch upsert into the durable BM25 index with replay
-    convergence — see :func:`_index_apply_stream_batch`. The batch is
+    convergence — see :meth:`~._idxmeta.IndexFamily.apply_stream_batch`. The batch is
     an UPSERT set: new ids insert, previously-indexed ids re-index
     under their new text."""
-    spark = batch_df.sparkSession
-    return _index_apply_stream_batch(
-        index_dir,
-        batch_id,
-        stream_id,
-        update_fn=lambda: update_bm25_index(batch_df, index_dir, id_col, text_col),
-        repair_fn=lambda: bm25_index_repair(spark, index_dir),
+    return BM25.apply_stream_batch(
+        batch_df.sparkSession, index_dir, batch_id, stream_id,
+        lambda: update_bm25_index(batch_df, index_dir, id_col, text_col),
     )
 
 
@@ -1669,15 +1033,9 @@ def trigram_index_apply_stream_batch(
     """Micro-batch upsert into the durable trigram index — the
     substring/fuzzy-search twin of
     :func:`bm25_index_apply_stream_batch`."""
-    spark = batch_df.sparkSession
-    return _index_apply_stream_batch(
-        index_dir,
-        batch_id,
-        stream_id,
-        update_fn=lambda: update_trigram_index(
-            batch_df, index_dir, id_col, text_col
-        ),
-        repair_fn=lambda: trigram_index_repair(spark, index_dir),
+    return TRIGRAM.apply_stream_batch(
+        batch_df.sparkSession, index_dir, batch_id, stream_id,
+        lambda: update_trigram_index(batch_df, index_dir, id_col, text_col),
     )
 
 
@@ -1756,10 +1114,7 @@ def fuzzy_similarity_search(
         # its text as truth
         if index_dir is None:
             raise ValueError("as_of requires index_dir (durable index)")
-        upto = _validate_asof(_read_meta(index_dir), as_of)
-        postings, stats = _trigram_asof_frames(
-            docs.sparkSession, index_dir, upto
-        )
+        postings, stats = _trigram_frames(docs.sparkSession, index_dir, as_of)
         source = "durable-asof"
     elif postings is None:
         if index_dir is not None:

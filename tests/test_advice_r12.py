@@ -143,7 +143,7 @@ def test_histogram_repair_detects_and_heals_torn_append(spark, tmp_path):
         f.write(pre_append_meta)  # sidecar now undercounts by 200
     rep = similarity.ivf_filter_histogram_repair(spark, idx)
     assert rep["repaired"] is True and rep["checked"] == 500
-    meta = similarity._open_ann_meta(idx)
+    meta = similarity.IVF_PQ.read_meta(idx)
     assert meta["hist_rows"] == 500
     total = sum(n for _v, _li, n in meta["filter_hist"]["label"])
     assert total == 500

@@ -188,15 +188,15 @@ def _docs(spark, n=80):
 def test_bm25_delete_unknown_and_repeated_ids(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     textsearch.write_bm25_index(_docs(spark), idx)
-    meta0 = textsearch._read_meta(idx)
+    meta0 = textsearch.BM25.read_meta(idx)
     unknown = spark.range(5).select((F.col("id") + 10_000).alias("doc_id"))
     assert textsearch.delete_from_bm25_index(unknown, idx) == 0
-    assert textsearch._read_meta(idx)["n_docs"] == meta0["n_docs"]
+    assert textsearch.BM25.read_meta(idx)["n_docs"] == meta0["n_docs"]
     dead = spark.range(10).select(F.col("id").alias("doc_id"))
     assert textsearch.delete_from_bm25_index(dead, idx) == 10
     # repeat: already-deleted ids are a counted no-op, never negative
     assert textsearch.delete_from_bm25_index(dead, idx) == 0
-    m = textsearch._read_meta(idx)
+    m = textsearch.BM25.read_meta(idx)
     assert m["n_docs"] == meta0["n_docs"] - 10 and m["n_dead"] == 10
     assert m["n_docs_dl"] == meta0["n_docs_dl"] - 10
 
@@ -233,7 +233,7 @@ def test_bm25_repair_heals_torn_append(spark, tmp_path):
         f.write(pre)  # crash between parquet append and meta rewrite
     rep = textsearch.bm25_index_repair(spark, idx)
     assert rep["repaired"] is True
-    m = textsearch._read_meta(idx)
+    m = textsearch.BM25.read_meta(idx)
     assert m["n_docs"] == 80 and m["n_batches"] == 2
     # scores now equal a from-scratch index over the full corpus
     idx2 = str(tmp_path / "bm25_clean")
@@ -264,7 +264,7 @@ def test_trigram_repair_heals_torn_stats(spark, tmp_path):
     ).parquet(os.path.join(idx, "docids"))
     rep = textsearch.trigram_index_repair(spark, idx)
     assert rep["repaired"] is True
-    m = textsearch._read_meta(idx)
+    m = textsearch.TRIGRAM.read_meta(idx)
     assert m["n_docs"] == 53 and m["n_batches"] == 2
     corpus = _docs(spark, 50).unionByName(planted)
     postings, stats = textsearch.open_trigram_index(spark, idx)

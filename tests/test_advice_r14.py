@@ -22,7 +22,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from lineage_store_database_management_system_spark.operators import textsearch
+from lineage_store_database_management_system_spark.operators import _idxmeta, textsearch
 
 
 def _docs(spark, n=80, tag="alpha beta gamma delta record"):
@@ -103,7 +103,7 @@ def test_bm25_first_batch_crash_replays_to_convergence(spark, tmp_path):
             textsearch.bm25_index_apply_stream_batch(idx, batch0, 0)
     finally:
         textsearch.update_bm25_index = real_update
-    m = textsearch._read_meta(idx)["stream_appends"]["default"]
+    m = textsearch.BM25.read_meta(idx)["stream_appends"]["default"]
     assert m["stream_batch"] == 0 and not m["completed"]
     assert not os.path.isdir(os.path.join(idx, "postings"))
     # replay: repair must tolerate the missing dirs (old code raised
@@ -114,7 +114,7 @@ def test_bm25_first_batch_crash_replays_to_convergence(spark, tmp_path):
     a = textsearch.bm25_topk_from_index(spark, idx, ["alpha", "record"], k=10)
     b = textsearch.bm25_topk_from_index(spark, scratch, ["alpha", "record"], k=10)
     assert _rows(a) == _rows(b)
-    assert textsearch._read_meta(idx)["n_docs"] == 30
+    assert textsearch.BM25.read_meta(idx)["n_docs"] == 30
 
 
 def test_trigram_first_batch_crash_replays_to_convergence(spark, tmp_path):
@@ -153,13 +153,13 @@ def test_trigram_torn_first_write_repair_rebuilds(spark, tmp_path):
     # reconstruct the crash state: stats + docids + meta never landed
     shutil.rmtree(os.path.join(idx, "stats"))
     shutil.rmtree(os.path.join(idx, "docids"))
-    textsearch._write_meta(
+    _idxmeta.publish_meta(
         idx,
         {"stream_appends": {"default": {"stream_batch": 0, "completed": False}}},
     )
     rep = textsearch.trigram_index_repair(spark, idx)
     assert rep["repaired"] is True
-    meta = textsearch._read_meta(idx)
+    meta = textsearch.TRIGRAM.read_meta(idx)
     assert meta["n_docs"] == 40 and meta["n_batches"] == 1
     assert os.path.isdir(os.path.join(idx, "stats"))
     assert os.path.isdir(os.path.join(idx, "docids"))
@@ -209,7 +209,7 @@ def test_bm25_torn_doclens_generation_no_double_index(spark, tmp_path):
     a = textsearch.bm25_topk_from_index(spark, idx, ["alpha", "record"], k=20)
     b = textsearch.bm25_topk_from_index(spark, scratch, ["alpha", "record"], k=20)
     assert _rows(a) == _rows(b)
-    assert textsearch._read_meta(idx)["n_docs"] == 60
+    assert textsearch.BM25.read_meta(idx)["n_docs"] == 60
 
 
 # --- 3. rarest-gram prefix filter ------------------------------------

@@ -15,6 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from lineage_store_database_management_system_spark.operators import _idxmeta
 from lineage_store_database_management_system_spark.operators import textsearch as T
 
 TERMS = ["join", "filter", "merge"]
@@ -351,7 +352,7 @@ def test_change_marker_cap_trims_oldest(spark, tmp_path):
 
     bidx = str(tmp_path / "cm_cap")
     T.write_bm25_index(_df(spark, [(1, "alpha")]), bidx)
-    cap = T._CHANGE_MARKER_CAP
+    cap = _idxmeta._CHANGE_MARKER_CAP
     # simulate a long-running sync cadence without paying cap Spark
     # jobs: seed the map to the cap, then one real apply must evict
     # exactly the oldest entry

@@ -185,7 +185,7 @@ def test_sequential_change_ids_apply_in_order(spark, tmp_path):
     assert apply_corpus_changes(2, d2, None, bm25_dir=bidx)["bm25"] is True
     # stale/duplicate ids are recorded no-ops
     assert apply_corpus_changes(1, d1, None, bm25_dir=bidx)["bm25"] is False
-    assert textsearch._read_meta(bidx)["n_docs"] == 78
+    assert textsearch.BM25.read_meta(bidx)["n_docs"] == 78
 
 
 def test_sync_indexes_from_table_cdc(spark, tmp_db, tmp_path):

@@ -55,11 +55,12 @@ def test_text_index_stale_snapshot_conflicts_at_reserve(
         else textsearch.write_trigram_index
     )
     write(_docs(spark), idx)
-    stale = textsearch._read_meta(idx)
+    fam = getattr(textsearch, family.upper())
+    stale = fam.read_meta(idx)
     # another writer commits in between
     write(_docs(spark, 40, 60), idx)
     with pytest.raises(IndexConcurrentWriteError):
-        textsearch._reserve(idx, stale)
+        fam.reserve(idx, stale)
 
 
 @pytest.mark.parametrize("family", ["bm25", "trigram"])
@@ -78,11 +79,12 @@ def test_text_index_midflight_lease_blocks_second_writer(
         else textsearch.delete_from_trigram_index
     )
     write(_docs(spark), idx)
-    before = textsearch._parquet_rows(os.path.join(idx, "postings"))
+    fam = getattr(textsearch, family.upper())
+    before = _idxmeta.footer_rows(os.path.join(idx, "postings"))
     # writer A reserves (mid data-write); writer B's full mutations
     # must abort cleanly BEFORE touching any file
-    held = textsearch._read_meta(idx)
-    textsearch._reserve(idx, held)
+    held = fam.read_meta(idx)
+    fam.reserve(idx, held)
     with pytest.raises(IndexConcurrentWriteError):
         write(_docs(spark, 40, 60), idx)
     with pytest.raises(IndexConcurrentWriteError):
@@ -94,16 +96,16 @@ def test_text_index_midflight_lease_blocks_second_writer(
     )
     with pytest.raises(IndexConcurrentWriteError):
         compact(spark, idx, force=True)
-    assert textsearch._parquet_rows(os.path.join(idx, "postings")) == before
-    assert textsearch._parquet_rows(os.path.join(idx, "tombstones")) == 0
+    assert _idxmeta.footer_rows(os.path.join(idx, "postings")) == before
+    assert _idxmeta.footer_rows(os.path.join(idx, "tombstones")) == 0
     # the stream marker write conflicts too (it must not interleave
     # with a counter publish)
     with pytest.raises(IndexConcurrentWriteError):
         _idxmeta.update_meta_atomic(idx, lambda m: None)
     # writer A finishes: release, then the blocked mutation succeeds
-    textsearch._abandon(idx, held)
+    fam.abandon(idx, held)
     write(_docs(spark, 40, 60), idx)
-    assert textsearch._read_meta(idx)["n_docs"] == 60
+    assert fam.read_meta(idx)["n_docs"] == 60
 
 
 def test_text_index_stale_lease_cleared_with_retry_error(
@@ -111,15 +113,15 @@ def test_text_index_stale_lease_cleared_with_retry_error(
 ):
     idx = str(tmp_path / "stale_lease")
     textsearch.write_bm25_index(_docs(spark), idx)
-    held = textsearch._read_meta(idx)
-    textsearch._reserve(idx, held)  # writer dies here
+    held = textsearch.BM25.read_meta(idx)
+    textsearch.BM25.reserve(idx, held)  # writer dies here
     monkeypatch.setattr(_idxmeta, "PENDING_STALE_S", 0.0)
     with pytest.raises(IndexConcurrentWriteError, match="stale write lease"):
         textsearch.write_bm25_index(_docs(spark, 40, 60), idx)
     # lease is cleared: repair + retry succeeds on fresh state
     textsearch.bm25_index_repair(spark, idx)
     textsearch.write_bm25_index(_docs(spark, 40, 60), idx)
-    assert textsearch._read_meta(idx)["n_docs"] == 60
+    assert textsearch.BM25.read_meta(idx)["n_docs"] == 60
 
 
 # --- ANN index --------------------------------------------------------
@@ -131,9 +133,9 @@ def test_ann_index_midflight_lease_blocks_second_writer(spark, tmp_path):
         _vecs(spark), idx, n_lists=4, m=4, nbits=4,
         id_col="vec_id", vec_col="embedding",
     )
-    before = similarity._ann_footer_rows(idx)
-    held = similarity._open_ann_meta(idx)
-    similarity._ann_reserve(idx, held)
+    before = _idxmeta.footer_rows(idx)
+    held = similarity.IVF_PQ.read_meta(idx)
+    similarity.IVF_PQ.reserve(idx, held)
     with pytest.raises(IndexConcurrentWriteError):
         similarity.ivf_pq_append_index(_vecs(spark, 8), idx)
     with pytest.raises(IndexConcurrentWriteError):
@@ -142,9 +144,9 @@ def test_ann_index_midflight_lease_blocks_second_writer(spark, tmp_path):
         )
     with pytest.raises(IndexConcurrentWriteError):
         similarity.ivf_pq_compact_index(spark, idx, force=True)
-    assert similarity._ann_footer_rows(idx) == before
+    assert _idxmeta.footer_rows(idx) == before
     assert not os.path.isdir(os.path.join(idx, "_tombstones"))
-    similarity._ann_abandon(idx, held)
+    similarity.IVF_PQ.abandon(idx, held)
     assert similarity.ivf_pq_append_index(_vecs(spark, 8), idx) == 8
 
 
@@ -154,7 +156,7 @@ def test_ann_index_stale_snapshot_conflicts_at_reserve(spark, tmp_path):
         _vecs(spark), idx, n_lists=4, m=4, nbits=4,
         id_col="vec_id", vec_col="embedding",
     )
-    stale = similarity._open_ann_meta(idx)
+    stale = similarity.IVF_PQ.read_meta(idx)
     assert (
         similarity.ivf_pq_delete_from_index(
             spark.range(6).select(F.col("id").alias("vec_id")), idx
@@ -162,7 +164,7 @@ def test_ann_index_stale_snapshot_conflicts_at_reserve(spark, tmp_path):
         == 6
     )
     with pytest.raises(IndexConcurrentWriteError):
-        similarity._ann_reserve(idx, stale)
+        similarity.IVF_PQ.reserve(idx, stale)
     # winner's commit is intact and queryable
     got = similarity.ivf_pq_topk_from_index(
         spark, idx, [1.0] * 8, k=5, nprobe=4
@@ -177,17 +179,17 @@ def test_ann_compact_carries_seq_forward(spark, tmp_path):
         _vecs(spark), idx, n_lists=4, m=4, nbits=4,
         id_col="vec_id", vec_col="embedding",
     )
-    stale = similarity._open_ann_meta(idx)
+    stale = similarity.IVF_PQ.read_meta(idx)
     similarity.ivf_pq_delete_from_index(
         spark.range(20).select(F.col("id").alias("vec_id")), idx
     )
     rep = similarity.ivf_pq_compact_index(spark, idx, force=True)
     assert rep["compacted"] is True
-    meta = similarity._open_ann_meta(idx)
+    meta = similarity.IVF_PQ.read_meta(idx)
     assert "_pending" not in meta  # the swap published the lease away
     # a pre-compaction snapshot can't CAS past the rebuild
     with pytest.raises(IndexConcurrentWriteError):
-        similarity._ann_reserve(idx, stale)
+        similarity.IVF_PQ.reserve(idx, stale)
     # and a fresh mutation flows normally
     assert similarity.ivf_pq_append_index(_vecs(spark, 4), idx) == 4
 
@@ -238,7 +240,7 @@ def test_two_threads_mutate_bm25_with_retry(spark, tmp_path):
     t2 = threading.Thread(target=_appender)
     t1.start(); t2.start(); t1.join(); t2.join()
     assert not errors, errors
-    meta = textsearch._read_meta(idx)
+    meta = textsearch.BM25.read_meta(idx)
     assert meta["n_docs"] == 100 - 30 + 120
     assert meta["n_dead"] == 30
     # marker check: every mutation's publish matched its parquet

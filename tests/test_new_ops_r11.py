@@ -6,7 +6,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from lineage_store_database_management_system_spark.operators import similarity
+from lineage_store_database_management_system_spark.operators import _idxmeta, similarity
 
 
 def _blob(spark, n, cx, id_base, spread=5.0):
@@ -106,7 +106,7 @@ def test_interrupted_swap_heals_on_next_open(spark, tmp_path):
     assert not os.path.isdir(idx + "_rebuild_bbbb0002")
 
     # healthy index: recovery is a no-op and entry points unaffected
-    assert similarity._ann_recover(idx) is False
+    assert _idxmeta.recover(idx, similarity.IVF_PQ.meta_name) is False
     assert {r["vec_id"] for r in similarity.ivf_pq_topk_from_index(
         spark, idx, q, k=5, nprobe=2).collect()} == want
 

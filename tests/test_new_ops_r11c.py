@@ -58,10 +58,10 @@ def test_append_keeps_histogram_current(spark, tmp_path):
     similarity.ivf_pq_write_index(
         _labeled(spark, 300), idx, n_lists=4, m=4, nbits=4,
         filter_cols=["label"])
-    m0 = similarity._open_ann_meta(idx)
+    m0 = similarity.IVF_PQ.read_meta(idx)
     t0 = sum(n for v, li, n in m0["filter_hist"]["label"] if v == 2)
     similarity.ivf_pq_append_index(_labeled(spark, 200, id_base=1000), idx)
-    m1 = similarity._open_ann_meta(idx)
+    m1 = similarity.IVF_PQ.read_meta(idx)
     t1 = sum(n for v, li, n in m1["filter_hist"]["label"] if v == 2)
     assert t0 == 60 and t1 == 100  # ids%5==2: 60 of 300, +40 of 200
     # and the filtered search sees appended matches
@@ -81,7 +81,7 @@ def test_rebuild_preserves_filter_columns(spark, tmp_path):
         _labeled(spark, 300, id_base=1000, x_off=40.0), idx)
     rep = similarity.ivf_pq_maintain_index(spark, idx)
     assert rep["rebuilt"]
-    m = similarity._open_ann_meta(idx)
+    m = similarity.IVF_PQ.read_meta(idx)
     assert "label" in m["filter_hist"]
     total = sum(n for v, li, n in m["filter_hist"]["label"] if v == 1)
     assert total == 120  # 60 + 60 across both batches

@@ -231,3 +231,38 @@ def test_estimate_plan_bytes_keeps_concurrent_prints(spark, capsys):
     assert [ln for ln in out if ln.startswith("concurrent-line-")] == [
         f"concurrent-line-{i}" for i in range(n)
     ]
+
+
+def test_plan_scoped_persist_sweeps_dead_application_slots():
+    """A slot left by another (stopped) application is unpersisted and
+    dropped by the next swap: the registry is keyed by application,
+    so without the sweep a restarted session pins every dead frame."""
+    from types import SimpleNamespace
+
+    from lineage_store_database_management_system_spark.operators import _util
+
+    class _Frame:
+        def __init__(self, app):
+            self.sparkSession = SimpleNamespace(
+                sparkContext=SimpleNamespace(applicationId=app)
+            )
+            self.cached = False
+
+        def persist(self):
+            self.cached = True
+            return self
+
+        def unpersist(self, blocking=False):
+            self.cached = False
+
+    stale = _Frame("app-stopped").persist()
+    _util._PLAN_PERSIST_SLOTS[("app-stopped", "sweep-test-slot")] = stale
+    live = _Frame("app-live")
+    try:
+        _util.plan_scoped_persist(live, "sweep-test-slot")
+        assert ("app-stopped", "sweep-test-slot") not in _util._PLAN_PERSIST_SLOTS
+        assert not stale.cached
+        assert _util._PLAN_PERSIST_SLOTS[("app-live", "sweep-test-slot")] is live
+    finally:
+        _util._PLAN_PERSIST_SLOTS.pop(("app-stopped", "sweep-test-slot"), None)
+        _util._PLAN_PERSIST_SLOTS.pop(("app-live", "sweep-test-slot"), None)

@@ -115,12 +115,12 @@ def test_append_keeps_extents_exact_and_estimates_additive(spark, tmp_path):
     similarity.ivf_pq_write_index(
         _timed_blobs(spark, 300), idx, n_lists=3, m=4, nbits=4,
         range_cols=["score"])
-    m0 = similarity._open_ann_meta(idx)["range_stats"]["score"]
+    m0 = similarity.IVF_PQ.read_meta(idx)["range_stats"]["score"]
     # appended batch extends score PAST the frozen global extent
     appended = _timed_blobs(spark, 300, id_base=1000).withColumn(
         "score", F.col("score") + 100.0)
     similarity.ivf_pq_append_index(appended, idx)
-    m1 = similarity._open_ann_meta(idx)["range_stats"]["score"]
+    m1 = similarity.IVF_PQ.read_meta(idx)["range_stats"]["score"]
     assert m1["lo"] == m0["lo"] and m1["hi"] == m0["hi"]  # edges frozen
     total = sum(d["n"] for d in m1["lists"].values())
     assert total == 600
@@ -156,7 +156,7 @@ def test_rebuild_preserves_range_stats(spark, tmp_path):
         range_cols=["score"])
     rep = similarity.ivf_pq_maintain_index(spark, idx, skew_factor=0.0)
     assert rep["rebuilt"]
-    m = similarity._open_ann_meta(idx)
+    m = similarity.IVF_PQ.read_meta(idx)
     assert "score" in (m.get("range_stats") or {})
 
 
@@ -246,12 +246,12 @@ def test_repair_heals_torn_range_stats_too(spark, tmp_path):
         "score", F.col("score") + 50.0)
     similarity.ivf_pq_append_index(appended, idx)
     # marker advances on a range-only index too (no filter_hist)
-    assert similarity._open_ann_meta(idx)["hist_rows"] == 450
+    assert similarity.IVF_PQ.read_meta(idx)["hist_rows"] == 450
     with open(meta_path, "w") as f:
         f.write(pre)  # crash window: data landed, sidecar did not
     rep = similarity.ivf_filter_histogram_repair(spark, idx)
     assert rep["repaired"] is True and rep["checked"] == 450
-    m = similarity._open_ann_meta(idx)
+    m = similarity.IVF_PQ.read_meta(idx)
     assert m["hist_rows"] == 450
     total = sum(d["n"] for d in m["range_stats"]["score"]["lists"].values())
     assert total == 450

@@ -17,7 +17,9 @@ from pyspark.sql import functions as F
 from lineage_store_database_management_system_spark.operators import (
     similarity as S,
 )
-from lineage_store_database_management_system_spark.operators import textsearch
+from lineage_store_database_management_system_spark.operators._idxmeta import (
+    footer_rows,
+)
 from lineage_store_database_management_system_spark.streaming import (
     stream_upsert_ann_index,
 )
@@ -120,7 +122,7 @@ def test_crashed_apply_replays_to_convergence(spark, tmp_path):
             S.ivf_pq_apply_stream_batch(idx, batch, 0)
     finally:
         S.ivf_pq_update_index = real_update
-    m = textsearch._read_meta(idx, "_ann_meta.json")["stream_appends"][
+    m = S.IVF_PQ.read_meta(idx)["stream_appends"][
         "default"
     ]
     assert m["stream_batch"] == 0 and not m["completed"]
@@ -128,8 +130,8 @@ def test_crashed_apply_replays_to_convergence(spark, tmp_path):
     # the crashed attempt's generation, exactly one survives
     assert S.ivf_pq_apply_stream_batch(idx, batch, 0) is True
     assert _topk(spark, idx, Q) == _brute(seed.unionByName(batch), Q)
-    meta = S._open_ann_meta(idx)
-    assert meta["data_rows"] == S._ann_footer_rows(idx)
+    meta = S.IVF_PQ.read_meta(idx)
+    assert meta["data_rows"] == footer_rows(idx)
 
 
 def test_crash_before_any_write_replays_clean(spark, tmp_path):

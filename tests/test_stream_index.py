@@ -74,7 +74,7 @@ def test_crashed_apply_replays_to_convergence(spark, tmp_path):
     finally:
         TS.update_bm25_index = real_update
     # marker reserved but not completed
-    m = T._read_meta(idx)["stream_appends"]["default"]
+    m = T.BM25.read_meta(idx)["stream_appends"]["default"]
     assert m["stream_batch"] == 1 and not m["completed"]
     # replay: repairs, tombstones the orphan generation, re-applies
     assert T.bm25_index_apply_stream_batch(idx, batch1, 1) is True
@@ -84,7 +84,7 @@ def test_crashed_apply_replays_to_convergence(spark, tmp_path):
     b = T.bm25_topk_from_index(spark, scratch, ["alpha", "text"], k=12)
     assert _scores(a) == _scores(b)
     # counters healed: n_docs equals live docs
-    assert T._read_meta(idx)["n_docs"] == 60
+    assert T.BM25.read_meta(idx)["n_docs"] == 60
 
 
 def test_stream_upsert_end_to_end_with_restart(spark, tmp_path):

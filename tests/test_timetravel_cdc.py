@@ -316,3 +316,27 @@ def test_cdc_by_commit_raises_when_window_rows_removed(spark, tmp_path):
     t.drop_partition("p", "g1")
     with pytest.raises(ValueError, match="CDC"):
         t.changes_between_commits(-1, lo0)
+
+
+def test_snapshot_as_of_after_vacuum_folds_from_floor_snapshot(tmp_db, spark):
+    """After vacuum_tail, the as-of fold starts from the snapshot the
+    vacuum left, not the newest one: a later compact() folds deltas
+    committed after ``ts`` into its snapshot (regression: the value
+    updated after ``ts`` leaked into the as-of read). Once that
+    snapshot is reclaimed, the read refuses with the horizon named."""
+    src = spark.createDataFrame([(k, float(k)) for k in range(10)], "k long, v double")
+    t = tmp_db.create_table_typed("kv_asof", src.schema, "k")
+    t.ingest_dataframe(src)
+    t.bulk_update(spark.createDataFrame([(1, 100.0)], "k long, v double"))
+    t.compact()
+    t.vacuum_tail()
+    time.sleep(1.1)
+    ts = _utcnow()
+    time.sleep(1.1)
+    t.bulk_update(spark.createDataFrame([(2, 200.0)], "k long, v double"))
+    t.compact()
+    got = {r["k"]: r["v"] for r in t.snapshot_as_of(ts).collect()}
+    assert got == {k: (100.0 if k == 1 else float(k)) for k in range(10)}
+    t.vacuum_snapshots(retain=0)
+    with pytest.raises(ValueError, match="history floor"):
+        t.snapshot_as_of(ts).count()

@@ -6,29 +6,22 @@ snapshot retention -> stale-MV refresh), printing the per-table
 report as one JSON line.
 
 Durable operator-layer indexes live OUTSIDE the database directory,
-so they are maintained by flag:
-
-- ``--ann-index DIR`` (repeatable): marker-vs-footer sidecar repair
-  first (``ivf_pq_index_repair`` — heals torn appends/deletes/stream
-  batches including generation-counter drift, round 14), then one
-  ``ivf_pq_maintain_index`` pass with the MEASURED recall probe ON by
-  default (``--ann-recall-probe``, default 8 sampled queries) — the
-  r10/r11 lesson is that the cheap statistics triggers (skew/err
-  ratios) can be blind to boundary drift, so the trigger of last
-  resort runs on the maintenance cadence, not opt-in. Also checks the
-  filter-histogram sidecar's hist_rows marker and heals a torn append
-  (``ivf_filter_histogram_repair``).
-- ``--trigram-index DIR`` / ``--bm25-index DIR`` (repeatable):
-  marker-vs-footer sidecar consistency repair first
-  (``trigram_index_repair`` / ``bm25_index_repair`` — heals the
-  crash-between-parquet-and-meta window, VERDICT r12), then
-  tombstone-fraction-triggered postings compaction
-  (``compact_trigram_index`` / ``compact_bm25_index`` — a zero-job
-  metadata check below threshold).
+so they are maintained by flag (``--bm25-index``, ``--trigram-index``,
+``--ann-index``, each repeatable) through the shared index lifecycle
+(``operators/_idxmeta.py``): for every index, the marker-vs-footer
+sidecar repair first (heals a torn append/delete/stream batch and an
+interrupted compaction swap, so the trigger reads honest counters),
+then the tombstone-fraction compaction (a zero-job sidecar check
+below threshold). ANN indexes add their own two steps: one
+``ivf_pq_maintain_index`` drift pass with the MEASURED recall probe
+ON by default (``--ann-recall-probe``, default 8 sampled queries —
+the cheap skew/err statistics can be blind to boundary drift, so the
+trigger of last resort runs on the maintenance cadence), and the
+filter-histogram marker check (``ivf_filter_histogram_repair``).
 
 Usage: python tools/maintain.py /path/to/db [--retain N] [--stale N]
            [--ann-index DIR ...] [--ann-recall-probe N]
-           [--trigram-index DIR ...]
+           [--trigram-index DIR ...] [--bm25-index DIR ...]
 """
 
 from __future__ import annotations
@@ -81,54 +74,34 @@ def main() -> int:
     db = Database().open(args.db_path, spark)
     report = db.maintain(snapshot_retain=args.retain, max_stale_deltas=args.stale)
     db.close()
-    if args.ann_index:
-        from lineage_store_database_management_system_spark.operators import similarity
+    from lineage_store_database_management_system_spark.operators import (
+        similarity,
+        textsearch,
+    )
 
-        ann_report = {}
-        for d in args.ann_index:
-            # marker-vs-footer sidecar repair FIRST (heals a torn
-            # append/delete/stream-batch so every downstream trigger
-            # reads honest counters — the text indexes' discipline,
-            # round 14), then the tombstone sweep (past its dead
-            # fraction) so drift statistics and any rebuild run over
-            # live rows only
-            r = {"sidecar": similarity.ivf_pq_index_repair(spark, d)}
+    for name, fam, dirs in (
+        ("bm25", textsearch.BM25, args.bm25_index),
+        ("trigram", textsearch.TRIGRAM, args.trigram_index),
+        ("ann", similarity.IVF_PQ, args.ann_index),
+    ):
+        for d in dirs:
+            r = {"sidecar": fam.repair(spark, d)}
             if r["sidecar"]["repaired"]:
-                print(f"maintain: repaired ann sidecar {d}", file=sys.stderr)
-            r["compaction"] = similarity.ivf_pq_compact_index(spark, d)
-            r.update(
-                similarity.ivf_pq_maintain_index(
-                    spark, d,
-                    recall_probe=args.ann_recall_probe,
-                    recall_floor=args.ann_recall_floor,
-                    recall_nprobe=args.ann_recall_nprobe,
+                print(f"maintain: repaired {name} sidecar {d}", file=sys.stderr)
+            r["compaction"] = fam.compact(spark, d)
+            if fam is similarity.IVF_PQ:
+                r.update(
+                    similarity.ivf_pq_maintain_index(
+                        spark, d,
+                        recall_probe=args.ann_recall_probe,
+                        recall_floor=args.ann_recall_floor,
+                        recall_nprobe=args.ann_recall_nprobe,
+                    )
                 )
-            )
-            r["histogram_sidecar"] = similarity.ivf_filter_histogram_repair(spark, d)
-            ann_report[d] = r
-        report["_ann_indexes"] = ann_report
-    if args.trigram_index or args.bm25_index:
-        from lineage_store_database_management_system_spark.operators import textsearch
-
-        # marker-vs-footer sidecar repair FIRST (heals a torn
-        # append/delete so the compaction trigger reads honest
-        # counters), then tombstone-fraction compaction
-        if args.trigram_index:
-            report["_trigram_indexes"] = {}
-            for d in args.trigram_index:
-                rep = {"sidecar": textsearch.trigram_index_repair(spark, d)}
-                if rep["sidecar"]["repaired"]:
-                    print(f"maintain: repaired trigram sidecar {d}", file=sys.stderr)
-                rep.update(textsearch.compact_trigram_index(spark, d))
-                report["_trigram_indexes"][d] = rep
-        if args.bm25_index:
-            report["_bm25_indexes"] = {}
-            for d in args.bm25_index:
-                rep = {"sidecar": textsearch.bm25_index_repair(spark, d)}
-                if rep["sidecar"]["repaired"]:
-                    print(f"maintain: repaired bm25 sidecar {d}", file=sys.stderr)
-                rep.update(textsearch.compact_bm25_index(spark, d))
-                report["_bm25_indexes"][d] = rep
+                r["histogram_sidecar"] = similarity.ivf_filter_histogram_repair(
+                    spark, d
+                )
+            report.setdefault(f"_{name}_indexes", {})[d] = r
     print(json.dumps(report))
     return 0
 
