@@ -3126,14 +3126,16 @@ class LineageTable:
         usual fold. Compaction alone cannot change any answer (the
         fold runs over original base + full tail); after
         :meth:`vacuum_tail` the pre-TPS deltas no longer exist, so the
-        fold starts from the snapshot the vacuum left (the one whose
-        tps is ``history_floor``) instead and ``ts`` must not predate
-        the recorded history floor — asking for a state whose deltas
-        were vacuumed, or whose fold base a later snapshot reclaim
-        removed, raises rather than silently returning stale
-        pre-update values. A newer snapshot is never the fold base: a
-        later ``compact()`` may have folded deltas committed after
-        ``ts`` into it."""
+        fold starts from a live snapshot instead and ``ts`` must not
+        predate the recorded history floor. The fold base is the
+        newest live snapshot at or past the floor (tps >=
+        ``history_floor``) that folded no delta stamped after ``ts``:
+        the deltas past the floor stay in the tail until the next
+        vacuum, so one aggregate over them finds the first post-floor
+        delta after ``ts``, and any snapshot whose tps lies below it is
+        exact. Asking for a state whose deltas were vacuumed, or for
+        which every exact fold base has been reclaimed, raises rather
+        than silently returning stale or too-new values."""
         t = F.lit(ts).cast(T.TimestampType())
         # The time floor, not history_floor: a vacuum that dropped no
         # delta records none, and the raw history is then still whole
@@ -3155,24 +3157,44 @@ class LineageTable:
         if floor is not None:
             floor_tps = int(self.manifest.extra["history_floor"])
             snaps = self.manifest.extra.get("snapshots", {})
-            live = [
-                int(v)
+            tps_of = {
+                int(v): int(d["tps"])
                 for v, d in snaps.items()
-                if int(d["tps"]) == floor_tps
+                if int(d["tps"]) >= floor_tps
                 and self._log_tag(self.compacted_dir(int(v))) in state
-            ]
-            if not live:
-                raise ValueError(
-                    f"as-of {ts} needs the snapshot at the history floor "
-                    f"(tps {floor_tps}, vacuumed at {floor}) as its fold "
-                    "base, and that snapshot has been reclaimed; only the "
-                    "current state remains reconstructable"
+            }
+            if tps_of and max(tps_of.values()) > floor_tps:
+                # the first post-floor delta stamped after ``ts``: a
+                # snapshot at or past it folded a change ``ts`` must
+                # not see
+                tail_tag = self._log_tag(self.tail_dir)
+                after = (
+                    self._df_from_entries(
+                        os.path.join(self.path, tail_tag),
+                        self.tail_schema,
+                        prune_entries(
+                            state.get(tail_tag, []), {SEQ: (floor_tps + 1, None)}
+                        ),
+                    )
+                    .where((F.col(SEQ) > F.lit(floor_tps)) & (F.col(TS) > t))
+                    .agg(F.min(SEQ).alias("s"))
+                    .collect()[0]["s"]
                 )
-            d = snaps[str(max(live))]
+                if after is not None:
+                    tps_of = {v: p for v, p in tps_of.items() if p < after}
+            if not tps_of:
+                raise ValueError(
+                    f"as-of {ts} needs a snapshot at or past the history "
+                    f"floor (tps {floor_tps}, vacuumed at {floor}) that "
+                    "folded no later delta, and every such snapshot has "
+                    "been reclaimed; only later states remain "
+                    "reconstructable"
+                )
+            v = max(tps_of)
             wm = {
-                "compact_version": max(live),
-                "compact_rid_hi": int(d["rid_hi"]),
-                "tps": floor_tps,
+                "compact_version": v,
+                "compact_rid_hi": int(snaps[str(v)]["rid_hi"]),
+                "tps": tps_of[v],
             }
         base, tail, _ = self._read_state(state, wm, include_pending=True)
         out = self._fold_tail(base.where(F.col(TS) <= t), tail.where(F.col(TS) <= t))

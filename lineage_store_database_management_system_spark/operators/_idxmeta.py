@@ -618,12 +618,9 @@ class IndexFamily:
         """Sweep tombstoned rows once their fraction crosses the
         threshold (below it: a zero-job sidecar check). The live rows
         of every data table are rewritten at generation 0 into a fresh
-        sibling directory, derived tables/stats are rebuilt there, the
-        sidecar is written LAST (carrying the reserved commit_seq
-        forward, so a stale snapshot cannot CAS past the rebuild, with
-        the epoch bumped so pre-compaction as-of markers raise), and
-        one whole-directory swap publishes it — :func:`recover` heals
-        a crash between the renames."""
+        sibling directory, derived tables/stats are rebuilt there, and
+        :meth:`publish_rebuild` swaps it in — :func:`recover` heals a
+        crash between the renames."""
         rep = self.staleness(index_dir)
         if not force and rep["dead_fraction"] < tombstone_fraction:
             return {**rep, "compacted": False}
@@ -641,15 +638,32 @@ class IndexFamily:
                 self.path(fresh, sub), "overwrite",
             )
         self.rebuild_derived(spark, fresh, meta)
-        meta.pop("_pending", None)
-        meta["commit_seq"] = int(meta.get("commit_seq", 0)) + 1
         meta["n_dead"] = 0
         meta["n_batches"] = 1
-        meta["epoch"] = int(meta.get("epoch", 0)) + 1
-        meta.update(self.footers(fresh))
-        _atomic_dump(fresh, self.meta_name, meta)
-        swap_in(index_dir, fresh, token)
+        self.publish_rebuild(index_dir, fresh, token, meta, meta)
         return {**rep, "compacted": True}
+
+    def publish_rebuild(
+        self, index_dir: str, fresh: str, token: str, meta: dict, new: dict
+    ) -> None:
+        """Publish the complete rebuild under ``fresh`` (a compaction,
+        or IVF-PQ's drift retrain) over the index whose reserved
+        sidecar is ``meta``: the rebuild's sidecar ``new`` carries the
+        stream and change markers forward, stamps the reserved
+        commit_seq (a stale snapshot cannot CAS past the rebuild) and
+        bumps the epoch (pre-rebuild as-of markers raise), records the
+        fresh tree's footer markers, and is written LAST; one
+        whole-directory swap then publishes it."""
+        new = dict(new)
+        new.pop("_pending", None)
+        for k in ("stream_appends", "change_markers"):
+            if k in meta:
+                new[k] = meta[k]
+        new["commit_seq"] = int(meta.get("commit_seq", 0)) + 1
+        new["epoch"] = int(meta.get("epoch", 0)) + 1
+        new.update(self.footers(fresh))
+        _atomic_dump(fresh, self.meta_name, new)
+        swap_in(index_dir, fresh, token)
 
     def repair(self, spark, index_dir: str) -> dict:
         """Detect and heal a torn sidecar — a crash between a parquet
@@ -713,9 +727,9 @@ class IndexFamily:
         one side with ``IndexConcurrentWriteError`` and the retry
         replays through this same path. Returns True iff THIS call
         applied the batch."""
-        marker = (
-            read_raw_meta(index_dir, self.meta_name).get("stream_appends") or {}
-        ).get(stream_id)
+        marker = (self.read_meta(index_dir).get("stream_appends") or {}).get(
+            stream_id
+        )
         if marker is not None:
             if int(marker["stream_batch"]) > batch_id:
                 return False

@@ -110,14 +110,19 @@ def plan_scoped_persist(
     explicitly-hinted joins / aggregates skip the extra job.
     """
     try:
-        # key by application so (a) two live sessions never evict each
-        # other's caches and (b) a restarted session's slots don't
-        # alias the dead one's
+        # key by application so a restarted session's slots don't
+        # alias the stopped one's; every swap sweeps the slots of
+        # other (stopped) applications — sessions of one process share
+        # one SparkContext, hence one applicationId. Without a known
+        # applicationId (the "" fallback) nothing else is swept.
         key = (df.sparkSession.sparkContext.applicationId, slot)
     except Exception:
         key = ("", slot)
     with _PLAN_PERSIST_LOCK:
-        for k in [k for k in _PLAN_PERSIST_SLOTS if k == key or k[0] != key[0]]:
+        for k in [
+            k for k in _PLAN_PERSIST_SLOTS
+            if k == key or (key[0] and k[0] != key[0])
+        ]:
             try:
                 _PLAN_PERSIST_SLOTS.pop(k).unpersist(blocking=False)
             except Exception:

@@ -30,7 +30,6 @@ from ._idxmeta import (
     footer_rows,
     publish_meta,
     read_raw_meta,
-    swap_in,
 )
 
 
@@ -1406,6 +1405,19 @@ class _IvfPqIndex(IndexFamily):
     def tomb_id(self, meta):
         return meta["id_col"]
 
+    def read_meta(self, index_dir):
+        """An ANN index cannot exist without its quantizers: no sidecar
+        (after healing an interrupted swap) is no index, and every
+        reader and mutation fails here, before touching disk."""
+        meta = super().read_meta(index_dir)
+        if "id_col" not in meta:
+            raise FileNotFoundError(
+                f"no ANN index at {index_dir!r}: build one with "
+                "ivf_pq_write_index over a seed corpus first (a stream "
+                "cannot train the quantizers)"
+            )
+        return meta
+
     def members(self, spark, index_dir, meta):
         return spark.read.parquet(index_dir).select(meta["id_col"], "_gen")
 
@@ -1697,12 +1709,6 @@ def ivf_pq_apply_stream_batch(
     by :func:`ivf_pq_maintain_index` on its own cadence). Batch rows
     must carry the sidecar's id and vector columns. Returns True iff
     THIS call applied the batch."""
-    if "id_col" not in IVF_PQ.read_meta(index_dir):
-        raise FileNotFoundError(
-            f"no ANN index at {index_dir!r}: build one with "
-            "ivf_pq_write_index over a seed corpus first (a stream "
-            "cannot train the quantizers)"
-        )
     return IVF_PQ.apply_stream_batch(
         batch_df.sparkSession, index_dir, batch_id, stream_id,
         lambda: ivf_pq_update_index(batch_df, index_dir),
@@ -1856,8 +1862,10 @@ def ivf_pq_maintain_index(
     (id, vector) rows — raw vectors ride in every partition, so no
     source-corpus access is needed — retrain centroids + codebooks at
     the sidecar's parameters (``train_opts`` forwards e.g.
-    ``residual=True``), write the rebuild beside the index, and swap
-    directories (rename-rename-rmtree, the vacuum_tail dance). A crash
+    ``residual=True``), write the rebuild beside the index, and publish
+    it like a compaction (:meth:`~._idxmeta.IndexFamily.publish_rebuild`:
+    stream and change markers carried forward, epoch bumped so
+    pre-rebuild as-of markers raise, one whole-directory swap). A crash
     BETWEEN the two renames leaves index_dir momentarily absent with
     both complete siblings on disk — every index entry point heals
     that on its next open via :func:`~._idxmeta.recover` (promote the
@@ -1898,12 +1906,9 @@ def ivf_pq_maintain_index(
     )
     kw.update(train_opts)
     ivf_pq_write_index(vecs, fresh, **kw)
-    # the swap IS the publish: stamp the rebuilt sidecar with the
-    # reserved commit_seq so a stale snapshot can't CAS past it
-    fm = read_raw_meta(fresh, IVF_PQ.meta_name)
-    fm["commit_seq"] = int(meta.get("commit_seq", 0)) + 1
-    _atomic_dump(fresh, IVF_PQ.meta_name, fm)
-    swap_in(index_dir, fresh, token)
+    IVF_PQ.publish_rebuild(
+        index_dir, fresh, token, meta, read_raw_meta(fresh, IVF_PQ.meta_name)
+    )
     return {**rep, "rebuilt": True}
 
 

@@ -146,3 +146,50 @@ def test_below_threshold_compaction_starts_no_spark_job(spark, tmp_path, family)
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert rep["compacted"] is False and 0 < rep["dead_fraction"] < 0.2
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_ivf_pq_drift_rebuild_publishes_like_a_compaction(spark, tmp_path):
+    """The drift rebuild swaps its tree in through the compaction's
+    publish: the epoch moves past every pre-rebuild as-of marker (which
+    must then raise rather than silently read the retrained index),
+    and the stream replay markers survive, so a replayed batch stays a
+    no-op."""
+    from lineage_store_database_management_system_spark.operators._idxmeta import (
+        IndexHistoryTruncatedError,
+    )
+
+    idx = str(tmp_path / "ann")
+    similarity.ivf_pq_write_index(_vecs(spark), idx, n_lists=4, m=4, nbits=4)
+    batch = _vecs(spark, n=70).where(F.col("vec_id") >= 64)
+    assert similarity.ivf_pq_apply_stream_batch(idx, batch, 0, "s") is True
+    marker = similarity.ann_index_asof_marker(idx)
+    rep = similarity.ivf_pq_maintain_index(spark, idx, skew_factor=0.0)
+    assert rep["rebuilt"] is True
+    assert similarity.IVF_PQ.read_meta(idx)["epoch"] == marker["epoch"] + 1
+    with pytest.raises(IndexHistoryTruncatedError):
+        similarity.ivf_pq_topk_from_index(spark, idx, [3.0] * 8, as_of=marker)
+    assert similarity.ivf_pq_apply_stream_batch(idx, batch, 0, "s") is False
+
+
+@pytest.mark.parametrize(
+    "mutate",
+    [
+        lambda spark, d: similarity.ivf_pq_append_index(_vecs(spark, n=4), d),
+        lambda spark, d: similarity.ivf_pq_delete_from_index(
+            spark.range(2).select(F.col("id").alias("vec_id")), d
+        ),
+        lambda spark, d: similarity.ivf_pq_compact_index(spark, d),
+        lambda spark, d: similarity.ivf_pq_apply_stream_batch(
+            d, _vecs(spark, n=4), 0, "s"
+        ),
+    ],
+    ids=["append", "delete", "compact", "stream_batch"],
+)
+def test_ivf_pq_missing_index_fails_before_touching_disk(spark, tmp_path, mutate):
+    """An ANN index cannot exist without its trained quantizers: a
+    mutation against a missing path raises FileNotFoundError and leaves
+    no directory (and no lease-holding sidecar) behind."""
+    missing = str(tmp_path / "no_such_index")
+    with pytest.raises(FileNotFoundError, match="seed corpus"):
+        mutate(spark, missing)
+    assert not os.path.exists(missing)

@@ -263,6 +263,14 @@ def test_plan_scoped_persist_sweeps_dead_application_slots():
         assert ("app-stopped", "sweep-test-slot") not in _util._PLAN_PERSIST_SLOTS
         assert not stale.cached
         assert _util._PLAN_PERSIST_SLOTS[("app-live", "sweep-test-slot")] is live
+        # a frame whose applicationId cannot be read keys under "" and
+        # must not sweep the live application's slots
+        unknown = _Frame(None)
+        del unknown.sparkSession
+        _util.plan_scoped_persist(unknown, "sweep-test-slot")
+        assert _util._PLAN_PERSIST_SLOTS[("app-live", "sweep-test-slot")] is live
+        assert live.cached
     finally:
         _util._PLAN_PERSIST_SLOTS.pop(("app-stopped", "sweep-test-slot"), None)
         _util._PLAN_PERSIST_SLOTS.pop(("app-live", "sweep-test-slot"), None)
+        _util._PLAN_PERSIST_SLOTS.pop(("", "sweep-test-slot"), None)

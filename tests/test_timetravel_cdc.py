@@ -340,3 +340,30 @@ def test_snapshot_as_of_after_vacuum_folds_from_floor_snapshot(tmp_db, spark):
     t.vacuum_snapshots(retain=0)
     with pytest.raises(ValueError, match="history floor"):
         t.snapshot_as_of(ts).count()
+
+
+def test_snapshot_as_of_after_vacuum_uses_newest_exact_snapshot(tmp_db, spark):
+    """Two compactions after vacuum_tail reclaim the snapshot the
+    vacuum left (snapshot_retain=1), yet the deltas past the floor are
+    still in the tail: an as-of time after every folded delta folds
+    exactly from the newest snapshot, and only a time before a folded
+    delta whose exact fold base is gone raises."""
+    src = spark.createDataFrame([(k, float(k)) for k in range(10)], "k long, v double")
+    t = tmp_db.create_table_typed("kv_asof2", src.schema, "k")
+    t.ingest_dataframe(src)
+    t.bulk_update(spark.createDataFrame([(1, 100.0)], "k long, v double"))
+    t.compact()
+    t.vacuum_tail()
+    time.sleep(1.1)
+    ts_mid = _utcnow()
+    time.sleep(1.1)
+    t.bulk_update(spark.createDataFrame([(2, 200.0)], "k long, v double"))
+    t.compact()
+    t.bulk_update(spark.createDataFrame([(3, 300.0)], "k long, v double"))
+    t.compact()
+    time.sleep(1.1)
+    now = _utcnow()
+    want = sorted(tuple(r) for r in t.current_view().collect())
+    assert sorted(tuple(r) for r in t.snapshot_as_of(now).collect()) == want
+    with pytest.raises(ValueError, match="history floor"):
+        t.snapshot_as_of(ts_mid).count()

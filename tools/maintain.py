@@ -12,12 +12,14 @@ so they are maintained by flag (``--bm25-index``, ``--trigram-index``,
 sidecar repair first (heals a torn append/delete/stream batch and an
 interrupted compaction swap, so the trigger reads honest counters),
 then the tombstone-fraction compaction (a zero-job sidecar check
-below threshold). ANN indexes add their own two steps: one
-``ivf_pq_maintain_index`` drift pass with the MEASURED recall probe
-ON by default (``--ann-recall-probe``, default 8 sampled queries —
-the cheap skew/err statistics can be blind to boundary drift, so the
-trigger of last resort runs on the maintenance cadence), and the
-filter-histogram marker check (``ivf_filter_histogram_repair``).
+below threshold). The repair also re-aggregates an ANN index's
+filter/range histograms on any marker mismatch (their ``hist_rows``
+marker is published in the same sidecar write as the row markers), so
+ANN indexes add one step of their own: an ``ivf_pq_maintain_index``
+drift pass with the MEASURED recall probe ON by default
+(``--ann-recall-probe``, default 8 sampled queries — the cheap
+skew/err statistics can be blind to boundary drift, so the trigger of
+last resort runs on the maintenance cadence).
 
 Usage: python tools/maintain.py /path/to/db [--retain N] [--stale N]
            [--ann-index DIR ...] [--ann-recall-probe N]
@@ -97,9 +99,6 @@ def main() -> int:
                         recall_floor=args.ann_recall_floor,
                         recall_nprobe=args.ann_recall_nprobe,
                     )
-                )
-                r["histogram_sidecar"] = similarity.ivf_filter_histogram_repair(
-                    spark, d
                 )
             report.setdefault(f"_{name}_indexes", {})[d] = r
     print(json.dumps(report))
