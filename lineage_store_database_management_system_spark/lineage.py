@@ -46,8 +46,10 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
+import operator
 import os
 import shutil
 import time
@@ -59,7 +61,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .filelog import TABLE_META_TAG, FileLog, file_entry, prune_entries
+from .filelog import TABLE_META_TAG, FileLog, file_entries, file_entry, prune_entries
 
 # Metadata columns. Base rows carry (_rid, _ts); tail rows carry
 # (_rid, _seq, _op, _ts). The reference's 4 hidden base columns /
@@ -716,13 +718,16 @@ class LineageTable:
         uniques.remove(column)
         self._save_manifest()
 
-    def _validate_unique_inserts(self, batch: DataFrame) -> None:
+    def _validate_unique_inserts(
+        self, batch: DataFrame, view: DataFrame | None = None
+    ) -> None:
         """Reject an insert batch that would duplicate a UNIQUE value
         — within the batch (count vs distinct in ONE aggregate over
-        all constrained columns) or against a live row (batch values
-        collected up to the CHECK cap and pushed into the view scan as
-        an IN-list; broadcast semi-join above it). Runs only when
-        constraints are registered."""
+        all constrained columns) or against a live row of ``view``
+        (default the current view; batch values collected up to the
+        CHECK cap and pushed into the view scan as an IN-list;
+        broadcast semi-join above it). Runs only when constraints are
+        registered."""
         uniques = [
             c for c in self.manifest.extra.get("uniques", []) if c in batch.columns
         ]
@@ -738,7 +743,7 @@ class LineageTable:
             raise UniqueViolation(
                 f"insert batch contains duplicate values for unique column(s) {dups}"
             )
-        cur = self.current_view()
+        cur = self.current_view() if view is None else view
         for c in uniques:
             vals_df = batch.select(c).where(F.col(c).isNotNull()).distinct()
             vals = [r[c] for r in vals_df.limit(_CHECK_ISIN_CAP + 1).collect()]
@@ -753,7 +758,9 @@ class LineageTable:
                     f"insert would duplicate live value(s) in unique column {c!r}"
                 )
 
-    def _validate_folded_updates(self, delta: DataFrame) -> None:
+    def _validate_folded_updates(
+        self, delta: DataFrame, view: DataFrame | None = None
+    ) -> None:
         """A CHECK must hold on the POST-update row, not on the delta
         encoding: NULL = 'column unchanged', so a multi-column check
         (``a <= b``) evaluates UNKNOWN against a delta that sets only
@@ -768,7 +775,8 @@ class LineageTable:
         UNIQUE constraints validate on the same folded rows: the
         post-update values must not collide within the batch nor with
         any UNTOUCHED live row (touched rids are excluded — they are
-        being replaced)."""
+        being replaced). ``view`` (``_rid`` plus the user columns)
+        is the state the deltas fold over, default the current view."""
         checks = self.manifest.extra.get("checks", {})
         uniq_cols = [
             c
@@ -796,9 +804,9 @@ class LineageTable:
             .agg(*aggs)
             .where(F.col("_del_seq").isNull())
         )
-        cur = self.current_view(include_meta=True).select(
-            F.col(RID), *[F.col(c) for c in self.user_cols]
-        )
+        if view is None:
+            view = self.current_view(include_meta=True)
+        cur = view.select(F.col(RID), *[F.col(c) for c in self.user_cols])
         # Touched-rids-only for real: the fold must prune the BASE and
         # TAIL scans, not just filter after a full-table fold. Below
         # the cap the rid set becomes a pushed-down ``_rid IN (...)``
@@ -826,11 +834,7 @@ class LineageTable:
             ]
         )
         if checks:
-            bad_aggs = [
-                F.sum(F.when(~F.coalesce(F.expr(e), F.lit(True)), 1).otherwise(0)).alias(n)
-                for n, e in checks.items()
-            ]
-            row = post.agg(*bad_aggs).collect()[0].asDict()
+            row = post.agg(*self._check_aggs().values()).collect()[0].asDict()
             bad = {n: v for n, v in row.items() if v}
             if bad:
                 raise CheckViolation(
@@ -856,9 +860,7 @@ class LineageTable:
             ]
             if not vals:
                 continue
-            live = self.current_view(include_meta=True).select(
-                F.col(RID), F.col(c)
-            )
+            live = view.select(F.col(RID), F.col(c))
             if len(vals) <= _CHECK_ISIN_CAP:
                 probe = live.where(F.col(c).isin(vals))
             else:  # pragma: no cover - >cap distinct values in one batch
@@ -876,30 +878,38 @@ class LineageTable:
                     f"update would duplicate a live value in unique column {c!r}"
                 )
 
+    def _check_bad(self) -> dict[str, Column]:
+        """Per registered check, the condition a VIOLATING row meets
+        (ANSI: a check that evaluates UNKNOWN passes)."""
+        return {
+            n: ~F.coalesce(F.expr(e), F.lit(True))
+            for n, e in self.manifest.extra.get("checks", {}).items()
+        }
+
     def _check_aggs(self) -> dict[str, Any]:
         """One violation-counting aggregate per registered check —
         attached to write jobs via ``Observation`` so enforcement
         costs ZERO extra passes: the counts ride the staged write
         itself, and a violation aborts before anything publishes."""
         return {
-            n: F.sum(
-                F.when(~F.coalesce(F.expr(e), F.lit(True)), 1).otherwise(0)
-            ).alias(n)
-            for n, e in self.manifest.extra.get("checks", {}).items()
+            n: F.sum(F.when(bad, 1).otherwise(0)).alias(n)
+            for n, bad in self._check_bad().items()
         }
+
+    def _staging_dir(self) -> str:
+        return os.path.join(self.path, f"_staging_{uuid.uuid4().hex[:8]}")
 
     def _append_via_staging(
         self,
         df: DataFrame,
         target_dir: str,
         partition_by: list[str] | None = None,
-        txn_hidden: str | None = None,
         rebalance: bool = False,
-    ) -> dict | None:
-        """Commit-protocol append: write to a staging dir, then move
-        the finished part-files into the table dir (preserving
-        Hive partition subdirectories). Two reasons this exists
-        instead of a plain ``mode('append')``:
+    ) -> None:
+        """Commit-protocol append of a bulk commit: Spark writes the
+        frame to a staging dir, then :meth:`_publish_staged` moves the
+        finished part-files into the table dir. Two reasons this
+        exists instead of a plain ``mode('append')``:
 
         1. Deltas are often *derived from the table's own current
            view* (e.g. bulk_update values computed from existing
@@ -910,15 +920,11 @@ class LineageTable:
            which is the same files-then-manifest discipline a real
            lakehouse format uses.
 
-        With ``txn_hidden`` (a transaction id) the files land under
-        HIDDEN names (``_txn_<id>_...``: Spark scans skip ``_``
-        prefixes and the repair resync imports only ``*.parquet``
-        without it) and the log append is DEFERRED — the method
-        returns the publish intent (renames + log action) for
-        :func:`commit_tables_atomically` to publish under one shared
-        commit marker. Footer stats are read from the hidden files;
-        the entries carry the visible (post-rename) paths."""
-        staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex[:8]}")
+        CHECK constraints ride the write itself (``Observation``); a
+        violation drops the staging dir before anything publishes.
+        :meth:`flush` writes its buffers from the driver instead and
+        shares only the publish half."""
+        staging = self._staging_dir()
         aggs = self._check_aggs()
         obs = None
         if aggs:
@@ -985,77 +991,86 @@ class LineageTable:
                 # the write never happened
                 shutil.rmtree(staging, ignore_errors=True)
                 raise CheckViolation(f"check constraint(s) violated: {viol}")
-        moved: list[str] = []  # visible dests ('rename' path) or hidden abs
+        self._publish_staged(staging, [(".", target_dir)])
+
+    def _publish_staged(
+        self,
+        staging: str,
+        targets: list[tuple[str, str]],
+        txn_hidden: str | None = None,
+    ) -> dict | None:
+        """The publish half of every commit: move the finished
+        part-files of each ``(staging subdir, table dir)`` pair into
+        the table dir (Hive partition subdirectories preserved), drop
+        the staging dir, then publish every target in ONE file-log
+        entry, one add action per target (files-then-log: one footer
+        read per new file for its stats). When the log append fails
+        before its entry lands, the moved files are unlinked, so the
+        caller's retry writes them once.
+
+        With ``txn_hidden`` (a transaction id) the files land under
+        HIDDEN names (``_txn_<id>_...``: Spark scans skip ``_``
+        prefixes and the repair resync imports only ``*.parquet``
+        without it) and the log append is DEFERRED — the method
+        returns the publish intent (renames + log actions) for
+        :func:`commit_tables_atomically` to publish under one shared
+        commit marker. Footer stats are read from the hidden files;
+        the entries carry the visible (post-rename) paths."""
+        actions: list[dict] = []
         renames: list[tuple[str, str]] = []  # (hidden rel, visible rel) to table
-        for root, _dirs, files in os.walk(staging):
-            rel = os.path.relpath(root, staging)
-            for name in files:
-                if not name.endswith(".parquet"):
-                    continue
-                dest_dir = target_dir if rel == "." else os.path.join(target_dir, rel)
-                os.makedirs(dest_dir, exist_ok=True)
-                vis = f"{uuid.uuid4().hex[:8]}-{name}"
-                if txn_hidden is not None:
-                    hid = os.path.join(dest_dir, f"_txn_{txn_hidden}_{vis}")
-                    os.rename(os.path.join(root, name), hid)
-                    renames.append(
-                        (
-                            os.path.relpath(hid, self.path),
-                            os.path.relpath(os.path.join(dest_dir, vis), self.path),
+        written: list[str] = []
+        for sub, target_dir in targets:
+            src = os.path.join(staging, sub)
+            moved: list[tuple[str, str]] = []  # (file on disk, visible rel to target)
+            for root, _dirs, files in os.walk(src):
+                rel = os.path.relpath(root, src)
+                for name in files:
+                    if not name.endswith(".parquet"):
+                        continue
+                    dest_dir = target_dir if rel == "." else os.path.join(target_dir, rel)
+                    os.makedirs(dest_dir, exist_ok=True)
+                    vis = os.path.join(dest_dir, f"{uuid.uuid4().hex[:8]}-{name}")
+                    dest = vis
+                    if txn_hidden is not None:
+                        dest = os.path.join(
+                            dest_dir, f"_txn_{txn_hidden}_{os.path.basename(vis)}"
                         )
-                    )
-                    moved.append(hid)
-                else:
-                    dest = os.path.join(dest_dir, vis)
+                        renames.append(
+                            (os.path.relpath(dest, self.path), os.path.relpath(vis, self.path))
+                        )
                     os.rename(os.path.join(root, name), dest)
-                    moved.append(dest)
-        shutil.rmtree(staging, ignore_errors=True)
-        if txn_hidden is not None:
-            if not moved:
-                return None
-            from .filelog import file_entries
-
-            # entries: stats from the hidden bytes, visible rel path
-            ents = file_entries(
-                [
-                    (
-                        hid,
-                        os.path.relpath(
-                            os.path.join(self.path, vis_rel), target_dir
-                        ),
-                    )
-                    for hid, (_h, vis_rel) in zip(moved, renames)
-                ],
-                self._stat_cols,
-            )
-            return {
-                "renames": renames,
-                "action": {
-                    "op": "add",
-                    "dir": self._log_tag(target_dir),
-                    "files": ents,
-                },
-            }
-        # files-then-log: the commit becomes visible to log-planned
-        # scans here (one footer read per new file for stats)
-        if moved:
-            from .filelog import file_entries
-
-            self.filelog.append(
-                [
+                    written.append(dest)
+                    moved.append((dest, os.path.relpath(vis, target_dir)))
+            if moved:
+                actions.append(
                     {
                         "op": "add",
                         "dir": self._log_tag(target_dir),
-                        "files": file_entries(
-                            [
-                                (p, os.path.relpath(p, target_dir))
-                                for p in moved
-                            ],
-                            self._stat_cols,
-                        ),
+                        "files": file_entries(moved, self._stat_cols),
                     }
-                ]
-            )
+                )
+        shutil.rmtree(staging, ignore_errors=True)
+        if txn_hidden is not None:
+            return {"renames": renames, "actions": actions} if actions else None
+        # the commit becomes visible to log-planned scans here
+        try:
+            self.filelog.append(actions)
+        except BaseException as exc:
+            first = actions[0]
+            if not any(
+                e["path"] == first["files"][0]["path"]
+                for e in self.filelog.live(first["dir"])
+            ):
+                # never logged: unlisted files under visible names would
+                # publish a second time, by a retry or by repair_staging
+                for path in written:
+                    os.remove(path)
+                raise
+            if not isinstance(exc, Exception):
+                raise
+            # the entry landed and a later step of the append (its
+            # checkpoint) failed: the commit holds, and the next append
+            # writes the checkpoint again
         return None
 
     # ------------------------------------------------------------------
@@ -1504,66 +1519,142 @@ class LineageTable:
         return base.select(*live_cols).join(tomb, on=RID, how="left_anti")
 
     def _maybe_auto_compact(self) -> None:
-        # the tail's file count is the file log's live tail entries —
-        # no directory listing on the commit path
-        if self.AUTO_COMPACT_TAIL_FILES and len(
-            self.filelog.live(self._log_tag(self.tail_dir))
-        ) > self.AUTO_COMPACT_TAIL_FILES:
+        # the fold's tail files are the file log's live tail entries
+        # past TPS — the pre-TPS files the last compaction folded stay
+        # live until vacuum_tail but cost the fold nothing; no
+        # directory listing on the commit path
+        if (
+            self.AUTO_COMPACT_TAIL_FILES
+            and len(self._live_files().tail) > self.AUTO_COMPACT_TAIL_FILES
+        ):
             self.compact()
 
     def _maybe_flush(self) -> None:
         if len(self._pending_base) + len(self._pending_tail) >= self.FLUSH_THRESHOLD:
             self.flush()
 
-    def flush(self, _txn_id: str | None = None) -> list[dict]:
-        """Write pending buffers to Parquet and close the open batch.
-        The Spark analogue of the reference's page rollover
-        (table.py:104-119). With ``_txn_id`` the files stage HIDDEN
-        and the publish intents return instead of the log committing —
-        see :meth:`stage_pending` / :func:`commit_tables_atomically`."""
-        intents: list[dict] = []
-        # A violation aborts the whole buffered batch — nothing
-        # publishes, and the buffer is dropped. CHECKs ride the staged
-        # write itself (_append_via_staging's Observation).
-        if self._pending_base:
-            df = self.spark.createDataFrame(self._pending_base, self.base_schema)
-            try:
-                self._validate_unique_inserts(df)
-                it = self._append_via_staging(
-                    df.coalesce(1),
-                    self.base_dir,
-                    partition_by=self.partition_by,
-                    txn_hidden=_txn_id,
-                )
-            except CheckViolation:  # UniqueViolation included
-                self._pending_base = []
-                raise
-            if it:
-                intents.append(it)
-            self._pending_base = []
-        if self._pending_tail:
-            df = self.spark.createDataFrame(self._pending_tail, self.tail_schema)
-            try:
-                # the folded post-update rows, as _publish_tail checks
-                # a bulk commit's
-                self._validate_folded_updates(df)
-                # staged like every other commit: staging is what lets
-                # the new files be enumerated for the log entry
-                it = self._append_via_staging(
-                    df.coalesce(1), self.tail_dir, txn_hidden=_txn_id
-                )
-            except CheckViolation:  # UniqueViolation included
-                self._pending_tail = []
-                raise
-            if it:
-                intents.append(it)
-            self._pending_tail = []
+    def flush(self, _txn_id: str | None = None) -> dict | None:
+        """Write the pending buffers to Parquet and close the open
+        batch — the reference's page rollover (table.py:104-119),
+        written from the driver: the rows already sit in driver
+        memory, so a flush of a table without constraints starts no
+        Spark job.
+
+        Each non-empty buffer converts once to Arrow
+        (:func:`_arrow_rows`) and pyarrow writes it into one staging
+        dir (:meth:`_write_buffer`); both buffers then publish through
+        :meth:`_publish_staged` in ONE file-log entry, so a group
+        becomes visible whole or not at all. Constraints validate both
+        buffers before any file is written (:meth:`_validate_buffers`);
+        a violation drops the whole group and publishes nothing. Any
+        other failure keeps the buffers for a retry. With ``_txn_id``
+        the files stage HIDDEN and the publish intent returns instead
+        of the log committing — see :meth:`stage_pending` /
+        :func:`commit_tables_atomically`."""
+        base, tail = self._pending_base, self._pending_tail
+        if not base and not tail:
+            self._open_batch = None
+            return None
+        # the validators read the table without the rows they validate
+        self._pending_base, self._pending_tail = [], []
+        try:
+            base_tbl = _arrow_rows(base, self.base_schema) if base else None
+            tail_tbl = _arrow_rows(tail, self.tail_schema) if tail else None
+            if self.manifest.extra.get("checks") or self.manifest.extra.get("uniques"):
+                self._validate_buffers(base_tbl, tail_tbl)
+            staging = self._staging_dir()
+            targets = []
+            for tbl, target, parts in (
+                (base_tbl, self.base_dir, self.partition_by),
+                (tail_tbl, self.tail_dir, []),
+            ):
+                if tbl is not None:
+                    tag = self._log_tag(target)
+                    self._write_buffer(tbl, os.path.join(staging, tag), parts)
+                    targets.append((tag, target))
+            intent = self._publish_staged(staging, targets, txn_hidden=_txn_id)
+        except CheckViolation:  # UniqueViolation included: drops the group
+            raise
+        except BaseException:
+            self._pending_base, self._pending_tail = base, tail
+            raise
         # No manifest save here: the open batch was reserved (and the
         # manifest CAS'd) in _ensure_batch, so the on-disk manifest is
         # already current — saving again would only widen the window in
         # which a stale handle conflicts AFTER publishing files.
         self._open_batch = None
-        return intents
+        return intent
+
+    def _validate_buffers(self, base: Any, tail: Any) -> None:
+        """A flush's constraints, over Spark frames of its buffers
+        (``pyarrow.Table`` or None each; the frames are local
+        relations). CHECKs on the inserted rows run as one projection
+        that Spark evaluates on the driver; UNIQUE inserts and folded
+        updates run the bulk commits' validators. The insert
+        validator reads the published state plus the tail buffer, never
+        the rows it validates, so a buffered insert does not collide
+        with itself and a key-changing update's tombstone frees its old
+        value. The update validator reads the published state plus
+        BOTH buffers — it keeps the rids it validates out of its own
+        probe — so a row the group deletes frees its value for an
+        update in the same group, and an update of a row the group
+        inserted folds over that row."""
+        base_f = None if base is None else self.spark.createDataFrame(base, self.base_schema)
+        tail_f = None if tail is None else self.spark.createDataFrame(tail, self.tail_schema)
+        pub_base, pub_tail, tail_empty = self._state_frames(self._live_files())
+        if base_f is not None:
+            bad = self._check_bad()
+            if bad:
+                hits = (
+                    base_f.where(functools.reduce(operator.or_, bad.values()))
+                    .select(*[c.alias(n) for n, c in bad.items()])
+                    .collect()
+                )
+                viol = {n: k for n in bad if (k := sum(r[n] for r in hits))}
+                if viol:
+                    raise CheckViolation(f"check constraint(s) violated: {viol}")
+            view = self._fold_tail(
+                pub_base,
+                pub_tail if tail_f is None else pub_tail.unionByName(tail_f),
+                tail_known_empty=tail_empty and tail_f is None,
+            )
+            self._validate_unique_inserts(base_f, view)
+        if tail_f is not None:
+            view = self._fold_tail(
+                pub_base if base_f is None else pub_base.unionByName(base_f),
+                pub_tail.unionByName(tail_f),
+            )
+            self._validate_folded_updates(tail_f, view)
+
+    def _write_buffer(self, tbl: Any, out_dir: str, partition_by: list[str]) -> None:
+        """Write one buffer (a ``pyarrow.Table`` under logical names)
+        as Parquet under ``out_dir``, laid out as Spark's writer lays
+        it out: physical column names, and for a partitioned base one
+        file per Hive partition directory, named by
+        :func:`_hive_partition_dir`, with the partition columns
+        dropped from the file."""
+        m = self._phys_map
+        tbl = tbl.rename_columns([m.get(n, n) for n in tbl.column_names])
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        if not partition_by:
+            os.makedirs(out_dir)
+            _write_parquet(tbl, os.path.join(out_dir, name), self._stat_cols)
+            return
+        types = [self.schema[c].dataType for c in partition_by]
+        tz = None
+        if any(isinstance(t, T.TimestampType) for t in types):
+            from zoneinfo import ZoneInfo
+
+            tz = ZoneInfo(self.spark.conf.get("spark.sql.session.timeZone"))
+        groups: dict[str, list[int]] = {}
+        values = zip(*[tbl.column(c).to_pylist() for c in partition_by])
+        for i, vals in enumerate(values):
+            d = _hive_partition_dir(partition_by, vals, types, tz)
+            groups.setdefault(d, []).append(i)
+        data = tbl.drop_columns(partition_by)
+        for d, rows in groups.items():
+            os.makedirs(os.path.join(out_dir, d))
+            _write_parquet(data.take(rows), os.path.join(out_dir, d, name), self._stat_cols)
 
     def stage_pending(self, txn_id: str) -> dict | None:
         """Stage this table's pending buffered rows as HIDDEN files
@@ -1571,14 +1662,8 @@ class LineageTable:
         atomic commit (:func:`commit_tables_atomically`). Runs the
         same constraint/uniqueness validation as :meth:`flush`.
         Returns None when nothing is pending."""
-        intents = self.flush(_txn_id=txn_id)
-        if not intents:
-            return None
-        return {
-            "path": self.path,
-            "renames": [r for it in intents for r in it["renames"]],
-            "actions": [it["action"] for it in intents],
-        }
+        intent = self.flush(_txn_id=txn_id)
+        return None if intent is None else {"path": self.path, **intent}
 
     # ------------------------------------------------------------------
     # read path: raw frames
@@ -4666,9 +4751,104 @@ class _MutationBatchCM:
 
 
 def _now():
+    """The commit instant for buffered rows: an AWARE UTC datetime, so
+    every conversion (Spark's and Arrow's alike) reads the same
+    instant whatever the process time zone is."""
     import datetime
 
-    return datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    return datetime.datetime.now(datetime.timezone.utc)
+
+
+# ---------------------------------------------------------------------------
+# driver-side Parquet writes of the point-op buffers (LineageTable.flush)
+# ---------------------------------------------------------------------------
+def _arrow_rows(rows: list[tuple], schema: T.StructType):
+    """Buffered rows as a ``pyarrow.Table`` with the Arrow schema
+    PySpark gives ``schema`` (``to_arrow_schema``), through PySpark's
+    own local-data conversion — the values Spark's ``createDataFrame``
+    would hold, naive datetimes of a ``TimestampType`` column read as
+    process-local time exactly as it reads them."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+
+    return LocalDataToArrowConversion.convert(rows, schema, False)
+
+
+def _write_parquet(tbl, path: str, stat_cols: list[str]) -> None:
+    """One Parquet file of a flush: snappy, no Arrow schema blob in the
+    footer, min/max statistics only for the columns the file log
+    records, and no dictionary pages — a flush holds a few dozen rows,
+    too few for a dictionary to pay for its page."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        tbl,
+        path,
+        store_schema=False,
+        use_dictionary=False,
+        write_statistics=[c for c in stat_cols if c in tbl.column_names],
+    )
+
+
+# Spark's ExternalCatalogUtils.charToEscape (the POSIX set)
+_HIVE_ESCAPE = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(i) for i in range(1, 32)}
+
+
+def _hive_escape(s: str) -> str:
+    """Spark's ``ExternalCatalogUtils.escapePathName``."""
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPE else c for c in s)
+
+
+def _hive_partition_dir(cols: list[str], values, types, tz) -> str:
+    """The Hive partition directory Spark's writer names for one row:
+    ``col=value`` per partition column, the value as Spark's cast to
+    string renders it (timestamps in the session zone ``tz``),
+    escaped, and ``__HIVE_DEFAULT_PARTITION__`` for NULL or ''."""
+    out = []
+    for c, v, t in zip(cols, values, types):
+        if v is None:
+            s = ""
+        elif isinstance(t, T.BooleanType):
+            s = "true" if v else "false"
+        elif isinstance(t, (T.TimestampType, T.TimestampNTZType)):
+            if isinstance(t, T.TimestampType):
+                v = v.astimezone(tz)
+            s = v.strftime("%Y-%m-%d %H:%M:%S")
+            if v.microsecond:
+                s += f".{v.microsecond:06d}".rstrip("0")
+        elif isinstance(t, (T.FloatType, T.DoubleType)):
+            s = _java_float_str(v, isinstance(t, T.FloatType))
+        elif isinstance(t, T.BinaryType):
+            s = bytes(v).decode("utf-8", "replace")
+        else:  # integral, string, date (ISO), decimal (same rule as Java's)
+            s = str(v)
+        out.append(f"{_hive_escape(c)}={_hive_escape(s) if s else '__HIVE_DEFAULT_PARTITION__'}")
+    return "/".join(out)
+
+
+def _java_float_str(v: float, single: bool) -> str:
+    """Java's ``Double.toString`` / ``Float.toString`` layout of the
+    shortest round-trip digits: positional in [1e-3, 1e7), else
+    ``d.dddE<n>``."""
+    import decimal
+    import math
+
+    if math.isnan(v):
+        return "NaN"
+    if math.isinf(v):
+        return "Infinity" if v > 0 else "-Infinity"
+    if single:
+        import numpy as np
+
+        d = decimal.Decimal(str(np.float32(v)))
+    else:
+        d = decimal.Decimal(repr(v))
+    if v == 0 or 1e-3 <= abs(v) < 1e7:
+        s = format(d, "f")
+        return s if "." in s else s + ".0"
+    sign, digits, exp = d.normalize().as_tuple()
+    ds = "".join(map(str, digits))
+    mant = ds[0] + "." + (ds[1:] or "0")
+    return f"{'-' if sign else ''}{mant}E{len(ds) - 1 + exp}"
 
 
 # ---------------------------------------------------------------------------
