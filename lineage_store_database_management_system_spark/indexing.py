@@ -27,21 +27,46 @@ Correctness contract (stale-tolerant, verify-at-read):
   through the current view and re-applying ``col == v`` drops stale
   entries (value changed away) and tombstoned records. So lookups are
   exact at ANY staleness; rebuild frequency only tunes cost.
+
+Layout: ``v<N>/_b=<b>/`` holds ONE Parquet file per bucket, sorted by
+value (build and refresh both shuffle by ``_b`` before the partitioned
+write), so a bucket's file count does not grow with refreshes and a
+value filter skips row groups. ``n_buckets`` therefore also sets the
+write parallelism and the per-file size of a build.
+
+Cost of keeping it current (:func:`maybe_refresh_secondary_index`):
+one watermark-pruned delta collect, one fold of the touched rids, one
+2-column index scan and one shuffled write of the affected buckets —
+about 7 Spark jobs a refresh, each rewritten bucket left as one file.
+A hash-layout :func:`indexed_lookup` computes its bucket inside the
+query and reads the index with its known schema, so neither starts a
+job of its own.
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
+import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .lineage import OP, OP_UPDATE, RID, SEQ, LineageTable, _atomic_write_json
+from .lineage import (
+    OP,
+    OP_UPDATE,
+    RID,
+    SEQ,
+    LineageTable,
+    _atomic_write_json,
+    _sql_in,
+)
 
 _META_FILE = "_index_meta.json"
 
-# Driver-side rid-list cap for the isin fast path. Below it, matching
+# Driver-side rid-list cap for the IN fast path. Below it, matching
 # rids become a pushed-down ``_rid IN (...)`` filter on the base and
 # tail scans (the true index win: scans read only matching row
 # groups). Above it, the lookup falls back to a broadcast semi-join —
@@ -66,13 +91,42 @@ def _data_dir(table: LineageTable, col: str, meta: dict) -> str:
     return root if v is None else os.path.join(root, f"v{v}")
 
 
-def _bucket_expr(col: str, meta: dict):
-    """The bucket-assignment expression, shared by build and refresh
-    so stored buckets and partition-filter literals always agree."""
+def _read_index(table: LineageTable, col: str, meta: dict) -> DataFrame:
+    """The current index version as ``(col, _rid, _b)``, read with its
+    known schema: no schema-inference job."""
+    schema = T.StructType(
+        [
+            T.StructField(col, table.schema[col].dataType),
+            T.StructField(RID, T.LongType()),
+            T.StructField("_b", T.IntegerType()),
+        ]
+    )
+    return table.spark.read.schema(schema).parquet(_data_dir(table, col, meta))
+
+
+def _bucket_expr(value: Column, meta: dict) -> Column:
+    """The bucket-assignment expression, shared by build, refresh and
+    the point lookup so stored buckets and partition-filter literals
+    always agree. Over a literal it constant-folds into a partition
+    filter."""
     if meta.get("layout", "hash") == "range":
         arr = F.array(*[F.lit(float(b)) for b in meta.get("boundaries", [])])
-        return F.size(F.filter(arr, lambda x: F.col(col).cast("double") > x))
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(int(meta["n_buckets"])))
+        return F.size(F.filter(arr, lambda x: value.cast("double") > x))
+    return F.pmod(F.xxhash64(value), F.lit(int(meta["n_buckets"]))).cast("int")
+
+
+def _write_buckets(pairs: DataFrame, col: str, out: str) -> None:
+    """Write ``(col, _rid, _b)`` pairs as ``out/_b=<b>/``: shuffled by
+    bucket first, so each bucket is ONE file whatever the input's
+    partitioning, sorted by value inside it (the sort the partitioned
+    writer needs anyway, with the value appended)."""
+    (
+        pairs.repartition("_b")
+        .sortWithinPartitions("_b", col)
+        .write.mode("overwrite")
+        .partitionBy("_b")
+        .parquet(out)
+    )
 
 
 def _publish(table: LineageTable, col: str, meta: dict) -> None:
@@ -89,8 +143,6 @@ def _publish(table: LineageTable, col: str, meta: dict) -> None:
             except ValueError:
                 continue
             if v < cur - 1:
-                import shutil
-
                 shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
 
@@ -99,8 +151,8 @@ def build_secondary_index(
 ) -> str:
     """Build (or rebuild) the secondary index for ``col``.
 
-    One job: current view -> (value, rid, bucket) -> Parquet
-    partitioned by bucket. Two layouts:
+    One fold of the current view -> (value, rid, bucket) -> one
+    shuffle by bucket -> one Parquet file per bucket. Two layouts:
 
     * ``layout='hash'`` — bucket = ``pmod(xxhash64(value),
       n_buckets)``: a POINT lookup prunes to one partition
@@ -132,8 +184,6 @@ def build_secondary_index(
     meta: dict = {"col": col, "n_buckets": n_buckets, "built_watermark": wm,
                   "layout": layout, "version": version}
     if layout == "range":
-        import pyspark.sql.types as T
-
         if not isinstance(table.schema[col].dataType, T.NumericType):
             raise ValueError(
                 f"layout='range' needs a numeric column, got "
@@ -144,16 +194,13 @@ def build_secondary_index(
         meta["boundaries"] = boundaries
     elif layout != "hash":
         raise ValueError(f"unknown layout {layout!r} (hash|range)")
-    pairs = live.withColumn("_b", _bucket_expr(col, meta))
     out = os.path.join(root, f"v{version}")
-    pairs.write.mode("overwrite").partitionBy("_b").parquet(out)
+    _write_buckets(live.withColumn("_b", _bucket_expr(F.col(col), meta)), col, out)
     _publish(table, col, meta)
     return out
 
 
 def drop_secondary_index(table: LineageTable, col: str) -> None:
-    import shutil
-
     shutil.rmtree(index_dir(table, col), ignore_errors=True)
 
 
@@ -162,41 +209,47 @@ def _index_meta(table: LineageTable, col: str) -> dict:
         return json.load(f)
 
 
-def _bucket_of(table: LineageTable, col: str, value, n_buckets: int) -> int:
-    """The bucket a literal hashes to — computed by the SAME engine
-    function that bucketed the index (xxhash64 is type-sensitive, so
-    the literal is cast to the column's type first). One 1-row local
-    job; the result is a partition-filter literal."""
-    lit = F.lit(value).cast(table.schema[col].dataType)
-    row = (
-        table.spark.range(1)
-        .select(F.pmod(F.xxhash64(lit), F.lit(n_buckets)).alias("b"))
-        .first()
-    )
-    return int(row["b"])
-
-
 def _range_bucket_of(boundaries: list, value) -> int:
     """Quantile bucket of a literal: the number of boundaries strictly
     below it — EXACTLY what the build-time expression
     ``size(filter(boundaries, x -> value > x))`` computes, so the
     partition-filter literal and the stored buckets always agree."""
-    import bisect
-
     return bisect.bisect_left(boundaries, float(value))
+
+
+def _collect_rids(df: DataFrame, cap: int) -> list[int]:
+    """Up to ``cap`` ``_rid`` values of ``df`` (repeats kept), in ONE
+    job: a limit over several partitions runs a job per scale-up round
+    of partitions scanned; over one partition it runs one job, which
+    stops reading once ``cap`` rows are in."""
+    return [r[0] for r in df.select(RID).coalesce(1).limit(cap).collect()]
+
+
+def _fresh_rids(table: LineageTable, wm: int, cond=None) -> DataFrame:
+    """Rids of the deltas past watermark ``wm``: fresh base inserts and
+    tail rows (with ``cond``, only inserts and updates that satisfy it).
+    Both scans skip files by their logged id range before Spark opens
+    one, then filter rows."""
+    base = table.base_df(prune={RID: (wm + 1, None)}).where(F.col(RID) > wm)
+    tail = table.tail_df(prune={SEQ: (wm + 1, None)}).where(F.col(SEQ) > wm)
+    if cond is not None:
+        base = base.where(cond)
+        tail = tail.where((F.col(OP) == OP_UPDATE) & cond)
+    return base.select(F.col(RID)).unionByName(tail.select(F.col(RID)))
 
 
 def _resolve_and_verify(table: LineageTable, rid_df: DataFrame, cond) -> DataFrame:
     """Fold the candidate rids through the current view and re-apply
     the predicate: stale index entries (value changed away) and
     tombstoned records drop out, making lookups exact at any index
-    staleness (module docstring). Below ISIN_CAP the rid set becomes
-    a pushed-down ``_rid IN (...)`` on base AND tail scans; above it,
-    a broadcast semi-join — never a full unpruned fold."""
-    rids = [r[RID] for r in rid_df.limit(ISIN_CAP + 1).collect()]
+    staleness (module docstring). Up to ISIN_CAP candidate rows the
+    rid set becomes a pushed-down ``_rid IN (...)`` on base AND tail
+    scans; above it, a broadcast semi-join — never a full unpruned
+    fold."""
+    rids = _collect_rids(rid_df, ISIN_CAP + 1)
     cur = table.current_view(include_meta=True)
     if len(rids) <= ISIN_CAP:
-        hit = cur.where(F.col(RID).isin(rids)) if rids else cur.where(F.lit(False))
+        hit = cur.where(_sql_in(RID, set(rids)))
     else:  # pragma: no cover - degenerate selectivity; stay distributed
         hit = cur.join(F.broadcast(rid_df), on=RID, how="left_semi")
     return hit.where(cond).select(*table.user_cols)
@@ -219,7 +272,6 @@ def indexed_range_lookup(table: LineageTable, col: str, lo=None, hi=None) -> Dat
     if lo is None and hi is None:
         raise ValueError("indexed_range_lookup needs at least one bound")
     meta = _index_meta(table, col)
-    wm = int(meta["built_watermark"])
     dt = table.schema[col].dataType
     conds = []
     if lo is not None:
@@ -228,31 +280,25 @@ def indexed_range_lookup(table: LineageTable, col: str, lo=None, hi=None) -> Dat
         conds.append(F.col(col) <= F.lit(hi).cast(dt))
     cond = conds[0] if len(conds) == 1 else conds[0] & conds[1]
 
-    idx = table.spark.read.parquet(_data_dir(table, col, meta))
+    idx = _read_index(table, col, meta)
     if meta.get("layout", "hash") == "range":
         bnd = meta.get("boundaries", [])
         blo = _range_bucket_of(bnd, lo) if lo is not None else 0
         bhi = _range_bucket_of(bnd, hi) if hi is not None else len(bnd)
         idx = idx.where(F.col("_b").between(blo, bhi))
-    idx = idx.where(cond).select(F.col(RID))
-    fresh_base = (
-        table.base_df().where((F.col(RID) > wm) & cond).select(F.col(RID))
+    rid_df = idx.where(cond).select(F.col(RID)).unionByName(
+        _fresh_rids(table, int(meta["built_watermark"]), cond)
     )
-    fresh_tail = (
-        table.tail_df()
-        .where((F.col(SEQ) > wm) & (F.col(OP) == OP_UPDATE) & cond)
-        .select(F.col(RID))
-    )
-    rid_df = idx.unionByName(fresh_base).unionByName(fresh_tail).distinct()
     return _resolve_and_verify(table, rid_df, cond)
 
 
 def indexed_lookup(table: LineageTable, col: str, value) -> DataFrame:
     """Exact point lookup ``col == value`` accelerated by the index.
 
-    Reads: one index partition (partition-pruned by bucket, value
-    filter pushed), plus base/tail rows with ids past the build
-    watermark (monotone ids make "since the build" a pushed-down range
+    Reads: one index partition (the bucket is computed inside the
+    query and constant-folds into a partition filter; value filter
+    pushed), plus base/tail rows with ids past the build watermark
+    (monotone ids make "since the build" a file-skipping range
     predicate), plus the current-view fold restricted to the matching
     rids. Stale index entries and deleted records are dropped by the
     re-verify filter / the fold itself — see the module docstring for
@@ -260,118 +306,72 @@ def indexed_lookup(table: LineageTable, col: str, value) -> DataFrame:
     if value is None:
         raise ValueError("indexed_lookup on NULL is not supported")
     meta = _index_meta(table, col)
-    wm = int(meta["built_watermark"])
     lit = F.lit(value).cast(table.schema[col].dataType)
     if meta.get("layout", "hash") == "range":
-        b = _range_bucket_of(meta.get("boundaries", []), value)
+        b = F.lit(_range_bucket_of(meta.get("boundaries", []), value))
     else:
-        b = _bucket_of(table, col, value, int(meta["n_buckets"]))
-
-    idx = (
-        table.spark.read.parquet(_data_dir(table, col, meta))
-        .where((F.col("_b") == b) & (F.col(col) == lit))
+        b = _bucket_expr(lit, meta)
+    cond = F.col(col) == lit
+    rid_df = (
+        _read_index(table, col, meta)
+        .where((F.col("_b") == b) & cond)
         .select(F.col(RID))
+        .unionByName(_fresh_rids(table, int(meta["built_watermark"]), cond))
     )
-    # records inserted with v, or updated to v, after the build
-    fresh_base = (
-        table.base_df()
-        .where((F.col(RID) > wm) & (F.col(col) == lit))
-        .select(F.col(RID))
-    )
-    fresh_tail = (
-        table.tail_df()
-        .where((F.col(SEQ) > wm) & (F.col(OP) == OP_UPDATE) & (F.col(col) == lit))
-        .select(F.col(RID))
-    )
-    rid_df = idx.unionByName(fresh_base).unionByName(fresh_tail).distinct()
-    return _resolve_and_verify(table, rid_df, F.col(col) == lit)
+    return _resolve_and_verify(table, rid_df, cond)
 
 
 def index_staleness(table: LineageTable, col: str) -> dict:
     """How far the index lags the table: the number of delta rows
     (tail entries + fresh base inserts) every lookup must catch up on.
-    Two watermark-pruned COUNT jobs — the scans read only pruned id
+    One watermark-pruned COUNT job — the scans read only pruned id
     ranges, never values. Lookups stay EXACT at any staleness (module
     docstring); this measures their creeping per-lookup cost."""
     meta = _index_meta(table, col)
     wm = int(meta["built_watermark"])
-    tail_n = table.tail_df().where(F.col(SEQ) > wm).count()
-    base_n = table.base_df().where(F.col(RID) > wm).count()
     return {
         "col": col,
         "built_watermark": wm,
         "watermark": table.watermark(),
-        "stale_deltas": tail_n + base_n,
+        "stale_deltas": _fresh_rids(table, wm).count(),
     }
 
 
-def refresh_secondary_index(
-    table: LineageTable, col: str, rebuild_above: int = ISIN_CAP
+def _refresh(
+    table: LineageTable, col: str, meta: dict, wm_new: int, deltas: list[int],
+    rebuild_above: int,
 ) -> str:
-    """Incrementally catch the index up to the table watermark — the
-    write-path maintenance policy that keeps lookup-time delta
-    catch-up bounded (VERDICT r4 item 6), reusing the watermark-diff
-    machinery of the aggregate-MV maintainer (catalog.py):
-
-    1. The touched rid set comes straight from the deltas past the
-       build watermark (monotone ids make this a pruned range scan).
-    2. Affected buckets = buckets holding a touched rid's OLD entry
-       (one rid-filtered 2-column index scan) union buckets its NEW
-       value hashes into (current view folded for touched rids only).
-    3. ONLY those buckets rewrite (old entries minus touched rids,
-       plus the touched rids' live pairs); every untouched bucket's
-       immutable files hardlink into the new version dir.
-    4. One atomic meta rewrite publishes the new version; the prior
-       version is retained for in-flight readers, older ones reclaim.
-
-    Cost tracks churn (affected buckets), not index size. Above
-    ``rebuild_above`` touched rids — or on a legacy unversioned
-    layout — falls back to a full rebuild. Returns 'fresh',
-    'incremental', or 'rebuild'."""
-    import shutil
-
-    meta = _index_meta(table, col)
-    wm_old = int(meta["built_watermark"])
-    wm_new = table.watermark()
-    if wm_new == wm_old:
-        return "fresh"
-    if "version" not in meta:  # pragma: no cover - legacy flat layout
+    """Catch the index up to ``wm_new`` from ``deltas``, the rids of
+    every delta row past the build watermark (collected AFTER
+    ``wm_new`` was read, so nothing at or below it is missed; later
+    deltas they may include are harmless — lookups catch up and
+    verify everything past the published watermark anyway)."""
+    if len(deltas) > rebuild_above or "version" not in meta:
+        # heavy churn, or a legacy unversioned layout
         build_secondary_index(
             table, col, int(meta["n_buckets"]), meta.get("layout", "hash")
         )
         return "rebuild"
-    touched_df = (
-        table.tail_df().where(F.col(SEQ) > wm_old).select(F.col(RID))
-        .unionByName(table.base_df().where(F.col(RID) > wm_old).select(F.col(RID)))
-        .distinct()
-    )
-    rids = [r[RID] for r in touched_df.limit(rebuild_above + 1).collect()]
-    if len(rids) > rebuild_above:
-        build_secondary_index(
-            table, col, int(meta["n_buckets"]), meta.get("layout", "hash")
-        )
-        return "rebuild"
-    old_dir = _data_dir(table, col, meta)
-    idx = table.spark.read.parquet(old_dir)
+    touched = _sql_in(RID, set(deltas))
+    # the touched rids' live pairs, folded once; bounded by rebuild_above
     new_pairs = (
         table.current_view(include_meta=True)
-        .where(F.col(RID).isin(rids))
-        .select(F.col(col), F.col(RID))
+        .where(touched)
+        .select(F.col(col), F.col(RID), _bucket_expr(F.col(col), meta).alias("_b"))
         .where(F.col(col).isNotNull())
-        .withColumn("_b", _bucket_expr(col, meta))
+        .toArrow()
     )
-    affected = {
-        r["_b"]
-        for r in idx.where(F.col(RID).isin(rids)).select("_b").distinct().collect()
-    } | {r["_b"] for r in new_pairs.select("_b").distinct().collect()}
+    idx = _read_index(table, col, meta)
+    affected = set(new_pairs.column("_b").to_pylist()) | {
+        r[0] for r in idx.where(touched).select("_b").collect()
+    }
+    old_dir = _data_dir(table, col, meta)
     version = int(meta["version"]) + 1
     new_dir = os.path.join(index_dir(table, col), f"v{version}")
     if affected:
-        merged = (
-            idx.where(F.col("_b").isin(list(affected)) & ~F.col(RID).isin(rids))
-            .unionByName(new_pairs)
-        )
-        merged.write.mode("overwrite").partitionBy("_b").parquet(new_dir)
+        kept = idx.where(_sql_in("_b", affected) & ~touched)
+        new = table.spark.createDataFrame(new_pairs, idx.schema)
+        _write_buckets(kept.unionByName(new), col, new_dir)
     os.makedirs(new_dir, exist_ok=True)
     # hardlink untouched buckets' immutable files (metadata-only copies)
     for name in os.listdir(old_dir):
@@ -395,18 +395,61 @@ def refresh_secondary_index(
     return "incremental"
 
 
+def refresh_secondary_index(
+    table: LineageTable, col: str, rebuild_above: int = ISIN_CAP
+) -> str:
+    """Incrementally catch the index up to the table watermark — the
+    write-path maintenance policy that keeps lookup-time delta
+    catch-up bounded (VERDICT r4 item 6), reusing the watermark-diff
+    machinery of the aggregate-MV maintainer (catalog.py):
+
+    1. The touched rids come straight from the deltas past the build
+       watermark: one collect of a file-skipping id-range scan.
+    2. One fold of the current view restricted to the touched rids
+       (one ``_rid IN (...)`` pushed into base and tail scans) gives
+       their live (value, rid, bucket) rows on the driver; one
+       rid-filtered 2-column index scan gives the buckets holding
+       their OLD entries. Affected buckets = the union.
+    3. ONLY those buckets rewrite (old entries minus touched rids,
+       plus the folded rows as a local relation), one file per
+       bucket; every untouched bucket's immutable files hardlink into
+       the new version dir.
+    4. One atomic meta rewrite publishes the new version; the prior
+       version is retained for in-flight readers, older ones reclaim.
+
+    About 7 Spark jobs; cost tracks churn (affected buckets), not
+    index size. Above ``rebuild_above`` delta rows past the build
+    watermark (a rid counts once per delta; the bound also caps the
+    driver collects) — or on a legacy unversioned layout — falls back
+    to a full rebuild. Returns 'fresh', 'incremental', or 'rebuild'."""
+    meta = _index_meta(table, col)
+    wm_old = int(meta["built_watermark"])
+    wm_new = table.watermark()
+    if wm_new == wm_old:
+        return "fresh"
+    deltas = _collect_rids(_fresh_rids(table, wm_old), rebuild_above + 1)
+    return _refresh(table, col, meta, wm_new, deltas, rebuild_above)
+
+
 def maybe_refresh_secondary_index(
     table: LineageTable, col: str, max_stale_deltas: int = 10_000
 ) -> str:
     """The staleness policy: refresh only once the per-lookup delta
     catch-up exceeds ``max_stale_deltas`` rows. Call it from the write
     path (e.g. after bulk mutations or compaction) — lookups
-    themselves never mutate the index. Returns the refresh outcome,
-    or 'fresh' when under threshold."""
-    st = index_staleness(table, col)
-    if st["stale_deltas"] <= max_stale_deltas:
+    themselves never mutate the index. One delta collect gives both
+    the staleness count (:func:`index_staleness`'s number) and the
+    touched rids the refresh folds. Returns the refresh outcome, or
+    'fresh' when under threshold."""
+    meta = _index_meta(table, col)
+    wm_new = table.watermark()  # before the collect: see _refresh
+    deltas = _collect_rids(
+        _fresh_rids(table, int(meta["built_watermark"])),
+        max(max_stale_deltas, ISIN_CAP) + 1,
+    )
+    if len(deltas) <= max_stale_deltas:
         return "fresh"
-    return refresh_secondary_index(table, col)
+    return _refresh(table, col, meta, wm_new, deltas, ISIN_CAP)
 
 
 def point_lookup(

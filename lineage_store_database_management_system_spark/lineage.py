@@ -83,6 +83,50 @@ OP_DELETE = "D"
 # base/tail scans as ``_rid IN (...)``; above it, broadcast semi-join.
 _CHECK_ISIN_CAP = 100_000
 
+
+def _sql_in(col: str, values: Iterable[int]) -> Column:
+    """``col IN (v1, ...)`` over driver-side integers, built in ONE
+    py4j call: the SQL text parses on the JVM side, where
+    ``Column.isin(list)`` crosses py4j once per literal (~0.5 ms each,
+    ~50 s at 100k values). Catalyst plans both as the same
+    ``In``/``InSet`` filter, so it pushes into Parquet scans (and, for
+    a partition column, prunes directories) the same way. An empty
+    set is ``false``."""
+    text = ",".join(str(int(v)) for v in values)
+    return F.expr(f"`{col}` IN ({text})") if text else F.lit(False)
+
+
+def _orderable(dt: T.DataType) -> bool:
+    """Whether Spark orders values of ``dt``: maps (and variants) have
+    no ordering, nor does any array or struct holding one."""
+    if isinstance(dt, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
+
+
+def _latest_update(c: str, dt: T.DataType) -> Column:
+    """The fold's per-rid aggregate for a mutable column: the value of
+    ``c`` at the newest update delta that set it (non-NULL). Ordered
+    types use ``max(struct(_seq, c))`` (struct ordering is by _seq
+    first; _seq is unique, so the value never decides) and read it
+    back with :func:`_latest_value`; a type without an ordering takes
+    ``max_by(c, _seq)`` over the same rows (a NULL ordering is
+    skipped)."""
+    sets = (F.col(OP) == OP_UPDATE) & F.col(c).isNotNull()
+    if _orderable(dt):
+        return F.max(F.when(sets, F.struct(F.col(SEQ).alias("s"), F.col(c).alias("v"))))
+    return F.max_by(F.col(c), F.when(sets, F.col(SEQ)))
+
+
+def _latest_value(c: str, dt: T.DataType) -> Column:
+    """The value :func:`_latest_update` aggregated as ``__u_<c>``."""
+    return F.col(f"__u_{c}.v") if _orderable(dt) else F.col(f"__u_{c}")
+
+
 # rid/seq encoding: high 15 bits = commit batch, low 48 bits =
 # within-batch monotonic id (executor-side partition<<33 | row).
 _BATCH_SHIFT = 48
@@ -402,6 +446,9 @@ class LineageTable:
         self._pending_tail: list[tuple] = []
         self._open_batch: int | None = None
         self._batch_counter = 0
+        # groups flush() dropped on a constraint violation: a Query
+        # whose directory predates a drop may hold the dropped values
+        self.dropped_groups = 0
         # file-level manifest log (filelog.py): live-file sets + per-
         # file stats so scans plan without directory listing
         self.filelog = FileLog(path)
@@ -791,14 +838,7 @@ class LineageTable:
         ]
         aggs = [F.max(F.when(F.col(OP) == OP_DELETE, F.col(SEQ))).alias("_del_seq")]
         for c in mutable:
-            aggs.append(
-                F.max(
-                    F.when(
-                        (F.col(OP) == OP_UPDATE) & F.col(c).isNotNull(),
-                        F.struct(F.col(SEQ).alias("s"), F.col(c).alias("v")),
-                    )
-                ).alias(f"__u_{c}")
-            )
+            aggs.append(_latest_update(c, self.schema[c].dataType).alias(f"__u_{c}"))
         folded = (
             delta.groupBy(RID)
             .agg(*aggs)
@@ -817,7 +857,7 @@ class LineageTable:
         if not rids:
             return
         if len(rids) <= _CHECK_ISIN_CAP:
-            cur = cur.where(F.col(RID).isin(rids))
+            cur = cur.where(_sql_in(RID, rids))
         else:  # pragma: no cover - >100k rids in one delta batch
             cur = cur.join(
                 F.broadcast(folded.select(RID)), on=RID, how="left_semi"
@@ -826,7 +866,7 @@ class LineageTable:
             F.col(RID),
             *[
                 (
-                    F.coalesce(F.col(f"__u_{c}.v"), F.col(c))
+                    F.coalesce(_latest_value(c, self.schema[c].dataType), F.col(c))
                     if c in mutable
                     else F.col(c)
                 ).alias(c)
@@ -868,7 +908,7 @@ class LineageTable:
                     F.broadcast(vals_rows.select(c).distinct()), on=c, how="left_semi"
                 )
             if len(rids) <= _CHECK_ISIN_CAP:
-                probe = probe.where(~F.col(RID).isin(rids))
+                probe = probe.where(~_sql_in(RID, rids))
             else:  # pragma: no cover
                 probe = probe.join(
                     F.broadcast(folded.select(RID)), on=RID, how="left_anti"
@@ -1574,6 +1614,7 @@ class LineageTable:
                     targets.append((tag, target))
             intent = self._publish_staged(staging, targets, txn_hidden=_txn_id)
         except CheckViolation:  # UniqueViolation included: drops the group
+            self.dropped_groups += 1
             raise
         except BaseException:
             self._pending_base, self._pending_tail = base, tail
@@ -1866,8 +1907,9 @@ class LineageTable:
         map-side-combinable aggregate: for every user column, the value
         at the max _seq among deltas that touched it —
         ``max(struct(_seq, col))`` (struct ordering is by _seq first;
-        _seq is globally unique so the column value never decides).
-        This replaces the reference's newest-first tail-page scan
+        _seq is globally unique so the column value never decides), or
+        ``max_by(col, _seq)`` for a type with no ordering such as a map
+        (:func:`_latest_update`). This replaces the reference's newest-first tail-page scan
         (get_indirection, table.py:162-170) with one shuffle whose
         size is |tail|, independent of |base|; AQE then broadcasts the
         folded tail into the base join when it is small.
@@ -1900,14 +1942,7 @@ class LineageTable:
         for c in self.user_cols:
             if c in immutable:
                 continue
-            aggs.append(
-                F.max(
-                    F.when(
-                        (F.col(OP) == OP_UPDATE) & F.col(c).isNotNull(),
-                        F.struct(F.col(SEQ).alias("s"), F.col(c).alias("v")),
-                    )
-                ).alias(f"__u_{c}")
-            )
+            aggs.append(_latest_update(c, self.schema[c].dataType).alias(f"__u_{c}"))
         if self.tail_keyed:
             # Tail deltas carry the immutable key/partition values, so
             # grouping AND joining on them lets Catalyst infer
@@ -1934,7 +1969,7 @@ class LineageTable:
             *[
                 F.col(c)
                 if c in immutable
-                else F.coalesce(F.col(f"__u_{c}.v"), F.col(c)).alias(c)
+                else F.coalesce(_latest_value(c, self.schema[c].dataType), F.col(c)).alias(c)
                 for c in self.user_cols
             ],
         )

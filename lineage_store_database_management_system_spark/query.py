@@ -156,6 +156,7 @@ class Query:
         self.index = Index(self.ncols)
         self._directory_loaded = False
         self._dir_dirty_since_ingest = False
+        self._seen_drops = table.dropped_groups
         # no-wait record locks (reference table.py:41,57-70)
         self.locks: dict[Any, int] = {}
         self._txn: "object | None" = None  # set by Transaction.run
@@ -170,8 +171,11 @@ class Query:
         chains are NOT materialized here; ``_history_for`` rebuilds
         them lazily per rid on first ``select_version`` touch, so
         directory load is O(live rows), not O(all versions of all
-        rows)."""
-        if self._directory_loaded:
+        rows). A flush that dropped a violating group since the load
+        (the table's ``dropped_groups`` moved) forces a reload: the
+        directory may hold the dropped values."""
+        drops = self.table.dropped_groups
+        if self._directory_loaded and drops == self._seen_drops:
             return
         n = self.table.current_view().count()
         if n > MAX_DIRECTORY_ROWS:
@@ -197,6 +201,7 @@ class Query:
             rec = Record(row[RID], cols[self.key_idx], cols)
             self._register(rec)
         self._directory_loaded = True
+        self._seen_drops = drops
 
     def _history_for(self, rid: int, rec: Record) -> list[list]:
         """Version chain (oldest first) for ONE rid, rebuilt on demand

@@ -345,3 +345,47 @@ def test_multi_table_commit_stages_hidden_files_only(spark, tmp_db):
         }
         assert all(os.path.basename(h).startswith("_txn_cafe0001_") for h, _v in intent["renames"])
     assert _rows(a) == [(1, 10), (2, 20)] and _rows(b) == [(1, 10), (2, 20)]
+
+
+def test_query_reloads_its_directory_after_a_dropped_group(spark, tmp_db):
+    t = _kv(spark, tmp_db, "dropped")
+    t.add_check_constraint("v_pos", "v > 0")
+    q = Query(t)
+    assert q.update(1, None, -1)
+    with pytest.raises(CheckViolation):
+        t.flush()
+    # the group is gone from the table, and so from the point reads
+    assert [r.columns for r in q.select(1, 0, [1, 1])] == [[1, 10]]
+    assert q.update(1, None, 11)
+    t.flush()
+    assert [r.columns for r in q.select(1, 0, [1, 1])] == [[1, 11]]
+    assert _rows(_reopen(t, "dropped")) == [(1, 11), (2, 20)]
+
+
+def test_map_column_folds_through_updates_and_deletes(spark, tmp_db):
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("m", T.MapType(T.StringType(), T.LongType())),
+            T.StructField("v", T.LongType()),
+        ]
+    )
+    t = tmp_db.create_table_typed("maps", schema, "k")
+    t.ingest_dataframe(
+        spark.createDataFrame([(k, {"a": k}, k) for k in range(4)], schema)
+    )
+    t.bulk_update(spark.createDataFrame([(1, {"b": 10}, None)], schema))
+    t.bulk_update(spark.createDataFrame([(1, {"c": 11}, None), (2, None, 20)], schema.simpleString()))
+    t.bulk_delete(spark.createDataFrame([(3,)], "k long"))
+    # buffered deltas (a map cannot key the Query directory's index)
+    rid = {r["k"]: r["_rid"] for r in t.current_view(include_meta=True).collect()}
+    t.append_tail_rows([(rid[0], "U", (0, {"z": 0}, None)), (rid[2], "D", (2, None, None))])
+    t.flush()
+
+    def rows(df):
+        return sorted((r["k"], r["m"], r["v"]) for r in df.collect())
+
+    want = [(0, {"z": 0}, 0), (1, {"c": 11}, 1)]
+    assert rows(t.current_view()) == want
+    assert rows(t.version_view(-1)) == [(0, {"a": 0}, 0), (1, {"b": 10}, 1)]
+    assert rows(_reopen(t, "maps").current_view()) == want
