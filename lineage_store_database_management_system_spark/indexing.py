@@ -209,6 +209,24 @@ def _index_meta(table: LineageTable, col: str) -> dict:
         return json.load(f)
 
 
+def _below_floor(table: LineageTable, meta: dict) -> bool:
+    """Whether :meth:`LineageTable.vacuum_tail` dropped deltas past the
+    build watermark: they are folded into the snapshot, but gone from
+    the tail the delta catch-up reads."""
+    floor = table.manifest.extra.get("history_floor")
+    return floor is not None and int(meta["built_watermark"]) < int(floor)
+
+
+def _lookup_meta(table: LineageTable, col: str) -> dict:
+    """The meta of an index that can answer a lookup: one left below
+    the vacuum floor is rebuilt first (see :func:`_refresh`)."""
+    meta = _index_meta(table, col)
+    if _below_floor(table, meta):
+        refresh_secondary_index(table, col)
+        meta = _index_meta(table, col)
+    return meta
+
+
 def _range_bucket_of(boundaries: list, value) -> int:
     """Quantile bucket of a literal: the number of boundaries strictly
     below it — EXACTLY what the build-time expression
@@ -271,7 +289,7 @@ def indexed_range_lookup(table: LineageTable, col: str, lo=None, hi=None) -> Dat
     verify-at-read are identical to :func:`indexed_lookup`."""
     if lo is None and hi is None:
         raise ValueError("indexed_range_lookup needs at least one bound")
-    meta = _index_meta(table, col)
+    meta = _lookup_meta(table, col)
     dt = table.schema[col].dataType
     conds = []
     if lo is not None:
@@ -305,7 +323,7 @@ def indexed_lookup(table: LineageTable, col: str, value) -> DataFrame:
     why this is exact at any staleness."""
     if value is None:
         raise ValueError("indexed_lookup on NULL is not supported")
-    meta = _index_meta(table, col)
+    meta = _lookup_meta(table, col)
     lit = F.lit(value).cast(table.schema[col].dataType)
     if meta.get("layout", "hash") == "range":
         b = F.lit(_range_bucket_of(meta.get("boundaries", []), value))
@@ -346,8 +364,9 @@ def _refresh(
     ``wm_new`` was read, so nothing at or below it is missed; later
     deltas they may include are harmless — lookups catch up and
     verify everything past the published watermark anyway)."""
-    if len(deltas) > rebuild_above or "version" not in meta:
-        # heavy churn, or a legacy unversioned layout
+    if len(deltas) > rebuild_above or "version" not in meta or _below_floor(table, meta):
+        # heavy churn, a legacy unversioned layout, or deltas vacuumed
+        # away before they were caught up
         build_secondary_index(
             table, col, int(meta["n_buckets"]), meta.get("layout", "hash")
         )
@@ -437,17 +456,18 @@ def maybe_refresh_secondary_index(
     """The staleness policy: refresh only once the per-lookup delta
     catch-up exceeds ``max_stale_deltas`` rows. Call it from the write
     path (e.g. after bulk mutations or compaction) — lookups
-    themselves never mutate the index. One delta collect gives both
-    the staleness count (:func:`index_staleness`'s number) and the
-    touched rids the refresh folds. Returns the refresh outcome, or
-    'fresh' when under threshold."""
+    themselves mutate the index only to rebuild one left below the
+    vacuum floor. One delta collect gives both the staleness count
+    (:func:`index_staleness`'s number) and the touched rids the
+    refresh folds; an index below the floor always refreshes. Returns
+    the refresh outcome, or 'fresh' when under threshold."""
     meta = _index_meta(table, col)
     wm_new = table.watermark()  # before the collect: see _refresh
     deltas = _collect_rids(
         _fresh_rids(table, int(meta["built_watermark"])),
         max(max_stale_deltas, ISIN_CAP) + 1,
     )
-    if len(deltas) <= max_stale_deltas:
+    if len(deltas) <= max_stale_deltas and not _below_floor(table, meta):
         return "fresh"
     return _refresh(table, col, meta, wm_new, deltas, ISIN_CAP)
 
@@ -474,7 +494,6 @@ def point_lookup(
     Always exact; the dispatch only chooses the cheapest plan. This
     is the engine-side analogue of the reference's Query.select always
     consulting ``Index.locate`` first (reference query.py:86-113)."""
-    lit = F.lit(value).cast(table.schema[col].dataType)
     if col == table.key:
         return table.current_view(key_range=(value, value))
     meta_path = os.path.join(index_dir(table, col), _META_FILE)
@@ -486,4 +505,6 @@ def point_lookup(
         stale_commits = table.manifest.next_batch - 1 - built_batch
         if stale_commits <= max_stale_commits:
             return indexed_lookup(table, col, value)
-    return table.current_view().where(F.col(col) == lit)
+    return table.current_view().where(
+        F.col(col) == F.lit(value).cast(table.schema[col].dataType)
+    )

@@ -57,7 +57,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any, Iterable, NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -108,23 +108,55 @@ def _orderable(dt: T.DataType) -> bool:
     return True
 
 
-def _latest_update(c: str, dt: T.DataType) -> Column:
-    """The fold's per-rid aggregate for a mutable column: the value of
-    ``c`` at the newest update delta that set it (non-NULL). Ordered
-    types use ``max(struct(_seq, c))`` (struct ordering is by _seq
+def _q(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """``dt`` as SQL type text. Array elements and map values come
+    back nullable: SQL has no syntax for ``containsNull=False``."""
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            f"{_q(f.name)}:{_sql_type(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
+            for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_sql_type(dt.keyType)},{_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+# The fold is built as SQL text, one py4j call per expression (as
+# ``_sql_in`` does for IN-lists): each Column-API call is its own py4j
+# round trip, and a fold over a few columns made hundreds of them.
+# Catalyst resolves the text to the same logical plan.
+_DEL_SEQ = f"max(CASE WHEN {_q(OP)} = '{OP_DELETE}' THEN {_q(SEQ)} END) AS `_del_seq`"
+
+
+def _latest_update(c: str, dt: T.DataType) -> str:
+    """The fold's per-rid aggregate for a mutable column, as SQL text
+    aliased ``__u_<c>``: the value of ``c`` at the newest update delta
+    that set it (non-NULL). Ordered types use
+    ``max(struct(_seq AS s, c AS v))`` (struct ordering is by _seq
     first; _seq is unique, so the value never decides) and read it
     back with :func:`_latest_value`; a type without an ordering takes
     ``max_by(c, _seq)`` over the same rows (a NULL ordering is
     skipped)."""
-    sets = (F.col(OP) == OP_UPDATE) & F.col(c).isNotNull()
+    sets = f"{_q(OP)} = '{OP_UPDATE}' AND {_q(c)} IS NOT NULL"
     if _orderable(dt):
-        return F.max(F.when(sets, F.struct(F.col(SEQ).alias("s"), F.col(c).alias("v"))))
-    return F.max_by(F.col(c), F.when(sets, F.col(SEQ)))
+        agg = f"max(CASE WHEN {sets} THEN struct({_q(SEQ)} AS s, {_q(c)} AS v) END)"
+    else:
+        agg = f"max_by({_q(c)}, CASE WHEN {sets} THEN {_q(SEQ)} END)"
+    return f"{agg} AS {_q('__u_' + c)}"
 
 
-def _latest_value(c: str, dt: T.DataType) -> Column:
-    """The value :func:`_latest_update` aggregated as ``__u_<c>``."""
-    return F.col(f"__u_{c}.v") if _orderable(dt) else F.col(f"__u_{c}")
+def _latest_value(c: str, dt: T.DataType) -> str:
+    """``c`` after the fold, as SQL text aliased ``c``: the value
+    :func:`_latest_update` aggregated, else the base value."""
+    u = _q("__u_" + c) + (".`v`" if _orderable(dt) else "")
+    return f"coalesce({u}, {_q(c)}) AS {_q(c)}"
 
 
 # rid/seq encoding: high 15 bits = commit batch, low 48 bits =
@@ -836,13 +868,11 @@ class LineageTable:
             c for c in self.user_cols
             if c != self.key and c not in self.partition_by
         ]
-        aggs = [F.max(F.when(F.col(OP) == OP_DELETE, F.col(SEQ))).alias("_del_seq")]
-        for c in mutable:
-            aggs.append(_latest_update(c, self.schema[c].dataType).alias(f"__u_{c}"))
+        aggs = [_DEL_SEQ, *(_latest_update(c, self.schema[c].dataType) for c in mutable)]
         folded = (
             delta.groupBy(RID)
-            .agg(*aggs)
-            .where(F.col("_del_seq").isNull())
+            .agg(*map(F.expr, aggs))
+            .where("`_del_seq` IS NULL")
         )
         if view is None:
             view = self.current_view(include_meta=True)
@@ -862,16 +892,14 @@ class LineageTable:
             cur = cur.join(
                 F.broadcast(folded.select(RID)), on=RID, how="left_semi"
             )
-        post = folded.join(cur, on=RID, how="inner").select(
-            F.col(RID),
+        post = folded.join(cur, on=RID, how="inner").selectExpr(
+            _q(RID),
             *[
-                (
-                    F.coalesce(_latest_value(c, self.schema[c].dataType), F.col(c))
-                    if c in mutable
-                    else F.col(c)
-                ).alias(c)
+                _latest_value(c, self.schema[c].dataType)
+                if c in mutable
+                else f"{_q(c)} AS {_q(c)}"
                 for c in self.user_cols
-            ]
+            ],
         )
         if checks:
             row = post.agg(*self._check_aggs().values()).collect()[0].asDict()
@@ -1851,8 +1879,8 @@ class LineageTable:
             snap = self._df_from_entries(
                 os.path.join(files.root, files.snap_tag), self.base_schema, files.snap
             )
-            base = snap.unionByName(base.where(F.col(RID) > F.lit(files.rid_hi)))
-            tail = tail.where(F.col(SEQ) > F.lit(files.tps))
+            base = snap.unionByName(base.where(f"{_q(RID)} > {int(files.rid_hi)}"))
+            tail = tail.where(f"{_q(SEQ)} > {int(files.tps)}")
         if files.key_range is not None:
             lo, hi = files.key_range
             kc = F.col(self.key)
@@ -1935,14 +1963,10 @@ class LineageTable:
         # is what lets Catalyst push key predicates AND partition
         # pruning through the left-outer join into the base scan.
         immutable = {self.key, *self.partition_by}
-        aggs = [
-            F.max(F.when(F.col(OP) == OP_DELETE, F.col(SEQ))).alias("_del_seq"),
-            F.max(F.col(SEQ)).alias("_last_seq"),
-        ]
+        aggs = [_DEL_SEQ, f"max({_q(SEQ)}) AS `_last_seq`"]
         for c in self.user_cols:
-            if c in immutable:
-                continue
-            aggs.append(_latest_update(c, self.schema[c].dataType).alias(f"__u_{c}"))
+            if c not in immutable:
+                aggs.append(_latest_update(c, self.schema[c].dataType))
         if self.tail_keyed:
             # Tail deltas carry the immutable key/partition values, so
             # grouping AND joining on them lets Catalyst infer
@@ -1952,7 +1976,7 @@ class LineageTable:
             join_cols = [RID, self.key, *self.partition_by]
         else:
             join_cols = [RID]
-        folded = tail.groupBy(*join_cols).agg(*aggs)
+        folded = tail.groupBy(*join_cols).agg(*map(F.expr, aggs))
         if broadcast_tail:
             # Stats-driven (ANALYZE): the folded tail is small enough
             # to broadcast, but Catalyst cannot see through the
@@ -1962,17 +1986,19 @@ class LineageTable:
             folded = F.broadcast(folded)
         joined = base.join(folded, on=join_cols, how="left")
         if drop_deleted:
-            joined = joined.where(F.col("_del_seq").isNull())
-        return joined.select(
-            F.col(RID),
-            F.col(TS),
+            joined = joined.where("`_del_seq` IS NULL")
+        return joined.selectExpr(
+            _q(RID),
+            _q(TS),
             *[
-                F.col(c)
-                if c in immutable
-                else F.coalesce(_latest_value(c, self.schema[c].dataType), F.col(c)).alias(c)
+                _q(c) if c in immutable else _latest_value(c, self.schema[c].dataType)
                 for c in self.user_cols
             ],
         )
+
+    def _user_view(self, df: DataFrame) -> DataFrame:
+        """``df`` projected to the user columns, as SQL text."""
+        return df.selectExpr(*map(_q, self.user_cols))
 
     def current_view(
         self,
@@ -2022,9 +2048,7 @@ class LineageTable:
         out = self._fold_tail(
             base, tail, tail_known_empty=known_empty, broadcast_tail=broadcast_tail
         )
-        if not include_meta:
-            out = out.select(*self.user_cols)
-        return out
+        return out if include_meta else self._user_view(out)
 
     def version_view(
         self,
@@ -2079,23 +2103,18 @@ class LineageTable:
             # sort outright (guide §2.4: window keyed like the
             # following aggregation needs no second shuffle).
             wcols = [RID, self.key, *self.partition_by] if self.tail_keyed else [RID]
-            w = (
-                Window.partitionBy(*wcols)
-                .orderBy(F.desc(SEQ))
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            urank = (
+                f"sum(CASE WHEN {_q(OP)} = '{OP_UPDATE}' THEN 1 ELSE 0 END) OVER ("
+                f"PARTITION BY {', '.join(map(_q, wcols))} ORDER BY {_q(SEQ)} DESC "
+                "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
             )
-            urank = F.sum(
-                F.when(F.col(OP) == OP_UPDATE, 1).otherwise(0)
-            ).over(w)
             tail = (
-                tail.withColumn("_urn", urank)
-                .where((F.col(OP) != OP_UPDATE) | (F.col("_urn") > k))
+                tail.withColumn("_urn", F.expr(urank))
+                .where(f"{_q(OP)} != '{OP_UPDATE}' OR `_urn` > {k}")
                 .drop("_urn")
             )
         out = self._fold_tail(base, tail, tail_known_empty=known_empty)
-        if not include_meta:
-            out = out.select(*self.user_cols)
-        return out
+        return out if include_meta else self._user_view(out)
 
     # ------------------------------------------------------------------
     # schema evolution (extension — the reference's schema is fixed at
@@ -2543,7 +2562,7 @@ class LineageTable:
                 out = out.where(F.col(c) >= F.lit(lo))
             if hi is not None:
                 out = out.where(F.col(c) <= F.lit(hi))
-        return out.select(*self.user_cols)
+        return self._user_view(out)
 
     def _pruned_scan(
         self,
@@ -2816,7 +2835,7 @@ class LineageTable:
             (keep if v is None or v else prunable).append((d, e))
         out = self._pruned_scan(files, every, keep, prunable, tail, dirty)
         self.last_scan_bounds["files_bloomed"] = n_bloomed
-        return out.where(F.col(column) == lit).select(*self.user_cols)
+        return self._user_view(out.where(F.col(column) == lit))
 
     def _sketch_root(self, column: str) -> str:
         return os.path.join(self.path, "distinctsketch", column)
@@ -3318,9 +3337,7 @@ class LineageTable:
             }
         base, tail, _ = self._read_state(state, wm, include_pending=True)
         out = self._fold_tail(base.where(F.col(TS) <= t), tail.where(F.col(TS) <= t))
-        if not include_meta:
-            out = out.select(*self.user_cols)
-        return out
+        return out if include_meta else self._user_view(out)
 
     def snapshot_at_commit(self, log_idx: int, include_meta: bool = False) -> DataFrame:
         """Commit-pinned time travel (the Iceberg/Delta ``VERSION AS
@@ -3379,9 +3396,7 @@ class LineageTable:
             )
         base, tail, tail_empty = self._state_frames(files)
         out = self._fold_tail(base, tail, tail_known_empty=tail_empty)
-        if not include_meta:
-            out = out.select(*self.user_cols)
-        return out
+        return out if include_meta else self._user_view(out)
 
     def _df_from_entries(
         self, path: str, schema: T.StructType, entries: list[dict]
@@ -3396,8 +3411,8 @@ class LineageTable:
             # (measured ~10x slower on a fresh/compacted table's empty
             # tail). Range(0,0) constant-folds through
             # PropagateEmptyRelation and the join collapses away.
-            return self.spark.range(0).select(
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+            return self.spark.range(0).selectExpr(
+                *[f"CAST(NULL AS {_sql_type(f.dataType)}) AS {_q(f.name)}" for f in schema.fields]
             )
         files = [os.path.join(path, e["path"]) for e in entries]
         phys = self._physical_schema(schema)
@@ -3405,8 +3420,8 @@ class LineageTable:
         m = self._phys_map
         if m:
             inv = {ph: lg for lg, ph in m.items()}
-            df = df.select(
-                *[F.col(f.name).alias(inv.get(f.name, f.name)) for f in phys.fields]
+            df = df.selectExpr(
+                *[f"{_q(f.name)} AS {_q(inv.get(f.name, f.name))}" for f in phys.fields]
             )
         return df
 
@@ -3519,9 +3534,7 @@ class LineageTable:
             ref["state"], ref.get("meta"), root=ref_dir
         )
         out = self._fold_tail(base, tail, tail_known_empty=tail_empty)
-        if not include_meta:
-            out = out.select(*self.user_cols)
-        return out
+        return out if include_meta else self._user_view(out)
 
     def diff_refs(self, a: str, b: str) -> DataFrame:
         """Row-level diff between two pinned refs — "what changed

@@ -67,18 +67,33 @@ class Record:
         )
 
 
+def _frozen(value: Any) -> Any:
+    """``value`` as a dict key: map, array and binary values (``dict``,
+    ``list`` and ``bytearray``, and structs holding them) freeze into
+    hashable forms that compare equal exactly when the values do."""
+    if isinstance(value, dict):
+        return frozenset((k, _frozen(v)) for k, v in value.items())
+    if isinstance(value, (list, tuple)):
+        return tuple(_frozen(v) for v in value)
+    if isinstance(value, bytearray):
+        return bytes(value)
+    return value
+
+
 class Index:
     """Per-column value -> [rid] hash index (reference index.py:11,
     maintained on every column). Driver-side acceleration for the
     point-op path; at scale the same role is played by Parquet
-    min/max + dictionary pushdown on the Spark path (SURVEY §2.2)."""
+    min/max + dictionary pushdown on the Spark path (SURVEY §2.2).
+    Values are keyed by :func:`_frozen`, so map and array columns
+    index too."""
 
     def __init__(self, num_columns: int):
         self.indices: list[dict[Any, list[int]]] = [dict() for _ in range(num_columns)]
 
     # I1 (index.py:17-18)
     def locate(self, column: int, value: Any) -> list[int]:
-        return list(self.indices[column].get(value, []))
+        return list(self.indices[column].get(_frozen(value), []))
 
     # I4 (index.py:42-53) — reference iterates the dense int domain; we
     # iterate the index's actual keys so any ordered type works.
@@ -91,10 +106,11 @@ class Index:
 
     # I2 (index.py:24-29)
     def add_to_index(self, column: int, value: Any, rid: int) -> None:
-        self.indices[column].setdefault(value, []).append(rid)
+        self.indices[column].setdefault(_frozen(value), []).append(rid)
 
     # I3 (index.py:35-36)
     def remove_from_index(self, column: int, value: Any, rid: int) -> None:
+        value = _frozen(value)
         lst = self.indices[column].get(value)
         if lst and rid in lst:
             lst.remove(rid)

@@ -389,3 +389,45 @@ def test_map_column_folds_through_updates_and_deletes(spark, tmp_db):
     assert rows(t.current_view()) == want
     assert rows(t.version_view(-1)) == [(0, {"a": 0}, 0), (1, {"b": 10}, 1)]
     assert rows(_reopen(t, "maps").current_view()) == want
+
+
+def test_query_point_ops_on_map_array_and_binary_columns(spark, tmp_db):
+    """The point-op directory keys map, array and binary values frozen,
+    so ``Query`` serves a table with such columns."""
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("m", T.MapType(T.StringType(), T.LongType())),
+            T.StructField("tags", T.ArrayType(T.StringType())),
+            T.StructField("b", T.BinaryType()),
+            T.StructField("v", T.LongType()),
+        ]
+    )
+    t = tmp_db.create_table_typed("qmaps", schema, "k")
+    t.ingest_dataframe(
+        spark.createDataFrame(
+            [(k, {"a": k}, ["t"], bytearray([k]), k) for k in range(3)], schema
+        )
+    )
+    q = Query(t)
+    assert q.update(0, None, {"z": 0}, None, None, None)
+    assert q.update(1, None, None, ["x", "y"], None, 10)
+    assert q.insert(5, {"n": 5}, [], bytearray(b"\x05"), 50)
+    assert q.delete(2)
+    assert [r.columns for r in q.select(0, 0, [1] * 5)] == [
+        [0, {"z": 0}, ["t"], bytearray([0]), 0]
+    ]
+    assert [r.key for r in q.select({"z": 0}, 1, [1, 0, 0, 0, 0])] == [0]
+    assert q.select({"a": 0}, 1, [1, 0, 0, 0, 0]) == []
+    assert [r.key for r in q.select(["x", "y"], 2, [1, 0, 0, 0, 0])] == [1]
+    assert [r.key for r in q.select(bytearray([1]), 3, [1, 0, 0, 0, 0])] == [1]
+    t.flush()
+    want = [
+        (0, {"z": 0}, ["t"], bytearray([0]), 0),
+        (1, {"a": 1}, ["x", "y"], bytearray([1]), 10),
+        (5, {"n": 5}, [], bytearray([5]), 50),
+    ]
+    got = sorted((r["k"], r["m"], r["tags"], r["b"], r["v"]) for r in t.current_view().collect())
+    assert got == want
+    q2 = Query(_reopen(t, "qmaps"))
+    assert [r.key for r in q2.select({"n": 5}, 1, [1, 0, 0, 0, 0])] == [5]

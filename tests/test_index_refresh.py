@@ -135,3 +135,28 @@ def test_refresh_and_lookup_job_counts(spark, tmp_db):
         r["k"] for r in t.current_view().where(F.col("grp") == 5).collect()
     )
     assert n <= 4, n  # 7 for the shape before
+
+
+def test_lookup_after_vacuum_tail_finds_folded_update(spark, tmp_db):
+    """An update committed after the build, folded by ``compact()`` and
+    then dropped from the tail by ``vacuum_tail``: the delta catch-up
+    can no longer see it, so the index catches up before it answers,
+    and a refresh past the vacuum rebuilds instead of folding deltas
+    that are gone."""
+    t = _table(spark, tmp_db, "vac", n=100)
+    indexing.build_secondary_index(t, "grp", n_buckets=8)
+    t.bulk_update(spark.createDataFrame([(5, 77)], "k long, grp long"))
+    t.compact()
+    t.vacuum_tail()
+    assert [r["k"] for r in t.current_view().where(F.col("grp") == 77).collect()] == [5]
+    assert [r["k"] for r in indexing.indexed_lookup(t, "grp", 77).collect()] == [5]
+    assert [r["k"] for r in t.point_lookup("grp", 77).collect()] == [5]
+    assert 5 not in [r["k"] for r in indexing.indexed_lookup(t, "grp", 5).collect()]
+
+    t2 = _table(spark, tmp_db, "vac_refresh", n=100)
+    indexing.build_secondary_index(t2, "grp", n_buckets=8)
+    t2.bulk_update(spark.createDataFrame([(6, 78)], "k long, grp long"))
+    t2.compact()
+    t2.vacuum_tail()
+    assert indexing.maybe_refresh_secondary_index(t2, "grp") == "rebuild"
+    assert [r["k"] for r in indexing.indexed_lookup(t2, "grp", 78).collect()] == [6]
