@@ -152,11 +152,16 @@ def _latest_update(c: str, dt: T.DataType) -> str:
     return f"{agg} AS {_q('__u_' + c)}"
 
 
+def _latest_set(c: str, dt: T.DataType) -> str:
+    """SQL text of the value :func:`_latest_update` aggregated for
+    ``c``: NULL when no delta set it."""
+    return _q("__u_" + c) + (".`v`" if _orderable(dt) else "")
+
+
 def _latest_value(c: str, dt: T.DataType) -> str:
     """``c`` after the fold, as SQL text aliased ``c``: the value
     :func:`_latest_update` aggregated, else the base value."""
-    u = _q("__u_" + c) + (".`v`" if _orderable(dt) else "")
-    return f"coalesce({u}, {_q(c)}) AS {_q(c)}"
+    return f"coalesce({_latest_set(c, dt)}, {_q(c)}) AS {_q(c)}"
 
 
 # rid/seq encoding: high 15 bits = commit batch, low 48 bits =
@@ -283,6 +288,16 @@ def _parse_size_bytes(v) -> int:
 
 
 _log = logging.getLogger(__name__)
+
+
+def _min_file_bytes(spark: SparkSession) -> int:
+    """``spark.lineage_store.ingest.minFileBytes`` (default 8 MiB, at
+    least 1): the bytes a write puts in one file before it adds
+    another, for the ingest floor and the index bucket count."""
+    return max(1, _parse_size_bytes(
+        spark.conf.get("spark.lineage_store.ingest.minFileBytes", "8m")
+    ))
+
 
 _EXPLAIN_SIZE_UNITS = {
     "B": 1,
@@ -968,16 +983,34 @@ class LineageTable:
         return os.path.join(self.path, f"_staging_{uuid.uuid4().hex[:8]}")
 
     def _append_via_staging(
+        self, writes: list[tuple[DataFrame, str, list[str] | None, bool]]
+    ) -> None:
+        """Commit-protocol append of a bulk commit: Spark writes each
+        ``(frame, table dir, partition columns, rebalance)`` into one
+        staging dir (:meth:`_stage_write`), then
+        :meth:`_publish_staged` moves the finished part-files into the
+        table dirs and publishes them all in ONE file-log entry. A
+        failed write drops the staging dir and publishes nothing."""
+        staging = self._staging_dir()
+        try:
+            targets = [self._stage_write(staging, *w) for w in writes]
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        self._publish_staged(staging, targets)
+
+    def _stage_write(
         self,
+        staging: str,
         df: DataFrame,
         target_dir: str,
-        partition_by: list[str] | None = None,
-        rebalance: bool = False,
-    ) -> None:
-        """Commit-protocol append of a bulk commit: Spark writes the
-        frame to a staging dir, then :meth:`_publish_staged` moves the
-        finished part-files into the table dir. Two reasons this
-        exists instead of a plain ``mode('append')``:
+        partition_by: list[str] | None,
+        rebalance: bool,
+    ) -> tuple[str, str]:
+        """The write half of a bulk commit: Spark writes ``df`` under
+        ``staging/<target's log tag>``; returns the ``(staging subdir,
+        table dir)`` pair :meth:`_publish_staged` takes. Two reasons
+        commits stage instead of a plain ``mode('append')``:
 
         1. Deltas are often *derived from the table's own current
            view* (e.g. bulk_update values computed from existing
@@ -989,10 +1022,9 @@ class LineageTable:
            lakehouse format uses.
 
         CHECK constraints ride the write itself (``Observation``); a
-        violation drops the staging dir before anything publishes.
+        violation raises before anything publishes.
         :meth:`flush` writes its buffers from the driver instead and
         shares only the publish half."""
-        staging = self._staging_dir()
         aggs = self._check_aggs()
         obs = None
         if aggs:
@@ -1028,6 +1060,8 @@ class LineageTable:
             # deterministic column; AQE still sizes the output files
             # from the data exactly as before.
             df = df.hint("rebalance", F.col(RID))
+        sub = self._log_tag(target_dir)
+        out = os.path.join(staging, sub)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -1049,17 +1083,14 @@ class LineageTable:
                 "spark.sql.adaptive.coalescePartitions.parallelismFirst",
                 "false",
             ):
-                writer.parquet(staging)
+                writer.parquet(out)
         else:
-            writer.parquet(staging)
+            writer.parquet(out)
         if obs is not None:
             viol = {n: v for n, v in obs.get.items() if v}
             if viol:
-                # nothing has been published — drop the staging dir and
-                # the write never happened
-                shutil.rmtree(staging, ignore_errors=True)
                 raise CheckViolation(f"check constraint(s) violated: {viol}")
-        self._publish_staged(staging, [(".", target_dir)])
+        return sub, target_dir
 
     def _publish_staged(
         self,
@@ -1180,6 +1211,14 @@ class LineageTable:
         self.flush()  # keep rid ordering: buffered rows commit first
         self._validate_unique_inserts(df)
         batch = self._reserve_batches(1)
+        self._append_via_staging(
+            [(self._insert_frame(df, batch), self.base_dir, self.partition_by, False)]
+        )
+
+    def _insert_frame(self, df: DataFrame, batch: int) -> DataFrame:
+        """``df`` as base rows of commit ``batch``: rids assigned
+        executor-side, the write widened to the parallelism floor
+        below."""
         # Parallelism floor: a source that arrives as a handful of
         # splits (e.g. one small single-row-group parquet file) would
         # otherwise become a single-file base table, serializing every
@@ -1216,12 +1255,8 @@ class LineageTable:
             target = floor
             est = _estimate_plan_bytes(df)
             if est is not None:
-                min_file = _parse_size_bytes(
-                    df.sparkSession.conf.get(
-                        "spark.lineage_store.ingest.minFileBytes", "8m"
-                    )
-                )
-                target = max(1, min(floor, -(-est // max(1, min_file))))
+                min_file = _min_file_bytes(df.sparkSession)
+                target = max(1, min(floor, -(-est // min_file)))
             else:
                 _log.warning(
                     "ingest size estimate unavailable; falling back to "
@@ -1233,12 +1268,11 @@ class LineageTable:
                 cur = df.rdd.getNumPartitions()
                 if cur < target:
                     df = df.repartition(target)
-        out = df.select(
+        return df.select(
             (F.lit(batch << _BATCH_SHIFT) + F.monotonically_increasing_id()).alias(RID),
             F.current_timestamp().alias(TS),
             *[F.col(c).cast(self.schema[c].dataType).alias(c) for c in self.user_cols],
         )
-        self._append_via_staging(out, self.base_dir, partition_by=self.partition_by)
 
     def bulk_update(self, changes: DataFrame) -> None:
         """Bulk update by primary key: ``changes`` has the key column
@@ -1277,10 +1311,10 @@ class LineageTable:
           untouched.
         - ``when_not_matched_insert=False`` drops the insert branch.
 
-        Update and delete deltas publish in ONE tail append (a single
-        ``_seq`` batch — one commit); the insert branch is a second
-        commit, with ALL branches validated before either publishes
-        (the inherited CheckViolation contract).
+        Every branch stages its files first and all of them publish in
+        ONE file-log entry, so a merge is one commit: a failure before
+        the publish (a constraint violation, a failed write) leaves
+        the table and its log as they were.
 
         ``source`` must be key-unique: duplicate keys would emit
         several update deltas for one rid in a single batch, and which
@@ -1324,11 +1358,13 @@ class LineageTable:
             unmatched = src.join(cur.select(self.key), on=self.key, how="left_anti")
             if not when_not_matched_insert:
                 unmatched = unmatched.limit(0)
-            # deletes get their OWN seq batch: monotonic ids restart
-            # per frame, so sharing the update batch could collide.
-            # One rid never appears in both branches (disjoint WHERE),
-            # so cross-branch seq order is irrelevant.
-            batch = self._reserve_batches(1 if when_matched_delete is None else 2)
+            # deletes and inserts get their OWN batch: monotonic ids
+            # restart per frame, so sharing the update batch could
+            # collide. One rid never appears in both tail branches
+            # (disjoint WHERE), so cross-branch seq order is
+            # irrelevant. One reservation covers every branch.
+            n_tail = 1 if when_matched_delete is None else 2
+            batch = self._reserve_batches(n_tail + int(when_not_matched_insert))
             present = [c for c in source.columns if c in self.user_cols]
             # NULL predicate = false, the SQL MERGE convention
             del_cond = (
@@ -1360,9 +1396,7 @@ class LineageTable:
             # ALL branches validate before ANY publishes — an aborted
             # merge must leave the table untouched (the inherited
             # CheckViolation contract); the update deltas validate in
-            # _publish_tail, ahead of their append. Validating only
-            # inside ingest_dataframe would publish the update deltas
-            # first and then raise, leaving a half-applied merge.
+            # _publish_tail, ahead of their staged write.
             # Semantics note: inserts validate against the PRE-merge
             # snapshot, so an insert that is only legal because a
             # same-merge update vacates the value is (conservatively)
@@ -1396,7 +1430,12 @@ class LineageTable:
                         "between its update and insert branches"
                     )
             self._publish_tail(
-                tail_out, inserts=ins_proj if when_not_matched_insert else None
+                tail_out,
+                inserts=(
+                    self._insert_frame(ins_proj, batch + n_tail)
+                    if when_not_matched_insert
+                    else None
+                ),
             )
         finally:
             src.unpersist()
@@ -1540,15 +1579,17 @@ class LineageTable:
         self, out: DataFrame, validate: bool = True, inserts: DataFrame | None = None
     ) -> None:
         """The one publish step of every bulk tail commit: validate the
-        folded updates, append the deltas in one rebalanced staged
-        write, ingest ``inserts`` (merge_into's second commit, before
-        any compaction can swap the snapshot its plan reads), then
-        compact if the tail has grown past AUTO_COMPACT_TAIL_FILES."""
+        folded updates, stage the deltas in one rebalanced write and
+        ``inserts`` (merge_into's base rows, from
+        :meth:`_insert_frame`) beside them, publish both in ONE log
+        entry, then compact if the tail has grown past
+        AUTO_COMPACT_TAIL_FILES."""
         if validate:
             self._validate_folded_updates(out)
-        self._append_via_staging(out, self.tail_dir, rebalance=True)
+        writes = [(out, self.tail_dir, None, True)]
         if inserts is not None:
-            self.ingest_dataframe(inserts)
+            writes.append((inserts, self.base_dir, self.partition_by, False))
+        self._append_via_staging(writes)
         self._maybe_auto_compact()
 
     def delete_where(self, condition) -> None:
@@ -3857,7 +3898,7 @@ class LineageTable:
         ins = feed.where(F.col(OP) == "I").select(
             F.col(RID), F.col(TS), *[F.col(c) for c in self.user_cols]
         )
-        self._append_via_staging(ins, self.base_dir, partition_by=self.partition_by)
+        self._append_via_staging([(ins, self.base_dir, self.partition_by, False)])
         tail = feed.where(F.col(OP) != "I").select(
             F.col(RID), F.col(SEQ), F.col(OP), F.col(TS),
             *[F.col(c) for c in self.user_cols],
@@ -3879,7 +3920,7 @@ class LineageTable:
                     for c in self.user_cols
                 ],
             )
-        self._append_via_staging(tail, self.tail_dir, rebalance=True)
+        self._append_via_staging([(tail, self.tail_dir, None, True)])
 
     # ------------------------------------------------------------------
     # merge / compaction (reference T4, table.py:180-225)

@@ -2,6 +2,8 @@
 compaction answer-invariance (SURVEY §5.2 item 2), persistence
 round-trip, catalog ops."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -505,6 +507,43 @@ def test_merge_into_duplicate_source_keys_raise(tmp_db, spark, sf_dir):
     )
     with pytest.raises(ValueError, match="duplicate keys"):
         t.merge_into(dup)
+
+
+def test_merge_into_is_one_commit(tmp_db, spark, monkeypatch):
+    """A merge publishes its update deltas and its inserts in ONE
+    file-log entry: a failed insert write leaves the table and the log
+    head as they were, and a successful merge adds exactly one entry."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    schema = "k long, v long"
+    t = tmp_db.create_table_typed("merge_once", T.StructType.fromDDL(schema), "k")
+    t.ingest_dataframe(spark.createDataFrame([(i, i) for i in range(10)], schema))
+    src = spark.createDataFrame([(1, 100), (50, 500)], schema)
+
+    def state():
+        return sorted(tuple(r) for r in t.current_view().collect())
+
+    before, head = state(), t.filelog.replayable_range()[1]
+    write = DataFrameWriter.parquet
+
+    def fail_insert_write(self, path, *args, **kwargs):
+        if "_seq" not in self._df.columns:  # base rows: the insert branch
+            raise OSError("injected insert-write failure")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail_insert_write)
+    with pytest.raises(OSError, match="injected"):
+        t.merge_into(src)
+    monkeypatch.undo()
+    assert state() == before
+    assert t.filelog.replayable_range()[1] == head
+    assert not [d for d in os.listdir(t.path) if d.startswith("_staging_")]
+
+    t.merge_into(src)
+    assert t.filelog.replayable_range()[1] == head + 1
+    want = dict(before)
+    want.update({1: 100, 50: 500})
+    assert state() == sorted(want.items())
 
 
 @pytest.mark.parametrize("partition_by", [None, ["o_orderstatus"]], ids=["flat", "hive"])
@@ -1395,7 +1434,13 @@ def test_database_maintain_pass(spark, tmp_path, sf_dir):
     t.ingest_dataframe(src)
     indexing.build_secondary_index(t, "o_custkey", n_buckets=4)
     # drive the tail past the auto-compact threshold and stale the index
-    upd = src.select("o_orderkey", (F.col("o_totalprice") + 1).alias("o_totalprice"))
+    # (the update moves o_custkey: deltas that leave it unchanged do not
+    # stale an index on it)
+    upd = src.select(
+        "o_orderkey",
+        (F.col("o_totalprice") + 1).alias("o_totalprice"),
+        (F.col("o_custkey") + 1).alias("o_custkey"),
+    )
     t.bulk_update(upd)
     old_thresh = t.AUTO_COMPACT_TAIL_ROWS
     t.AUTO_COMPACT_TAIL_ROWS = 10
